@@ -42,21 +42,3 @@ def md5_long_sql(expr: str) -> str:
 
 def md5_long_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def minhash_perm(h31: Column, i: int) -> Column:
-    a, b = MINHASH_PERMS[i]
-    return (h31 * F.lit(a) + F.lit(b)) % F.lit(MERSENNE31)
-
-
-def minhash_perm_sql(expr: str, i: int) -> str:
-    a, b = MINHASH_PERMS[i]
-    return f"(({expr}) * {a} + {b}) % {MERSENNE31}"
-
-
-def bit(col: Column, i: int) -> Column:
-    return F.shiftright(col, i).bitwiseAND(F.lit(1))
-
-
-def bit_sql(expr: str, i: int) -> str:
-    return f"((({expr}) >> {i}) & 1)"

@@ -1089,22 +1089,18 @@ ORACLES["cdc_view_diff"] = VIEW_DIFF_ORACLE_SQL
 
 # ---------------------------------------------------------------------------
 # BOOTSTRAP HANDOFF under the hard gate (the lambda→kappa migration path):
-# the first half of the log is folded in BATCH and lands in the view via
-# the upsert sink; the stream then starts with its per-key state SEEDED
-# from those batch rows (transformWithStateInPandas initialState →
-# CdcFoldProcessor.handleInitialState) and folds only the second half.
+# the first half of the log is folded in BATCH into a seed directory, which
+# lands in the view via the upsert sink; the stream then starts with the
+# seed rows unioned into its input (state_fold.seed_stream), so each key's
+# state starts from its batch row, and folds only the second half.
 # The final maintained view must hash-match the one-shot batch oracle of
 # the WHOLE log — proving a deployment can backfill history with the
 # batch engine and hand off to the stream mid-log without replaying it
 # (the reference's S2 resume generalized to a cold-start bootstrap).
 # Cross-boundary guard correctness carries entirely in the seeded
 # lastProcessedEventAt; the seen-id dedup horizon restarts empty (ids are
-# unique in this log; for at-least-once sources the horizon covers
-# duplicate pairs that arrive entirely after the handoff — a duplicate
-# STRADDLING the boundary, original in the batch half and redelivery in
-# the stream half, is out of scope: its unguarded dataUpdate writes would
-# re-apply. Sources that can redeliver across the cutover should seed the
-# horizon from the tail of the batch half instead of empty).
+# unique in this log; see seed_stream for the duplicate that straddles
+# the handoff).
 # ---------------------------------------------------------------------------
 def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import (
@@ -1115,55 +1111,50 @@ def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.state_fold import (
         POISONED_COL,
         STREAM_VIEW_TYPE,
-        incremental_view_tws,
+        incremental_view,
+        seed_stream,
     )
     from .helpers import gate_workdir, write_single_file
 
     env = synthesize_envelope(spark, sf_dir).filter(F.col("seq") < _STREAM_LIMIT)
     cut = _STREAM_LIMIT // 2
     workdir = gate_workdir("cdc-bootstrap-gate-")
-    src, view_dir, ckpt = f"{workdir}/events", f"{workdir}/view", f"{workdir}/ckpt"
+    src, seed_dir = f"{workdir}/events", f"{workdir}/seed"
+    view_dir, ckpt = f"{workdir}/view", f"{workdir}/ckpt"
 
-    # phase 1: BATCH bootstrap of the first half → upsert sink (epoch 0)
-    poisoned_t = STREAM_VIEW_TYPE[POISONED_COL].dataType
-    bootstrap = fold_transactions_view(
+    # phase 1: BATCH bootstrap of the first half → seed dir → upsert sink
+    # (epoch 0)
+    fold_transactions_view(
         prepare_events(env.filter(F.col("seq") < cut))
-    )
+    ).write.parquet(seed_dir)
+    poisoned_t = STREAM_VIEW_TYPE[POISONED_COL].dataType
     sink = parquet_upsert_sink(view_dir, n_buckets=8)
     sink(
-        bootstrap.withColumn(POISONED_COL, F.lit(None).cast(poisoned_t)),
+        spark.read.parquet(seed_dir).withColumn(
+            POISONED_COL, F.lit(None).cast(poisoned_t)
+        ),
         epoch_id="bootstrap",
     )
 
-    # phase 2: the second half "arrives" as a stream; state seeded from the
-    # batch rows, fold continues where the bootstrap stopped
+    # phase 2: the second half "arrives" as a stream; the seed rows ride in
+    # with it, so the fold continues where the bootstrap stopped
     write_single_file(env.filter(F.col("seq") >= cut), f"{src}/tail.json")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    events = prepare_events(read_event_stream(spark, src))
+    out = incremental_view(
+        events.unionByName(seed_stream(spark, seed_dir), allowMissingColumns=True)
     )
-    try:
-        out = incremental_view_tws(
-            prepare_events(read_event_stream(spark, src)),
-            initial_state=bootstrap,
+    q = (
+        out.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(240):
+        q.stop()
+        raise TimeoutError(
+            "cdc_bootstrap_handoff: availableNow run did not finish in 240s"
         )
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "cdc_bootstrap_handoff: availableNow run did not finish in 240s"
-            )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     view = read_view(spark, view_dir).drop(POISONED_COL)
     return view.select(

@@ -99,21 +99,16 @@ def checkpoint_has_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
 def stream_transactions_view(
     raw_stream: DataFrame,
     config: CdcConfig = DEFAULT_CONFIG,
-    observe_metrics: bool = True,
 ) -> DataFrame:
     """Raw envelope stream → per-batch view-update stream (update mode).
 
-    With ``observe_metrics`` (default) the intake and fold row counters ride
-    on the query as observed metrics (ST8) — attach a
-    :class:`listeners.FoldMetricsListener` to consume them per micro-batch.
+    The intake and fold row counters ride on the query as observed metrics
+    (ST8) — attach a :class:`listeners.FoldMetricsListener` to consume them
+    per micro-batch.
     """
-    if observe_metrics:
-        from .listeners import observe_fold, observe_intake
+    from .listeners import observe_fold, observe_intake
 
-        raw_stream = observe_intake(raw_stream)
-        prepared = observe_fold(prepare_events(raw_stream, config))
-    else:
-        prepared = prepare_events(raw_stream, config)
+    prepared = observe_fold(prepare_events(observe_intake(raw_stream), config))
     return incremental_view(
         prepared,
         seen_ids_cap=config.seen_ids_cap,

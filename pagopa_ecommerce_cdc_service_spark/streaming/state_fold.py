@@ -25,6 +25,7 @@ from typing import Any
 
 import pandas as pd
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.python_fold import apply_event, new_view, view_as_row
@@ -58,6 +59,9 @@ STREAM_VIEW_TYPE = T.StructType(
     ]
 )
 
+# the seed column a bootstrap-handoff stream carries (see seed_stream)
+SEED_COL = "_seed"
+
 
 def _clean(v: Any) -> Any:
     """Arrow/pandas → plain-Python (NaN → None, numpy scalars → native)."""
@@ -77,28 +81,41 @@ def _clean(v: Any) -> Any:
     return v
 
 
-def _unpack(packed_json: str | None, key: str):
-    """Packed state string → (view, seen_list, seen). seen_list preserves
-    arrival order (oldest first) so the cap evicts the OLDEST ids, not
-    lexicographically-smallest ones."""
-    if packed_json is not None:
-        packed = json.loads(packed_json)
-        view, seen_list = packed["view"], list(packed["seen"])
-        return view, seen_list, set(seen_list)
-    return new_view(key), [], set()
+def _unpack(packed_json: str | None) -> dict[str, Any]:
+    """Packed state string → state dict: ``view``, ``seen`` and, for the
+    lineage/history folds, ``lin``/``hist``. ``seen`` keeps arrival order
+    (oldest first) so the cap evicts the OLDEST ids, not
+    lexicographically-smallest ones. A key with no state unpacks with no
+    ``view``: :func:`_fold_pdfs` starts it from the key's seed row, or fresh."""
+    return json.loads(packed_json) if packed_json is not None else {"seen": []}
+
+
+def _pack(st: dict[str, Any], cap: int) -> str:
+    return json.dumps({**st, "seen": st["seen"][-cap:]})
+
+
+def _seed_view(key: str, seed_json: str) -> dict[str, Any]:
+    """A :func:`seed_stream` row → the key's starting view: nulls dropped
+    (absent ≡ null on output), the guard carried by ``lastProcessedEventAt``."""
+    view = {k: v for k, v in json.loads(seed_json).items() if v is not None}
+    view["transactionId"] = key
+    view.setdefault("lastProcessedEventAt", None)
+    return view
 
 
 def _fold_pdfs(
-    view: dict[str, Any],
-    seen: set,
-    seen_list: list,
+    st: dict[str, Any],
+    key: str,
     pdf_iter: Iterable[pd.DataFrame],
     lineage: dict[str, dict[str, Any]] | None = None,
     history: list[dict[str, Any]] | None = None,
 ) -> list[dict[str, str]]:
-    """Apply one micro-batch's events (arrival order) to the view in place;
-    returns the poison-pill quarantine list. Shared by the
-    applyInPandasWithState fold and the transformWithStateInPandas twin.
+    """Apply one micro-batch's events (arrival order) to the unpacked state
+    ``st`` in place; returns the poison-pill quarantine list. Shared by the
+    view, lineage and history folds.
+
+    A :func:`seed_stream` row for the key is taken out before the event
+    loop; it starts the view only when the key has no state yet.
 
     ``lineage`` (optional): per-field writer-metadata map updated alongside
     the view (see :func:`operators.python_fold.apply_event`) — a poisoned
@@ -112,9 +129,24 @@ def _fold_pdfs(
     ordered). Only ``valid_from_ms`` is stored; ``valid_to``/``is_current``
     derive from the NEXT entry at read time."""
     events: list[dict[str, Any]] = []
+    seeds: list[str] = []
     for pdf in pdf_iter:
+        if SEED_COL in pdf.columns:
+            is_seed = pdf[SEED_COL].notna()
+            seeds.extend(pdf.loc[is_seed, SEED_COL])
+            # seed rows null the event columns, which widens the non-null
+            # longs to float64 on the way to pandas: narrow them back
+            pdf = (
+                pdf.loc[~is_seed]
+                .drop(columns=SEED_COL)
+                .astype({"seq": "int64", "_ts_millis": "int64"})
+            )
         events.extend(pdf.to_dict("records"))
     events.sort(key=lambda e: e["seq"])
+    if "view" not in st:
+        st["view"] = _seed_view(key, seeds[0]) if seeds else new_view(key)
+    view, seen_list = st["view"], st["seen"]
+    seen = set(seen_list)
 
     poisoned: list[dict[str, str]] = []
     for raw in events:
@@ -166,10 +198,6 @@ def _fold_pdfs(
     return poisoned
 
 
-def _pack(view: dict[str, Any], seen_list: list, cap: int = MAX_SEEN_IDS_PER_KEY) -> str:
-    return json.dumps({"view": view, "seen": seen_list[-cap:]})
-
-
 def fold_state_func(
     key: tuple,
     pdf_iter: Iterable[pd.DataFrame],
@@ -188,13 +216,46 @@ def fold_state_func(
         # must be drained — returning early kills the Python worker
         state.remove()
         return
-    view, seen_list, seen = _unpack(state.get[0] if state.exists else None, key[0])
-    poisoned = _fold_pdfs(view, seen, seen_list, pdf_iter)
-    state.update((_pack(view, seen_list, seen_ids_cap),))
+    st = _unpack(state.get[0] if state.exists else None)
+    poisoned = _fold_pdfs(st, key[0], pdf_iter)
+    state.update((_pack(st, seen_ids_cap),))
     if view_state_ttl_seconds is not None:
         # processing-time TTL, re-armed on every update (idle keys expire)
         state.setTimeoutDuration(int(view_state_ttl_seconds * 1000))
-    yield pd.DataFrame([{**view_as_row(view), POISONED_COL: poisoned or None}])
+    yield pd.DataFrame([{**view_as_row(st["view"]), POISONED_COL: poisoned or None}])
+
+
+def seed_stream(spark, seed_dir: str):
+    """Batch-folded view rows (parquet under ``seed_dir``) → a file stream of
+    (``transactionId``, ``_seed`` = the row as JSON). Union it with the
+    prepared event stream (``unionByName(..., allowMissingColumns=True)``)
+    before :func:`incremental_view`: a key with no state then starts its
+    view from its seed row instead of from nothing.
+
+    BOOTSTRAP HANDOFF (the lambda→kappa migration path: batch bootstrap up
+    to T, stream from T on one view). The per-key state IS the view dict,
+    so seeding is a row→dict conversion; the seen-id list starts empty —
+    the batch fold already deduped its half, and the guard semantics carry
+    entirely in ``lastProcessedEventAt``. Absent-vs-null collapse is safe:
+    the fold never reads a view FIELD to decide a merge (only
+    ``lastProcessedEventAt``), and output maps absent → null anyway.
+
+    ``seed_dir`` must be complete before the query starts. The seed source
+    has no rate limit, so every seed row then lands in the first
+    micro-batch, ahead of any stream event for its key; a seed row that
+    arrives after its key already has state is ignored.
+
+    SCOPE: a duplicate STRADDLING the handoff boundary (original delivered
+    to the batch half, its at-least-once redelivery to the stream half) is
+    out of scope for id-dedup here: guarded merges are still blocked by the
+    strict-newer ``lastProcessedEventAt`` check, but an unguarded
+    dataUpdate redelivery re-applies. Callers needing that coverage must
+    cut the handoff at a quiescent offset (the gate does) or seed seen-ids
+    from the batch tail."""
+    rows = spark.readStream.schema(TRANSACTIONS_VIEW_TYPE).parquet(seed_dir)
+    return rows.select(
+        "transactionId", F.to_json(F.struct(*rows.columns)).alias(SEED_COL)
+    )
 
 
 def incremental_view(
@@ -206,6 +267,8 @@ def incremental_view(
     """prepared (filtered, _ts_millis-attached) streaming DF → view updates.
 
     Emits, per micro-batch, one updated view row per touched transaction.
+    The stream may carry :func:`seed_stream` rows to start keys from a
+    batch-folded view.
     ``seen_ids_cap`` is the per-key dedup horizon (CdcConfig.seen_ids_cap);
     ``view_state_ttl_seconds`` arms per-key processing-time state eviction
     (None = never evict, reference parity — see CdcConfig).
@@ -279,21 +342,10 @@ def lineage_state_func(
     state,  # pyspark.sql.streaming.state.GroupState
     seen_ids_cap: int = MAX_SEEN_IDS_PER_KEY,
 ) -> Iterator[pd.DataFrame]:
-    packed = state.get[0] if state.exists else None
-    if packed is not None:
-        p = json.loads(packed)
-        view, seen_list, lin = p["view"], list(p["seen"]), p.get("lin", {})
-    else:
-        view, seen_list, lin = new_view(key[0]), [], {}
-    seen = set(seen_list)
-    _fold_pdfs(view, seen, seen_list, pdf_iter, lineage=lin)
-    state.update(
-        (
-            json.dumps(
-                {"view": view, "seen": seen_list[-seen_ids_cap:], "lin": lin}
-            ),
-        )
-    )
+    st = _unpack(state.get[0] if state.exists else None)
+    lin = st.setdefault("lin", {})
+    _fold_pdfs(st, key[0], pdf_iter, lineage=lin)
+    state.update((_pack(st, seen_ids_cap),))
     rows = [{"field": f, **m} for f, m in sorted(lin.items())]
     yield pd.DataFrame([{"transactionId": key[0], "lineage": rows or None}])
 
@@ -356,21 +408,10 @@ def history_state_func(
     state,  # pyspark.sql.streaming.state.GroupState
     seen_ids_cap: int = MAX_SEEN_IDS_PER_KEY,
 ) -> Iterator[pd.DataFrame]:
-    packed = state.get[0] if state.exists else None
-    if packed is not None:
-        p = json.loads(packed)
-        view, seen_list, hist = p["view"], list(p["seen"]), list(p.get("hist", []))
-    else:
-        view, seen_list, hist = new_view(key[0]), [], []
-    seen = set(seen_list)
-    _fold_pdfs(view, seen, seen_list, pdf_iter, history=hist)
-    state.update(
-        (
-            json.dumps(
-                {"view": view, "seen": seen_list[-seen_ids_cap:], "hist": hist}
-            ),
-        )
-    )
+    st = _unpack(state.get[0] if state.exists else None)
+    hist = st.setdefault("hist", [])
+    _fold_pdfs(st, key[0], pdf_iter, history=hist)
+    state.update((_pack(st, seen_ids_cap),))
     yield pd.DataFrame([{"transactionId": key[0], "history": hist or None}])
 
 
@@ -392,99 +433,3 @@ def incremental_status_history(
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (Spark 4 stateful API): same fold body,
-# state held in a named ValueState on the RocksDB state store — the layering
-# a long-lived 100 TB deployment wants (state size O(#live transactions),
-# incremental checkpointing, no JVM-heap state). The TWS worker↔JVM state
-# protocol is protobuf; when the google.protobuf runtime is absent (this
-# image ships pyspark without it), state_message_shim installs a
-# wire-compatible pure-Python twin of StateMessage_pb2. The install runs at
-# THIS module's import time, which covers both sides: the driver imports it
-# directly, and the worker imports it while unpickling CdcFoldProcessor —
-# before the lazy `import ...StateMessage_pb2` in the first state call.
-# ---------------------------------------------------------------------------
-from . import state_message_shim
-
-state_message_shim.install()
-
-try:  # pragma: no cover - import guard for older runtimes
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CdcFoldProcessor(StatefulProcessor):
-        """Per-transaction CDC fold as a StatefulProcessor."""
-
-        def __init__(self, seen_ids_cap: int = MAX_SEEN_IDS_PER_KEY):
-            self._seen_ids_cap = seen_ids_cap
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("packed", "packed STRING")
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-            packed = self._state.get()[0] if self._state.exists() else None
-            view, seen_list, seen = _unpack(packed, key[0])
-            poisoned = _fold_pdfs(view, seen, seen_list, rows)
-            self._state.update((_pack(view, seen_list, self._seen_ids_cap),))
-            yield pd.DataFrame([{**view_as_row(view), POISONED_COL: poisoned or None}])
-
-        def handleInitialState(self, key, initialState, timer_values) -> None:
-            # BOOTSTRAP HANDOFF: the initial state is a relational view row
-            # from the batch fold (the lambda→kappa migration path: batch
-            # bootstrap up to T, stream from T on one view). The per-key
-            # state IS the view dict, so seeding is a row→dict conversion;
-            # the seen-id list starts empty — the batch fold already deduped
-            # its half, and the guard semantics carry entirely in
-            # lastProcessedEventAt. SCOPE: a duplicate STRADDLING the
-            # handoff boundary (original delivered to the batch half, its
-            # at-least-once redelivery to the stream half) is out of scope
-            # for id-dedup here: guarded merges are still blocked by the
-            # strict-newer lastProcessedEventAt check, but an unguarded
-            # dataUpdate redelivery re-applies. Callers needing that
-            # coverage must cut the handoff at a quiescent offset (the gate
-            # does) or seed seen-ids from the batch tail. Absent-vs-null
-            # collapse is safe: the
-            # fold never reads a view FIELD to decide a merge (only
-            # lastProcessedEventAt), and output maps absent → null anyway.
-            row = {
-                k: _clean(v) for k, v in initialState.iloc[0].to_dict().items()
-            }
-            view = {k: v for k, v in row.items() if v is not None}
-            view["transactionId"] = key[0]
-            view.setdefault("lastProcessedEventAt", None)
-            self._state.update((_pack(view, []),))
-
-        def close(self) -> None:
-            pass
-
-    def incremental_view_tws(
-        prepared_stream,
-        seen_ids_cap: int = MAX_SEEN_IDS_PER_KEY,
-        initial_state=None,
-    ):
-        """transformWithStateInPandas flavor of :func:`incremental_view`.
-
-        Requires the RocksDB state store provider
-        (``spark.sql.streaming.stateStore.providerClass``).
-        ``initial_state``: optional DataFrame of batch-folded view rows
-        (one per transactionId) to seed the per-key state — the bootstrap
-        handoff (see :meth:`CdcFoldProcessor.handleInitialState`)."""
-        return prepared_stream.groupBy("transactionId").transformWithStateInPandas(
-            statefulProcessor=CdcFoldProcessor(seen_ids_cap),
-            outputStructType=STREAM_VIEW_TYPE,
-            outputMode="Update",
-            timeMode="None",
-            initialState=(
-                None
-                if initial_state is None
-                else initial_state.groupBy("transactionId")
-            ),
-        )
-
-except ImportError:  # pragma: no cover
-    CdcFoldProcessor = None  # type: ignore[assignment]
-    incremental_view_tws = None  # type: ignore[assignment]

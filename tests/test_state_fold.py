@@ -152,6 +152,31 @@ def test_null_event_id_skipped_not_fatal():
     assert seen == ["ev-1", "ev-3"]
 
 
+def test_packed_state_keys_stable_across_folds():
+    """The view, lineage and history folds share one state codec. Its packed
+    keys stay ``view``/``seen`` plus ``lin``/``hist``, so existing
+    checkpoints restore, and the seen cap applies to each fold alike."""
+    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
+        history_state_func,
+        lineage_state_func,
+    )
+
+    for func, extra in (
+        (fold_state_func, set()),
+        (lineage_state_func, {"lin"}),
+        (history_state_func, {"hist"}),
+    ):
+        state = FakeGroupState()
+        list(func(("tx-1",), [pd.DataFrame([_activated(1)])], state, seen_ids_cap=1))
+        assert set(json.loads(state.get[0])) == {"view", "seen"} | extra
+        batch2 = [_activated(1, email="dup"), _activated(2)]
+        list(func(("tx-1",), [pd.DataFrame(batch2)], state, seen_ids_cap=1))
+        packed = json.loads(state.get[0])
+        assert set(packed) == {"view", "seen"} | extra
+        assert packed["seen"] == ["ev-2"]
+        assert packed["view"]["email"] == "e2"
+
+
 class FakeTimeoutGroupState(FakeGroupState):
     def __init__(self, timed_out=False):
         super().__init__()

@@ -261,67 +261,6 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     assert merged.count() == batch1.count()
 
 
-def test_transform_with_state_twin_matches_batch_and_oracle(spark, tmp_path):
-    """The transformWithStateInPandas fold (Spark 4 stateful API, RocksDB
-    state store) must produce the same view as the batch fold and the
-    reference replay across multiple micro-batches."""
-    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import prepare_events
-    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
-        read_event_stream,
-    )
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        incremental_view_tws,
-    )
-
-    if incremental_view_tws is None:
-        pytest.skip("transformWithStateInPandas not available")
-    # no google.protobuf skip: state_message_shim provides a wire-compatible
-    # StateMessage_pb2 twin when the runtime is absent (installed at
-    # state_fold import)
-
-    events = generate_event_log(seed=21, n_transactions=30, p_duplicate=0.1)
-    log_dir = str(tmp_path / "log")
-    _write_chunks(events, log_dir, n_chunks=3)
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            incremental_view_tws(
-                prepare_events(read_event_stream(spark, log_dir, max_files_per_trigger=1))
-            )
-            .writeStream.format("memory")
-            .queryName("tws_demo")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-    # memory sink in update mode appends one row per key per micro-batch:
-    # keep the LAST row per transaction (max lastProcessedEventAt tie-broken
-    # by arrival — micro-batches arrive in order, so use the row order)
-    rows = spark.table("tws_demo").collect()
-    tws_views = {}
-    for r in rows:  # collect preserves batch order for the memory sink
-        tws_views[r["transactionId"]] = r.asDict(recursive=True)
-
-    assert_views_equal(tws_views, replay_reference(events))
-
-
 def test_kafka_reader_option_wiring(spark):
     """The Kafka source builder wires resume options correctly (no broker or
     connector jar in this image: assert the constructed plan's options, the
@@ -1310,12 +1249,9 @@ def test_bootstrap_initial_state_guards_stale_stream_events(spark, tmp_path):
         read_event_stream,
     )
     from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        POISONED_COL,
-        incremental_view_tws,
+        incremental_view,
+        seed_stream,
     )
-
-    if incremental_view_tws is None:
-        pytest.skip("transformWithStateInPandas not available")
 
     events = sorted(
         generate_event_log(seed=77, n_transactions=24), key=lambda e: e["seq"]
@@ -1340,43 +1276,86 @@ def test_bootstrap_initial_state_guards_stale_stream_events(spark, tmp_path):
             spark.createDataFrame(batch_events, schema=EVENT_ENVELOPE_TYPE)
         )
     )
+    seed_dir = str(tmp_path / "seed")
+    bootstrap.write.parquet(seed_dir)
     log_dir = str(tmp_path / "log")
     _write_chunks(stream_events, log_dir, n_chunks=2)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    stream = prepare_events(
+        read_event_stream(spark, log_dir, max_files_per_trigger=1)
+    ).unionByName(seed_stream(spark, seed_dir), allowMissingColumns=True)
+    q = (
+        incremental_view(stream)
+        .writeStream.format("memory")
+        .queryName("bootstrap_guard")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            incremental_view_tws(
-                prepare_events(
-                    read_event_stream(spark, log_dir, max_files_per_trigger=1)
-                ),
-                initial_state=bootstrap,
-            )
-            .writeStream.format("memory")
-            .queryName("bootstrap_guard")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    assert q.awaitTermination(180)
 
+    # the memory sink appends one row per key per micro-batch: keep the
+    # last. Every seeded key has a seed row, so the stream emits every key.
     streamed = {}
     for r in spark.table("bootstrap_guard").collect():
         streamed[r["transactionId"]] = r.asDict(recursive=True)
-    # keys never touched by the stream keep their bootstrap rows
-    final = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in bootstrap.withColumn(POISONED_COL, F.lit(None)).collect()
-    }
-    final.update(streamed)
-    assert_views_equal(final, replay_reference(events))
+    assert_views_equal(streamed, replay_reference(events))
+
+
+_HANDOFF_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+import __spark_entry__ as entry
+from pagopa_ecommerce_cdc_service_spark.session import build_session
+spark = build_session(master="local[2]", shuffle_partitions=2)
+entry.queries()["cdc_bootstrap_handoff"](spark, {sf_dir!r}).toPandas().to_pickle({out!r})
+spark.stop()
+"""
+
+
+def test_bootstrap_handoff_matches_oracle_from_foreign_cwd(tmp_path, sf_dir):
+    """The Python workers of the stateful fold must import the package from
+    any working directory: run cdc_bootstrap_handoff in a fresh process
+    whose cwd is not the repo root (the repo root reaches sys.path only
+    through the script) and compare it to its DuckDB oracle."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry_mod
+    from tools.compare import kind_diff, normalize
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    out = str(tmp_path / "handoff.pkl")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _HANDOFF_SCRIPT.format(repo=repo, sf_dir=sf_dir, out=out),
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    spark_pd = pd.read_pickle(out)
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+        oracle_pd = con.execute(
+            entry_mod.oracle_sql()["cdc_bootstrap_handoff"]
+        ).fetchdf()
+    finally:
+        con.close()
+    assert len(spark_pd) == len(oracle_pd) > 0
+    assert not kind_diff(spark_pd, oracle_pd)
+    assert normalize(spark_pd) == normalize(oracle_pd)

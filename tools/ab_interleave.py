@@ -59,6 +59,8 @@ def main() -> None:
         "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
     args = ap.parse_args()
+    if args.rounds < 1:
+        ap.error("--rounds must be >= 1: each side's first run is discarded")
     attrs = args.attrs.split(",")
 
     target = importlib.import_module(args.module)

@@ -45,6 +45,12 @@ SHIFTS = {
 COPY_ONLY = {"region.parquet", "nation.parquet"}
 
 
+def replica_eps(i: int) -> float:
+    """Embedding offset of replica ``i`` ≥ 1: +1, -1, +2, -2, ... milli-units,
+    so no two replicas (and no replica and the original) coincide."""
+    return (-1) ** (i + 1) * ((i + 1) // 2) / 1000.0
+
+
 def _replica(t: pa.Table, name: str, i: int) -> pa.Table:
     if i == 0:
         return t
@@ -56,8 +62,7 @@ def _replica(t: pa.Table, name: str, i: int) -> pa.Table:
         # deterministic small perturbation: replicas are near but not exact
         # duplicates (keeps near-dup pair counts ~linear in corpus size)
         emb = t.column("embedding").combine_chunks()
-        eps = ((i * 7) % 13 - 6) / 1000.0
-        flat = pc.add(emb.values, pa.scalar(eps, emb.values.type))
+        flat = pc.add(emb.values, pa.scalar(replica_eps(i), emb.values.type))
         arr = pa.ListArray.from_arrays(emb.offsets, flat)
         t = t.set_column(
             t.schema.get_field_index("embedding"),
