@@ -281,24 +281,29 @@ def test_capacity_train_matches_packing_over_pipeline_train(spark, sf_dir):
             "doc_id",
             F.size(tokens(F.col("rebuilt_text"))).cast("long").alias("n_tokens"),
         )
+        # one chunk rewrite (~40 s at sf0.001) feeds the total and every capacity
+        .persist()
     )
-    total_tokens = train.filter(F.col("n_tokens") > 0).agg(
-        F.sum("n_tokens")
-    ).collect()[0][0]
-    for cap in _PACK_CURVE_CAPS:
-        seg = pack_concat_offsets(
-            train, weight_col="n_tokens", capacity=cap, n_shards=_PACK_SHARDS
-        ).collect()
-        bins = {(r.shard, r.bin_idx) for r in seg}
-        per_doc = defaultdict(int)
-        for r in seg:
-            per_doc[r.doc_id] += 1
-        row = curve[cap]
-        assert row.n_segments == len(seg)
-        assert row.n_bins == len(bins)
-        assert row.n_split_docs == sum(1 for v in per_doc.values() if v > 1)
-        assert row.total_tokens == total_tokens
-        assert row.waste == len(bins) * cap - total_tokens
+    try:
+        total_tokens = train.filter(F.col("n_tokens") > 0).agg(
+            F.sum("n_tokens")
+        ).collect()[0][0]
+        for cap in _PACK_CURVE_CAPS:
+            seg = pack_concat_offsets(
+                train, weight_col="n_tokens", capacity=cap, n_shards=_PACK_SHARDS
+            ).collect()
+            bins = {(r.shard, r.bin_idx) for r in seg}
+            per_doc = defaultdict(int)
+            for r in seg:
+                per_doc[r.doc_id] += 1
+            row = curve[cap]
+            assert row.n_segments == len(seg)
+            assert row.n_bins == len(bins)
+            assert row.n_split_docs == sum(1 for v in per_doc.values() if v > 1)
+            assert row.total_tokens == total_tokens
+            assert row.waste == len(bins) * cap - total_tokens
+    finally:
+        train.unpersist()
 
 
 def test_pack_bins_exact_integer_div_above_2_53(spark):

@@ -177,6 +177,121 @@ def test_packed_state_keys_stable_across_folds():
         assert packed["view"]["email"] == "e2"
 
 
+def _seed(**fields):
+    """A seed_stream row as the union delivers it: event columns absent
+    (null), the batch-folded view row as JSON in ``_seed``."""
+    view = {"transactionId": "tx-1", "status": "CLOSED", "email": "batch"}
+    view.update(fields)
+    return {"transactionId": "tx-1", "_seed": json.dumps(view)}
+
+
+def _with_seed(events, seed):
+    rows = [dict(e, _seed=None) for e in events] + [seed]
+    return pd.DataFrame(rows, columns=[*_activated(0), "_seed"])
+
+
+def test_seed_row_starts_view_and_carries_the_guard():
+    """A key with no state starts from its seed row: the seeded
+    lastProcessedEventAt blocks a stale guarded write (status), while the
+    unguarded write (email) still applies — exactly as if the batch half
+    had been folded in this state. Nulls in the seed are dropped and the
+    seen-id list starts empty."""
+    state = FakeGroupState()
+    seed = _seed(lastProcessedEventAt=5_000, userId=None)
+    row = _run(state, _with_seed([_activated(1, ts=1_001)], seed))
+    assert row["status"] == "CLOSED"
+    assert row["lastProcessedEventAt"] == 5_000
+    assert row["email"] == "e1"
+    packed = json.loads(state.get[0])
+    assert "userId" not in packed["view"]
+    assert packed["seen"] == ["ev-1"]
+
+    # without the seed the same event starts a fresh view and applies
+    fresh = FakeGroupState()
+    assert _run(fresh, [_activated(1, ts=1_001)])["status"] == "ACTIVATED"
+
+
+def test_seed_row_ignored_when_key_has_state():
+    """A seed row that arrives after its key already has state must not
+    reset the view (seeds only start keys)."""
+    state = FakeGroupState()
+    _run(state, [_activated(1, ts=9_000)])
+    row = _run(state, _with_seed([], _seed(lastProcessedEventAt=5_000)))
+    assert row["status"] == "ACTIVATED"
+    assert row["email"] == "e1"
+    assert row["lastProcessedEventAt"] == 9_000
+
+
+def test_seed_only_batch_emits_the_seeded_view():
+    """A micro-batch holding only the seed row emits the seeded view as is
+    (absent fields → null), with an empty seen-id list in state."""
+    state = FakeGroupState()
+    row = _run(state, _with_seed([], _seed(lastProcessedEventAt=5_000)))
+    assert row["status"] == "CLOSED"
+    assert row["email"] == "batch"
+    assert row["lastProcessedEventAt"] == 5_000
+    assert row["clientId"] is None
+    assert row["_poisoned"] is None
+    assert json.loads(state.get[0])["seen"] == []
+
+
+def test_seed_rows_do_not_widen_event_longs():
+    """Seed rows null the event columns, which widens seq/_ts_millis to
+    float64 in pandas; the fold narrows them back, so the stored guard
+    stays an integer and events still apply in seq order."""
+    state = FakeGroupState()
+    events = [_activated(2, ts=7_002), _activated(1, ts=7_001)]
+    pdf = _with_seed(events, _seed(lastProcessedEventAt=5_000))
+    assert pdf["seq"].dtype == "float64"
+    row = _run(state, pdf)
+    assert row["email"] == "e2"  # seq 2 applied last
+    lpea = json.loads(state.get[0])["view"]["lastProcessedEventAt"]
+    assert lpea == 7_002 and isinstance(lpea, int)
+
+
+def test_seed_view_without_guard_starts_unguarded():
+    """A seed row with no lastProcessedEventAt (the batch half never applied
+    a guarded event) leaves the guard open, like a fresh view."""
+    state = FakeGroupState()
+    seed = {"transactionId": "tx-1", "_seed": json.dumps({"status": "CLOSED"})}
+    row = _run(state, _with_seed([_activated(1, ts=1_001)], seed))
+    assert row["status"] == "ACTIVATED"
+    assert row["transactionId"] == "tx-1"
+    assert row["lastProcessedEventAt"] == 1_001
+
+
+def test_lineage_and_history_restore_packed_state():
+    """A lineage/history checkpoint written before the folds shared one
+    codec (same packed keys) restores and keeps folding: the stored map /
+    interval list is extended, never restarted."""
+    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
+        history_state_func,
+        lineage_state_func,
+    )
+
+    view = {"transactionId": "tx-1", "status": "CLOSED", "lastProcessedEventAt": 5_000}
+    meta = {"event_id": "ev-0", "event_code": "X", "event_ts_millis": 5_000, "guarded": True}
+    lin_state = FakeGroupState()
+    lin_state.update(
+        (json.dumps({"view": view, "seen": ["ev-0"], "lin": {"status": meta}}),)
+    )
+    out = list(
+        lineage_state_func(("tx-1",), [pd.DataFrame([_activated(1, ts=6_000)])], lin_state)
+    )[0].iloc[0]
+    fields = {r["field"]: r["event_id"] for r in out["lineage"]}
+    assert fields["status"] == "ev-1" and fields["email"] == "ev-1"
+    assert json.loads(lin_state.get[0])["seen"] == ["ev-0", "ev-1"]
+
+    hist = [{"version": 1, "status": "CLOSED", "valid_from_ms": 5_000}]
+    hist_state = FakeGroupState()
+    hist_state.update((json.dumps({"view": view, "seen": ["ev-0"], "hist": hist}),))
+    out = list(
+        history_state_func(("tx-1",), [pd.DataFrame([_activated(1, ts=6_000)])], hist_state)
+    )[0].iloc[0]
+    assert [h["status"] for h in out["history"]] == ["CLOSED", "ACTIVATED"]
+    assert out["history"][1]["version"] == 2
+
+
 class FakeTimeoutGroupState(FakeGroupState):
     def __init__(self, timed_out=False):
         super().__init__()

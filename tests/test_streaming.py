@@ -1303,6 +1303,51 @@ def test_bootstrap_initial_state_guards_stale_stream_events(spark, tmp_path):
     assert_views_equal(streamed, replay_reference(events))
 
 
+def test_seed_only_stream_emits_the_batch_view(spark, tmp_path):
+    """Every column of a batch-folded view survives the seed path (parquet
+    → file stream → JSON → the fold's starting view → output row): a
+    handoff whose stream half is empty emits exactly the batch view."""
+    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import (
+        fold_transactions_view,
+        prepare_events,
+    )
+    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        read_event_stream,
+    )
+    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
+        incremental_view,
+        seed_stream,
+    )
+
+    events = generate_event_log(seed=91, n_transactions=16)
+    seed_dir = str(tmp_path / "seed")
+    fold_transactions_view(
+        prepare_events(spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE))
+    ).write.parquet(seed_dir)
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+
+    stream = prepare_events(read_event_stream(spark, str(log_dir))).unionByName(
+        seed_stream(spark, seed_dir), allowMissingColumns=True
+    )
+    q = (
+        incremental_view(stream)
+        .writeStream.format("memory")
+        .queryName("seed_only")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+
+    rows = spark.table("seed_only").collect()
+    streamed = {r["transactionId"]: r.asDict(recursive=True) for r in rows}
+    assert len(streamed) == len(rows)  # one micro-batch: one row per key
+    assert all(r["_poisoned"] is None for r in rows)
+    assert_views_equal(streamed, replay_reference(events))
+
+
 _HANDOFF_SCRIPT = """
 import sys
 sys.path.insert(0, {repo!r})
