@@ -35,6 +35,8 @@ from typing import Any, Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .schemas import TRANSACTIONS_VIEW_TYPE
+
 
 class WriteMode(Enum):
     SET_ALWAYS = "set_always"        # null value ≡ explicit $unset
@@ -287,24 +289,10 @@ KNOWN_EVENT_CODES: tuple[str, ...] = tuple(EVENT_SPECS)
 assert len(KNOWN_EVENT_CODES) == 19
 
 # view fields that carry per-event-type writes (order = view schema order)
-WRITTEN_VIEW_FIELDS: tuple[str, ...] = (
-    "email",
-    "paymentNotices",
-    "clientId",
-    "creationDate",
-    "userId",
-    "paymentGateway",
-    "paymentTypeCode",
-    "pspId",
-    "feeTotal",
-    "authorizationRequestId",
-    "authorizationCode",
-    "rrn",
-    "gatewayAuthorizationStatus",
-    "endToEndId",
-    "authorizationErrorCode",
-    "sendPaymentResultOutcome",
-    "closureErrorData",
+WRITTEN_VIEW_FIELDS: tuple[str, ...] = tuple(
+    f
+    for f in TRANSACTIONS_VIEW_TYPE.fieldNames()
+    if any(w.view_field == f for spec in EVENT_SPECS.values() for w in spec.writes)
 )
 
 

@@ -21,15 +21,21 @@ serializes each key's events and removes the write-write race):
 * ``status`` = status of the last-arriving *applied* status-bearing event;
   ``lastProcessedEventAt`` = max event-time over applied events.
 
-Scale design: ONE shuffle (hash by ``transactionId``). The id-dedup window
-partitions by (transactionId, id) and the guard window by transactionId —
-both are satisfied by the same hash partitioning on transactionId, and the
-final groupBy reuses it too, so Catalyst plans a single Exchange. Per-field
+One rule, one path: the id-dedup and the strict-newer guard live in
+``_applied``, which the view fold, :func:`status_history` and
+:func:`fold_field_lineage` all start from; one CASE expression per write
+(``_status_op``, ``_field_op``) yields either the written value or the
+writer's identity. The view's column order is ``TRANSACTIONS_VIEW_TYPE``'s.
+
+Scale design: ONE shuffle (hash by ``transactionId``), planned in
+``_applied`` and reused by every later per-key window and groupBy. Per-field
 folds are ``max(struct(seq, value))`` aggregates: partial-aggregable,
 whole-stage-codegen'd, no Python in the hot path.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,8 +48,9 @@ from ..event_mapping import (
     WriteMode,
     writers_of,
 )
-from ..schemas import TRANSACTION_VIEW_CLASS
+from ..schemas import TRANSACTION_VIEW_CLASS, TRANSACTIONS_VIEW_TYPE
 
+_KEY = "transactionId"
 _TS = "_ts_millis"
 _APPLIED = "_applied"
 
@@ -62,11 +69,7 @@ def parse_creation_date_millis(creation_date: Column) -> Column:
     return F.unix_millis(F.to_timestamp(trimmed))
 
 
-def prepare_events(
-    df: DataFrame,
-    config: CdcConfig = DEFAULT_CONFIG,
-    ts_millis: Column | None = None,
-) -> DataFrame:
+def prepare_events(df: DataFrame, config: CdcConfig = DEFAULT_CONFIG) -> DataFrame:
     """Filter/validate the raw envelope stream and attach ``_ts_millis``.
 
     Mirrors the reference's intake chain:
@@ -75,8 +78,6 @@ def prepare_events(
     - unknown eventCode rejected (CdcEventTypeException,
       TransactionViewUpsertService.kt:292-298)
     """
-    if ts_millis is None:
-        ts_millis = parse_creation_date_millis(F.col("creationDate"))
     out = df
     if "operationType" in df.columns:
         out = out.filter(F.col("operationType").isin(*config.operation_types))
@@ -88,25 +89,82 @@ def prepare_events(
     # events either — the lock is keyed on event id and the view on
     # transactionId (TransactionViewUpsertService.kt:138)
     out = out.filter(F.col("id").isNotNull() & F.col("transactionId").isNotNull())
+    ts_millis = parse_creation_date_millis(F.col("creationDate"))
     return out.withColumn(_TS, ts_millis).filter(F.col(_TS).isNotNull())
 
 
-def _status_op() -> Column:
-    """Chained CASE building the guarded status write-op struct."""
+def _applied(prepared: DataFrame, key: str) -> DataFrame:
+    """Id-dedup plus the strict-newer guard: keeps each event id's first
+    delivery and adds the boolean ``_applied`` column.
+
+    ONE explicit shuffle by the fold key. hash(key) satisfies the
+    clustered-distribution requirements of the (key, id) dedup window, the
+    key-only guard window AND every later per-key window or groupBy, so
+    Catalyst plans a single Exchange (left to EnsureRequirements it would
+    shuffle twice: once on (key, id), once on key).
+    """
+    df = prepared.repartition(key)
+
+    # exclusive-lock dedup by event id (CdcLockService.kt:40-50): first
+    # delivery wins.
+    w_dedup = Window.partitionBy(key, "id").orderBy("seq")
+    df = (
+        df.withColumn("_rn_id", F.row_number().over(w_dedup))
+        .filter(F.col("_rn_id") == 1)
+        .drop("_rn_id")
+    )
+
+    # guard: applies iff strictly newer than every earlier valid event
+    w_prefix = (
+        Window.partitionBy(key)
+        .orderBy("seq")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    prefix_max = F.max(F.col(_TS)).over(w_prefix)
+    return df.withColumn(_APPLIED, prefix_max.isNull() | (F.col(_TS) > prefix_max))
+
+
+def _value_branch(value: Column, guarded: bool) -> Column:
+    """Write-op struct carrying the written value, ordered by arrival."""
+    return F.struct(F.col("seq").alias("_s"), value.alias("v"))
+
+
+def _lineage_meta(value: Column, guarded: bool) -> Column:
+    """Writer-metadata struct for one potential write: ordered by arrival
+    ``seq`` (max = last-arriving effective write, exactly the fold's
+    winner), carrying the writer event's identity instead of ``value``."""
+    return F.struct(
+        F.col("seq").alias("_s"),
+        F.col("id").alias("event_id"),
+        F.col("eventCode").alias("event_code"),
+        F.col(_TS).alias("event_ts_millis"),
+        F.lit(guarded).alias("guarded"),
+    )
+
+
+_Branch = Callable[[Column, bool], Column]
+
+
+def _status_op(branch: _Branch = _value_branch) -> Column:
+    """Chained CASE building the guarded status write-op: applied
+    status-bearing events with a non-null target status."""
     op = None
     for code, spec in EVENT_SPECS.items():
         if spec.status_col is None:
             continue
         value = spec.status_col()
         cond = (F.col("eventCode") == code) & F.col(_APPLIED) & value.isNotNull()
-        branch = F.struct(F.col("seq").alias("_s"), value.alias("v"))
-        op = F.when(cond, branch) if op is None else op.when(cond, branch)
+        b = branch(value, True)
+        op = F.when(cond, b) if op is None else op.when(cond, b)
     assert op is not None
     return op
 
 
-def _field_op(view_field: str) -> Column:
-    """Chained CASE building the write-op struct for one view field."""
+def _field_op(view_field: str, branch: _Branch = _value_branch) -> Column:
+    """Chained CASE building the write-op for one view field. Its max over
+    a key is the last-arriving effective write: the written value with
+    :func:`_value_branch`, the writer's identity with
+    :func:`_lineage_meta`."""
     op = None
     for code, w in writers_of(view_field):
         cond = F.col("eventCode") == code
@@ -117,164 +175,30 @@ def _field_op(view_field: str) -> Column:
         value = w.value_col()
         if w.mode is WriteMode.SET_IF_NONNULL:
             cond = cond & value.isNotNull()
-        branch = F.struct(F.col("seq").alias("_s"), value.alias("v"))
-        op = F.when(cond, branch) if op is None else op.when(cond, branch)
+        b = branch(value, w.guarded)
+        op = F.when(cond, b) if op is None else op.when(cond, b)
     assert op is not None, f"no writers for {view_field}"
     return op
 
 
-def _salted_applied(df: DataFrame, key: str, s: int) -> DataFrame:
-    """Skew-resilient id-dedup + strict-newer guard (see
-    ``fold_transactions_view(salt_segments=...)``).
-
-    Segments are RANGES of the global arrival counter ``seq`` (not hashes —
-    the prefix-max scan needs ordered segments), sized from a broadcast
-    one-row (min, max) aggregate so no driver collect happens."""
-    # id-dedup as a (key, id) aggregation: first delivery (min seq) wins.
-    # min_by keeps the whole winning row; the exchange key carries id, so a
-    # hot transactionId spreads across its (distinct) event ids.
-    cols = df.columns
-    df = (
-        df.groupBy(key, "id")
-        .agg(F.min_by(F.struct(*[c for c in cols if c not in (key, "id")]), F.col("seq")).alias("_row"))
-        .select(key, "id", "_row.*")
-    )
-    # ordered segmentation of seq into s ranges
-    bounds = df.agg(
-        F.min("seq").alias("_lo"), F.max("seq").alias("_hi")
-    )
-    df = df.crossJoin(F.broadcast(bounds)).withColumn(
-        "_seg",
-        F.floor(
-            ((F.col("seq") - F.col("_lo")) * s) / (F.col("_hi") - F.col("_lo") + 1)
-        ).cast("int"),
-    )
-    # level 1: per-(key, seg) maxima — partial-aggregable, skew spreads
-    seg_max = df.groupBy(key, "_seg").agg(F.max(_TS).alias("_segmax"))
-    # level 2: prefix max over SEGMENTS (≤ s rows per key — tiny)
-    w_seg = (
-        Window.partitionBy(key)
-        .orderBy("_seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev = seg_max.withColumn("_prevmax", F.max("_segmax").over(w_seg)).select(
-        key, "_seg", "_prevmax"
-    )
-    # level 3: within-segment prefix max — window bounded by the segment
-    w_in = (
-        Window.partitionBy(key, "_seg")
-        .orderBy("seq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    df = df.join(prev, [key, "_seg"])
-    in_seg = F.max(F.col(_TS)).over(w_in)
-    prefix_max = F.greatest(F.col("_prevmax"), in_seg)  # greatest skips nulls
-    return df.withColumn(
-        _APPLIED, prefix_max.isNull() | (F.col(_TS) > prefix_max)
-    ).drop("_lo", "_hi", "_seg", "_prevmax")
-
-
-def fold_transactions_view(
-    prepared: DataFrame,
-    key: str = "transactionId",
-    seq: str = "seq",
-    salt_segments: int | None = None,
-) -> DataFrame:
+def fold_transactions_view(prepared: DataFrame) -> DataFrame:
     """Fold a prepared event log into the transactions view (batch mode).
 
     ``prepared`` must be the output of :func:`prepare_events` (or carry a
     ``_ts_millis`` column) and a monotone arrival-order ``seq`` column.
-
-    ``salt_segments``: skew fallback, COLD-STANDBY by default. The default
-    plan is ONE exchange on ``key``, whose two per-key windows serialize
-    every hot key's rows into one task — the round-7 sweep (SCALING.md)
-    measured it WINNING through 100% single-key hotness at sf1 (≈333k rows
-    per hot key), so the crossover variable is absolute per-key row count,
-    not skew ratio: activate salting only when one key's event set breaches
-    a single task's memory/time budget (order 10⁸⁺ rows per key at 100 TB).
-    With ``salt_segments=S`` the fold
-    switches to a skew-resilient formulation in which NO stage is keyed on
-    ``key`` alone at event grain: id-dedup becomes a (key, id) min-by
-    aggregation (ids are distinct within a hot key, so the exchange
-    spreads), and the prefix-max guard becomes a two-level segmented scan —
-    per-(key, seg) partial maxima, a key-grain prefix pass over the tiny
-    S-row-per-key segment table, then within-segment windows bounded by the
-    segment width. The final per-field folds are partial-aggregable maxes,
-    which absorb skew map-side in either formulation. Costs two extra
-    narrow exchanges; results are row-identical (property-tested).
     """
-    df = prepared
-    if seq != "seq":
-        df = df.withColumn("seq", F.col(seq))
+    df = _applied(prepared, _KEY)
 
-    if salt_segments is None:
-        # ONE explicit shuffle by the fold key. hash(transactionId) satisfies
-        # the clustered-distribution requirements of the (key, id) dedup
-        # window, the key-only guard window AND the final groupBy, so
-        # Catalyst plans a single Exchange (left to EnsureRequirements it
-        # would shuffle twice: once on (key, id), once on key).
-        df = df.repartition(key)
-
-        # exclusive-lock dedup by event id (CdcLockService.kt:40-50): first
-        # delivery wins.
-        w_dedup = Window.partitionBy(key, "id").orderBy("seq")
-        df = (
-            df.withColumn("_rn_id", F.row_number().over(w_dedup))
-            .filter(F.col("_rn_id") == 1)
-            .drop("_rn_id")
-        )
-
-        # guard: applies iff strictly newer than every earlier valid event
-        w_prefix = (
-            Window.partitionBy(key)
-            .orderBy("seq")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prefix_max = F.max(F.col(_TS)).over(w_prefix)
-        df = df.withColumn(
-            _APPLIED, prefix_max.isNull() | (F.col(_TS) > prefix_max)
-        )
-    else:
-        df = _salted_applied(df, key, max(2, int(salt_segments)))
-
-    aggs: list[Column] = []
-    aggs.append(F.max(_status_op())["v"].alias("status"))
-    aggs.append(
-        F.max(F.when(F.col(_APPLIED), F.col(_TS))).alias("lastProcessedEventAt")
+    view = df.groupBy(F.col(_KEY).alias("transactionId")).agg(
+        F.max(_status_op())["v"].alias("status"),
+        F.max(F.when(F.col(_APPLIED), F.col(_TS))).alias("lastProcessedEventAt"),
+        *(F.max(_field_op(f))["v"].alias(f) for f in WRITTEN_VIEW_FIELDS),
     )
-    for f_name in WRITTEN_VIEW_FIELDS:
-        aggs.append(F.max(_field_op(f_name))["v"].alias(f_name))
-
-    view = df.groupBy(F.col(key).alias("transactionId")).agg(*aggs)
 
     # upsert sets _class = Transaction::class.java.canonicalName on insert
     # (TransactionViewUpsertService.kt:71-75)
     view = view.withColumn("_class", F.lit(TRANSACTION_VIEW_CLASS))
-
-    ordered = [
-        "transactionId",
-        "email",
-        "paymentNotices",
-        "clientId",
-        "creationDate",
-        "userId",
-        "status",
-        "lastProcessedEventAt",
-        "paymentGateway",
-        "paymentTypeCode",
-        "pspId",
-        "feeTotal",
-        "authorizationRequestId",
-        "authorizationCode",
-        "rrn",
-        "gatewayAuthorizationStatus",
-        "endToEndId",
-        "authorizationErrorCode",
-        "sendPaymentResultOutcome",
-        "closureErrorData",
-        "_class",
-    ]
-    return view.select(*ordered)
+    return view.select(*TRANSACTIONS_VIEW_TYPE.fieldNames())
 
 
 def transactions_view_from_log(
@@ -289,28 +213,16 @@ def status_history(prepared: DataFrame, key: str = "transactionId") -> DataFrame
 
     ``prepared`` must be the output of :func:`prepare_events` with a
     monotone arrival-order ``seq`` column (the contract of
-    :func:`fold_transactions_view`, whose dedup + strict-newer guard this
-    reuses verbatim — TransactionViewUpsertService.kt:134-149 semantics).
+    :func:`fold_transactions_view`, whose dedup + strict-newer guard
+    :func:`_applied` this shares — TransactionViewUpsertService.kt:134-149
+    semantics).
     An interval opens when an APPLIED status-bearing event writes a status
     different from the view's previous one; applied timestamps are
     strictly increasing per key by the guard's definition, so intervals
-    are well-formed. One exchange on ``key`` serves the dedup window, the
-    guard window, and all three history windows.
+    are well-formed. The one exchange on ``key`` of :func:`_applied` also
+    serves all three history windows.
     """
-    df = prepared.repartition(key)
-    w_dedup = Window.partitionBy(key, "id").orderBy("seq")
-    df = (
-        df.withColumn("_rn_id", F.row_number().over(w_dedup))
-        .filter(F.col("_rn_id") == 1)
-        .drop("_rn_id")
-    )
-    w_prefix = (
-        Window.partitionBy(key)
-        .orderBy("seq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix_max = F.max(F.col(_TS)).over(w_prefix)
-    df = df.withColumn(_APPLIED, prefix_max.isNull() | (F.col(_TS) > prefix_max))
+    df = _applied(prepared, key)
     writes = df.withColumn("st", _status_op()["v"]).filter(F.col("st").isNotNull())
     w_seq = Window.partitionBy(key).orderBy("seq")
     changes = writes.withColumn("prev", F.lag("st").over(w_seq)).filter(
@@ -381,61 +293,7 @@ def status_at_events(prepared: DataFrame, key: str = "transactionId") -> DataFra
     )
 
 
-def _lineage_meta(guarded: bool) -> Column:
-    """Writer-metadata struct for one potential write: ordered by arrival
-    ``seq`` (max = last-arriving effective write, exactly the fold's
-    winner), carrying the writer event's identity."""
-    return F.struct(
-        F.col("seq").alias("_s"),
-        F.col("id").alias("event_id"),
-        F.col("eventCode").alias("event_code"),
-        F.col(_TS).alias("event_ts_millis"),
-        F.lit(guarded).alias("guarded"),
-    )
-
-
-def _field_lineage_op(view_field: str) -> Column:
-    """Chained CASE mirroring :func:`_field_op`, but the branch struct
-    carries the WRITER's identity instead of the written value — same
-    effectiveness conditions, so max() picks the event whose write
-    produced the field's final value."""
-    op = None
-    for code, w in writers_of(view_field):
-        cond = F.col("eventCode") == code
-        if w.cond_col is not None:
-            cond = cond & w.cond_col()
-        if w.guarded:
-            cond = cond & F.col(_APPLIED)
-        value = w.value_col()
-        if w.mode is WriteMode.SET_IF_NONNULL:
-            cond = cond & value.isNotNull()
-        branch = _lineage_meta(w.guarded)
-        op = F.when(cond, branch) if op is None else op.when(cond, branch)
-    assert op is not None, f"no writers for {view_field}"
-    return op
-
-
-def _status_lineage_op() -> Column:
-    """Writer metadata for the ``status`` field (mirrors
-    :func:`_status_op`: applied status-bearing events with a non-null
-    target status)."""
-    op = None
-    for code, spec in EVENT_SPECS.items():
-        if spec.status_col is None:
-            continue
-        value = spec.status_col()
-        cond = (F.col("eventCode") == code) & F.col(_APPLIED) & value.isNotNull()
-        branch = _lineage_meta(True)
-        op = F.when(cond, branch) if op is None else op.when(cond, branch)
-    assert op is not None
-    return op
-
-
-def fold_field_lineage(
-    prepared: DataFrame,
-    key: str = "transactionId",
-    seq: str = "seq",
-) -> DataFrame:
+def fold_field_lineage(prepared: DataFrame) -> DataFrame:
     """Per-field column lineage of the CDC fold: for every view field,
     WHICH event's write produced the field's final value.
 
@@ -455,48 +313,29 @@ def fold_field_lineage(
     (applied event-times are strictly increasing in arrival order, so
     last-arriving = max event-time — the fold's value).
 
-    Scale shape: identical to :func:`fold_transactions_view` — ONE
-    exchange on ``transactionId`` serves the id-dedup window, the guard
-    window and the final groupBy; per-field lineage folds are
-    partial-aggregable ``max(struct)``; the long format comes from a
-    post-aggregation explode over an O(#fields) array, no extra shuffle.
+    Scale shape: identical to :func:`fold_transactions_view` — the ONE
+    exchange of :func:`_applied` also serves the final groupBy; per-field
+    lineage folds are partial-aggregable ``max(struct)``; the long format
+    comes from a post-aggregation explode over an O(#fields) array, no
+    extra shuffle.
     """
-    df = prepared
-    if seq != "seq":
-        df = df.withColumn("seq", F.col(seq))
-    df = df.repartition(key)
+    df = _applied(prepared, _KEY)
 
-    w_dedup = Window.partitionBy(key, "id").orderBy("seq")
-    df = (
-        df.withColumn("_rn_id", F.row_number().over(w_dedup))
-        .filter(F.col("_rn_id") == 1)
-        .drop("_rn_id")
-    )
-    w_prefix = (
-        Window.partitionBy(key)
-        .orderBy("seq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix_max = F.max(F.col(_TS)).over(w_prefix)
-    df = df.withColumn(_APPLIED, prefix_max.isNull() | (F.col(_TS) > prefix_max))
-
-    aggs: list[Column] = [F.max(_status_lineage_op()).alias("_lin_status")]
-    aggs.append(
-        F.max(F.when(F.col(_APPLIED), _lineage_meta(True))).alias("_lin_lpea")
-    )
-    for f_name in WRITTEN_VIEW_FIELDS:
-        aggs.append(F.max(_field_lineage_op(f_name)).alias(f"_lin_{f_name}"))
-    g = df.groupBy(F.col(key).alias("transactionId")).agg(*aggs)
-
-    entries = [
-        F.struct(F.lit("status").alias("field"), F.col("_lin_status").alias("w")),
-        F.struct(
-            F.lit("lastProcessedEventAt").alias("field"),
-            F.col("_lin_lpea").alias("w"),
+    lpea_meta = _lineage_meta(F.col(_TS), True)
+    g = df.groupBy(F.col(_KEY).alias("transactionId")).agg(
+        F.max(_status_op(_lineage_meta)).alias("_lin_status"),
+        F.max(F.when(F.col(_APPLIED), lpea_meta)).alias("_lin_lpea"),
+        *(
+            F.max(_field_op(f, _lineage_meta)).alias(f"_lin_{f}")
+            for f in WRITTEN_VIEW_FIELDS
         ),
-    ] + [
-        F.struct(F.lit(f_name).alias("field"), F.col(f"_lin_{f_name}").alias("w"))
-        for f_name in WRITTEN_VIEW_FIELDS
+    )
+
+    lin_cols = {"status": "_lin_status", "lastProcessedEventAt": "_lin_lpea"}
+    lin_cols.update((f, f"_lin_{f}") for f in WRITTEN_VIEW_FIELDS)
+    entries = [
+        F.struct(F.lit(f).alias("field"), F.col(c).alias("w"))
+        for f, c in lin_cols.items()
     ]
     e = g.select("transactionId", F.explode(F.array(*entries)).alias("e"))
     return e.filter(F.col("e.w").isNotNull()).select(

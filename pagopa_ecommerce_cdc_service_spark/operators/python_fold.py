@@ -19,31 +19,7 @@ from typing import Any
 
 from ..config import CdcConfig, DEFAULT_CONFIG
 from ..event_mapping import EVENT_SPECS, WriteMode
-from ..schemas import TRANSACTION_VIEW_CLASS
-
-VIEW_FIELDS: tuple[str, ...] = (
-    "transactionId",
-    "email",
-    "paymentNotices",
-    "clientId",
-    "creationDate",
-    "userId",
-    "status",
-    "lastProcessedEventAt",
-    "paymentGateway",
-    "paymentTypeCode",
-    "pspId",
-    "feeTotal",
-    "authorizationRequestId",
-    "authorizationCode",
-    "rrn",
-    "gatewayAuthorizationStatus",
-    "endToEndId",
-    "authorizationErrorCode",
-    "sendPaymentResultOutcome",
-    "closureErrorData",
-    "_class",
-)
+from ..schemas import TRANSACTION_VIEW_CLASS, TRANSACTIONS_VIEW_TYPE
 
 
 def parse_millis(iso: str) -> int:
@@ -138,4 +114,4 @@ def apply_event(
 
 def view_as_row(view: dict[str, Any]) -> dict[str, Any]:
     """Project a view dict onto the full relational schema (absent ≡ null)."""
-    return {f: view.get(f) for f in VIEW_FIELDS}
+    return {f: view.get(f) for f in TRANSACTIONS_VIEW_TYPE.fieldNames()}

@@ -1227,7 +1227,7 @@ def e_semdedup_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id in exact; the explicit distinct pins the multiplicity).
     hit = approx.distinct().withColumn("_hit", F.lit(1))
     return (
-        exact.join(F.broadcast(hit), ["vec_a", "vec_b"], "left")
+        exact.join(hit, ["vec_a", "vec_b"], "left")
         .agg(
             F.count("*").alias("n_exact"),
             F.count("_hit").alias("n_found"),
@@ -3277,7 +3277,7 @@ def e_semdedup_pair_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     # the old inner-join-then-distinct census.
     hit = approx.distinct().withColumn("_hit", F.lit(1))
     return (
-        exact.join(F.broadcast(hit), ["vec_a", "vec_b"], "left")
+        exact.join(hit, ["vec_a", "vec_b"], "left")
         .agg(
             F.count("*").alias("n_exact"),
             F.count("_hit").alias("n_found"),

@@ -75,6 +75,14 @@ def build_session(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # Python workers the JVM launches outside the task path (the Python
+    # data-source planner) never see the addPyFile zip: put the package's
+    # parent on the PYTHONPATH the JVM inherits, so they import it from
+    # any cwd. No effect once a JVM is running.
+    pkg_parent = str(Path(__file__).resolve().parent.parent)
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if pkg_parent not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([pkg_parent, *paths])
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark

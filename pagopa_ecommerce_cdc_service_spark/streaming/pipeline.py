@@ -90,9 +90,7 @@ def checkpoint_has_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
     the fallback window on every restart and drop events that arrived while
     the query was down (the exact hazard the :func:`read_event_stream`
     contract forbids)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir, "offsets")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, path = _hadoop_fs(spark, f"{checkpoint_dir}/offsets")
     return bool(fs.exists(path))
 
 
@@ -327,9 +325,7 @@ def recover_view(
             fs.delete(path, False)
 
 
-def _write_generation(
-    merged: DataFrame, view_dir: str, epoch_id, n_buckets: int
-) -> dict:
+def _write_generation(merged: DataFrame, view_dir: str, epoch_id) -> dict:
     """Write one immutable generation dir holding the full new state of the
     touched buckets; returns {bucket: relative dir} for the manifest. The
     nonce keeps a replayed epoch from colliding with a generation the
@@ -450,7 +446,7 @@ def parquet_upsert_sink(
                 ).unionByName(updates)
             else:
                 merged = updates
-            new_entries = _write_generation(merged, view_dir, epoch_id, n_buckets)
+            new_entries = _write_generation(merged, view_dir, epoch_id)
             _publish(
                 spark, view_dir, seq, payload, new_entries, failpoint,
                 n_buckets, retain_commits, key_col,
@@ -509,10 +505,7 @@ def compact_view(
     # repartition BY the bucket column: each bucket lands in exactly one
     # task → exactly one output file per bucket directory
     new_entries = _write_generation(
-        rows.repartition(len(touched), VIEW_BUCKET_COL),
-        view_dir,
-        "compact",
-        n_buckets,
+        rows.repartition(len(touched), VIEW_BUCKET_COL), view_dir, "compact"
     )
     _publish(
         spark, view_dir, seq, payload, new_entries, failpoint, n_buckets,

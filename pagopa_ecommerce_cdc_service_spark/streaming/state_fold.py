@@ -258,6 +258,22 @@ def seed_stream(spark, seed_dir: str):
     )
 
 
+# every fold's state is one packed-JSON string (see _unpack/_pack)
+_STATE_TYPE = T.StructType([T.StructField("packed", T.StringType())])
+
+
+def _apply_with_state(prepared_stream, fold, output_type, timeout="NoTimeout"):
+    """Group by ``transactionId`` and run ``fold`` as the keyed stateful
+    operator, emitting only the keys a micro-batch touched."""
+    return prepared_stream.groupBy("transactionId").applyInPandasWithState(
+        fold,
+        outputStructType=output_type,
+        stateStructType=_STATE_TYPE,
+        outputMode="update",
+        timeoutConf=timeout,
+    )
+
+
 def incremental_view(
     prepared_stream,
     spark=None,
@@ -280,8 +296,6 @@ def incremental_view(
     correct shape for a TTL deployment — the query must wake to evict idle
     keys — and means drain-style harnesses (the driver gate, tests) should
     only arm the TTL when they poll-and-stop explicitly."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     def fold(key, pdf_iter, state):
         return fold_state_func(
             key,
@@ -291,15 +305,11 @@ def incremental_view(
             view_state_ttl_seconds=view_state_ttl_seconds,
         )
 
-    state_schema = StructType([StructField("packed", StringType())])
-    return prepared_stream.groupBy("transactionId").applyInPandasWithState(
+    return _apply_with_state(
+        prepared_stream,
         fold,
-        outputStructType=STREAM_VIEW_TYPE,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            "ProcessingTimeTimeout" if view_state_ttl_seconds is not None else "NoTimeout"
-        ),
+        STREAM_VIEW_TYPE,
+        "ProcessingTimeTimeout" if view_state_ttl_seconds is not None else "NoTimeout",
     )
 
 
@@ -359,19 +369,10 @@ def incremental_field_lineage(
     Same dedup + guard semantics as :func:`incremental_view` (the state IS
     the view plus the writer map); restart-safe through the checkpointed
     state store like the view fold."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     def fold(key, pdf_iter, state):
         return lineage_state_func(key, pdf_iter, state, seen_ids_cap=seen_ids_cap)
 
-    state_schema = StructType([StructField("packed", StringType())])
-    return prepared_stream.groupBy("transactionId").applyInPandasWithState(
-        fold,
-        outputStructType=STREAM_LINEAGE_TYPE,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
+    return _apply_with_state(prepared_stream, fold, STREAM_LINEAGE_TYPE)
 
 
 # ---------------------------------------------------------------------------
@@ -420,16 +421,7 @@ def incremental_status_history(
     seen_ids_cap: int = MAX_SEEN_IDS_PER_KEY,
 ):
     """prepared streaming DF → per-key SCD2 interval-list updates."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     def fold(key, pdf_iter, state):
         return history_state_func(key, pdf_iter, state, seen_ids_cap=seen_ids_cap)
 
-    state_schema = StructType([StructField("packed", StringType())])
-    return prepared_stream.groupBy("transactionId").applyInPandasWithState(
-        fold,
-        outputStructType=STREAM_HISTORY_TYPE,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
+    return _apply_with_state(prepared_stream, fold, STREAM_HISTORY_TYPE)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+import subprocess
 import sys
 from pathlib import Path
 
@@ -49,3 +51,57 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+import __spark_entry__ as entry
+from pagopa_ecommerce_cdc_service_spark.session import build_session
+spark = build_session(master="local[2]", shuffle_partitions=2)
+entry.queries()[{name!r}](spark, {sf_dir!r}).toPandas().to_pickle({out!r})
+spark.stop()
+"""
+
+
+@pytest.fixture()
+def query_from_foreign_cwd(tmp_path, sf_dir):
+    """Run a registered query in a fresh process whose cwd is not the repo
+    root (the repo root reaches sys.path only through the script, never
+    through PYTHONPATH) and assert it matches its DuckDB oracle."""
+
+    def run(name: str) -> None:
+        import duckdb
+        import pandas as pd
+
+        import __spark_entry__ as entry_mod
+        from tools.compare import kind_diff, normalize
+
+        out = str(tmp_path / f"{name}.pkl")
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+        script = _FOREIGN_CWD_SCRIPT.format(
+            repo=str(REPO_ROOT), name=name, sf_dir=sf_dir, out=out
+        )
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        spark_pd = pd.read_pickle(out)
+
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+            oracle_pd = con.execute(entry_mod.oracle_sql()[name]).fetchdf()
+        finally:
+            con.close()
+        assert len(spark_pd) == len(oracle_pd) > 0
+        assert not kind_diff(spark_pd, oracle_pd)
+        assert normalize(spark_pd) == normalize(oracle_pd)
+
+    return run

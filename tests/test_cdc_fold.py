@@ -67,12 +67,31 @@ def test_fold_matches_replay(spark, seed):
     assert_views_equal(spark_views(spark, events), replay_reference(events))
 
 
-def test_fold_matches_replay_adversarial(spark):
+def _mixed_adversarial_log():
     # high rates of every skip/dup/tie axis at once
-    events = generate_event_log(
+    return generate_event_log(
         seed=99, n_transactions=40, p_duplicate=0.3, p_equal_ts=0.4,
         p_ttl=0.15, p_bad_optype=0.15, p_unknown_code=0.15,
     )
+
+
+def _hot_key_log():
+    # one key holds 2/3 of all events (ids kept unique): the skew shape the
+    # single exchange serializes into one task
+    events = generate_event_log(seed=23, n_transactions=30)
+    hot = sorted({e["transactionId"] for e in events})[0]
+    for i, e in enumerate(events):
+        if i % 3 != 0:
+            e["transactionId"] = hot
+            e["id"] = f"hot-{i}-{e['id']}"
+    return events
+
+
+@pytest.mark.parametrize(
+    "make_log", [_mixed_adversarial_log, _hot_key_log], ids=["mixed", "hot_key"]
+)
+def test_fold_matches_replay_adversarial(spark, make_log):
+    events = make_log()
     assert_views_equal(spark_views(spark, events), replay_reference(events))
 
 
@@ -377,69 +396,6 @@ def test_view_absent_non_activated_first(spark):
     assert v["status"] == "CLOSURE_REQUESTED"
     assert v["email"] is None
     assert v["_class"] == TRANSACTION_VIEW_CLASS
-
-
-@pytest.mark.parametrize("segments", [2, 3, 7, 64])
-def test_salted_fold_row_identical(spark, segments):
-    """The skew-fallback formulation (salt_segments=S) must be
-    row-identical to the single-exchange fold for every S, including S
-    larger than any key's event count and S that splits keys mid-stream.
-    Uses an adversarial log (duplicate ids, out-of-order timestamps) so
-    both the dedup-by-aggregation and the segmented prefix-max guard are
-    load-bearing."""
-    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import (
-        fold_transactions_view,
-        prepare_events,
-    )
-    from pagopa_ecommerce_cdc_service_spark.sources import generate_event_log
-
-    events = generate_event_log(
-        seed=17, n_transactions=40, p_duplicate=0.2, p_equal_ts=0.15
-    )
-    prepared = prepare_events(events_to_df(spark, events))
-    base = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in fold_transactions_view(prepared).collect()
-    }
-    salted = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in fold_transactions_view(
-            prepared, salt_segments=segments
-        ).collect()
-    }
-    assert set(base) == set(salted)
-    for k in base:
-        assert normalize(base[k]) == normalize(salted[k]), k
-
-
-def test_salted_fold_hot_key(spark):
-    """A single key holding most of the log (the post-threshold skew shape)
-    still folds identically under salting."""
-    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import (
-        fold_transactions_view,
-        prepare_events,
-    )
-    from pagopa_ecommerce_cdc_service_spark.sources import generate_event_log
-
-    events = generate_event_log(seed=23, n_transactions=30)
-    hot = sorted({e["transactionId"] for e in events})[0]
-    # route 2/3 of all events onto the hot key, keeping ids unique
-    for i, e in enumerate(events):
-        if i % 3 != 0:
-            e["transactionId"] = hot
-            e["id"] = f"hot-{i}-{e['id']}"
-    prepared = prepare_events(events_to_df(spark, events))
-    base = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in fold_transactions_view(prepared).collect()
-    }
-    salted = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in fold_transactions_view(prepared, salt_segments=16).collect()
-    }
-    assert set(base) == set(salted)
-    for k in base:
-        assert normalize(base[k]) == normalize(salted[k]), k
 
 
 # ---------------------------------------------------------------------------

@@ -144,3 +144,10 @@ def test_type_surprises_quarantine_not_crash(registered, tmp_path):
     assert len(rows) == 3
     corrupt = {r["_corrupt"] for r in rows if r["_corrupt"] is not None}
     assert corrupt == {bad_seq, bad_seq2}
+
+
+def test_envelope_feed_matches_oracle_from_foreign_cwd(query_from_foreign_cwd):
+    """The Python data-source planner runs in its own Python worker, which
+    never sees the addPyFile zip: it must still import the package when the
+    process cwd is not the repo root."""
+    query_from_foreign_cwd("cdc_pyds_envelope_feed")

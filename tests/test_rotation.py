@@ -19,7 +19,8 @@ plans of the ``_R14_OPT_REVERIFIED`` / ``_R15_OPT_REVERIFIED`` tail sets
 oracle-SQL equality with the certified snapshot (the results contract) and
 pins the OPTIMIZED plan against further drift via FINGERPRINTS_r14.json /
 FINGERPRINTS_r15.json (r15 takes precedence for queries changed in both
-rounds); the parity suite re-executes each against its oracle every round.
+rounds; ``R15_REPINNED`` overrides r15 for the plans changed on purpose
+since); the parity suite re-executes each against its oracle every round.
 
 Queries whose latest certifying row is CORRECTNESS_r14 (the four statics
 rotated out in round 15) are pinned against FINGERPRINTS_r14 — the
@@ -46,6 +47,14 @@ SNAPSHOT = json.loads((REPO / "FINGERPRINTS_r13.json").read_text())
 R14_SNAPSHOT = json.loads((REPO / "FINGERPRINTS_r14.json").read_text())
 # round-15 optimization snapshot: same discipline for _R15_OPT_REVERIFIED.
 R15_SNAPSHOT = json.loads((REPO / "FINGERPRINTS_r15.json").read_text())
+# _R15_OPT_REVERIFIED plans changed on purpose after the r15 snapshot, with
+# the same two checks (oracle SQL byte-identical, parity re-executed): the
+# pair-recall audits no longer force a broadcast of the approx pair set,
+# whose size grows with the corpus. Pinned here against further drift.
+R15_REPINNED = {
+    "e_semdedup_pair_recall": "f2b364786e7e758b",
+    "e_semdedup_pair_recall_sampled": "b98d677bb9a8e57a",
+}
 # statics certified by the round-14 gate: their pin is the r14 snapshot
 _R14_CERTIFIED_STATICS = frozenset({
     "e_ivf_split_rebalance", "t_lang_temperature_mix",
@@ -173,8 +182,9 @@ def test_tail_queries_unchanged_since_certification(spark, tmp_path_factory):
             # equality for a changed plan). The new plan is pinned by
             # FINGERPRINTS_r15.json against FURTHER drift.
             r15 = R15_SNAPSHOT.get(name)
+            pin = R15_REPINNED.get(name, r15 and r15["plan_sha"])
             plan_sha = fingerprint(name, "/root/testdata/sf0.001")
-            if r15 is None or plan_sha != r15["plan_sha"]:
+            if pin is None or plan_sha != pin:
                 drifted.append((name, "drifted past the r15 optimized state"))
             continue
         if name in entry_mod._R14_OPT_REVERIFIED:

@@ -1348,59 +1348,7 @@ def test_seed_only_stream_emits_the_batch_view(spark, tmp_path):
     assert_views_equal(streamed, replay_reference(events))
 
 
-_HANDOFF_SCRIPT = """
-import sys
-sys.path.insert(0, {repo!r})
-import __spark_entry__ as entry
-from pagopa_ecommerce_cdc_service_spark.session import build_session
-spark = build_session(master="local[2]", shuffle_partitions=2)
-entry.queries()["cdc_bootstrap_handoff"](spark, {sf_dir!r}).toPandas().to_pickle({out!r})
-spark.stop()
-"""
-
-
-def test_bootstrap_handoff_matches_oracle_from_foreign_cwd(tmp_path, sf_dir):
+def test_bootstrap_handoff_matches_oracle_from_foreign_cwd(query_from_foreign_cwd):
     """The Python workers of the stateful fold must import the package from
-    any working directory: run cdc_bootstrap_handoff in a fresh process
-    whose cwd is not the repo root (the repo root reaches sys.path only
-    through the script) and compare it to its DuckDB oracle."""
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    import duckdb
-    import pandas as pd
-
-    import __spark_entry__ as entry_mod
-    from tools.compare import kind_diff, normalize
-
-    repo = str(Path(__file__).resolve().parent.parent)
-    out = str(tmp_path / "handoff.pkl")
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            _HANDOFF_SCRIPT.format(repo=repo, sf_dir=sf_dir, out=out),
-        ],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    spark_pd = pd.read_pickle(out)
-
-    con = duckdb.connect()
-    try:
-        con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
-        oracle_pd = con.execute(
-            entry_mod.oracle_sql()["cdc_bootstrap_handoff"]
-        ).fetchdf()
-    finally:
-        con.close()
-    assert len(spark_pd) == len(oracle_pd) > 0
-    assert not kind_diff(spark_pd, oracle_pd)
-    assert normalize(spark_pd) == normalize(oracle_pd)
+    any working directory."""
+    query_from_foreign_cwd("cdc_bootstrap_handoff")

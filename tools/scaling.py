@@ -310,12 +310,11 @@ def build_skew_variant(spark, src: str, dest: str, hot_replicas: int) -> str:
 def skew_sweep(
     spark, src: str, dest: str, runs: int, hotness=(1, 3, 5, 7)
 ) -> None:
-    """Measure where the single-exchange CDC fold's hot-key straggler bites
-    (the salting threshold), and what the salted fallback costs/buys.
+    """Measure where the single-exchange CDC fold's hot-key straggler bites.
 
     For each hotness ratio (hot_replicas × 10% of the decade's rows on 3
     transactionIds — 10 routes EVERY row to the 3 hot keys),
-    time the default fold and the salted fold over the same skewed decade.
+    time the fold over the skewed decade against the uniform one.
     The envelope synthesis (a uniform map-side cost identical across
     variants) is MATERIALIZED to parquet once per variant so the timing
     isolates the fold's exchange + windows + aggregation; a full untimed
@@ -337,40 +336,30 @@ def skew_sweep(
             ).parquet(out)
         return out
 
-    def time_fold(pdir: str, salt, n_runs=None):
+    def time_fold(pdir: str, n_runs=None):
         best = None
         for _ in range(n_runs or runs):
             t0 = time.time()
-            fold_transactions_view(
-                spark.read.parquet(pdir), salt_segments=salt
-            ).write.format("noop").mode("overwrite").save()
+            fold_transactions_view(spark.read.parquet(pdir)).write.format(
+                "noop"
+            ).mode("overwrite").save()
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         return round(best, 3)
 
     uniform = prepared_dir(build_skew_variant(spark, src, dest, 0))
-    time_fold(uniform, None, n_runs=1)  # untimed JIT warm-up
-    time_fold(uniform, 32, n_runs=1)    # warm the salted plan shapes too
-    base = time_fold(uniform, None)
-    base_salted = time_fold(uniform, 32)
-    print(
-        json.dumps(
-            {"skew_sweep": "uniform", "sec": base, "sec_salted": base_salted}
-        ),
-        flush=True,
-    )
+    time_fold(uniform, n_runs=1)  # untimed JIT warm-up
+    base = time_fold(uniform)
+    print(json.dumps({"skew_sweep": "uniform", "sec": base}), flush=True)
     for hot in hotness:
         pdir = prepared_dir(build_skew_variant(spark, src, dest, hot))
-        plain = time_fold(pdir, None)
-        salted = time_fold(pdir, 32)
+        sec = time_fold(pdir)
         print(
             json.dumps(
                 {
                     "skew_sweep": f"{hot * 10}%-hot",
-                    "sec_unsalted": plain,
-                    "sec_salted": salted,
-                    "vs_uniform_unsalted": round(plain / base, 2),
-                    "vs_uniform_salted": round(salted / base, 2),
+                    "sec": sec,
+                    "vs_uniform": round(sec / base, 2),
                 }
             ),
             flush=True,
@@ -391,7 +380,7 @@ def main() -> None:
     ap.add_argument(
         "--skew-sweep",
         action="store_true",
-        help="only run the fold salting-threshold sweep",
+        help="only run the fold hot-key sweep",
     )
     ap.add_argument(
         "--queries",
