@@ -438,7 +438,9 @@ def parquet_upsert_sink(
                 else []
             )
             if old_dirs:
-                old = spark.read.parquet(*old_dirs).withColumn(
+                # the old buckets were written from this same schema: pass
+                # it, sparing the per-batch footer-inference job
+                old = spark.read.schema(batch_df.schema).parquet(*old_dirs).withColumn(
                     VIEW_BUCKET_COL, view_bucket(key_col, n_buckets)
                 )
                 merged = old.join(

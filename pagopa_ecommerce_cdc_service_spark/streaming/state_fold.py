@@ -14,12 +14,21 @@ O(#live transactions), not O(#events): the seen-set is capped per key.
 Events inside a micro-batch are applied in arrival (``seq``) order, so a
 batch replay of the same log through :func:`operators.cdc_fold` yields a
 byte-identical view (differential-tested in tests/test_streaming.py).
+
+WIRE FORMAT. The Python worker sees one JSON string per event and returns
+one JSON string per key (see :func:`_apply_with_state`). Before grouping,
+each prepared row is packed to (``transactionId``, ``_event`` = the row's
+columns as one JSON object, nulls kept; ``_seed``); after the fold, each
+key's ``_out`` JSON is parsed back into the output schema on the JVM side.
+Per-key pandas work (Arrow→pandas of the nested ``data`` struct,
+``to_dict`` plus a NaN/numpy cleaning pass, a one-row output frame of
+every view column) used to cost several times the merge rule itself; JSON
+hands the fold native ints, ``None``, lists and dicts directly.
 """
 
 from __future__ import annotations
 
 import json
-import math
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -61,24 +70,10 @@ STREAM_VIEW_TYPE = T.StructType(
 
 # the seed column a bootstrap-handoff stream carries (see seed_stream)
 SEED_COL = "_seed"
-
-
-def _clean(v: Any) -> Any:
-    """Arrow/pandas → plain-Python (NaN → None, numpy scalars → native)."""
-    if v is None:
-        return None
-    if isinstance(v, float) and math.isnan(v):
-        return None
-    if isinstance(v, dict):
-        return {k: _clean(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return [_clean(x) for x in v]
-    if hasattr(v, "item") and not isinstance(v, (str, bytes)):
-        try:
-            return v.item()
-        except (ValueError, AttributeError):
-            return v
-    return v
+# the fold's wire columns (see _apply_with_state): one event as JSON in,
+# one output row as JSON out
+EVENT_COL = "_event"
+OUT_COL = "_out"
 
 
 def _unpack(packed_json: str | None) -> dict[str, Any]:
@@ -86,8 +81,15 @@ def _unpack(packed_json: str | None) -> dict[str, Any]:
     lineage/history folds, ``lin``/``hist``. ``seen`` keeps arrival order
     (oldest first) so the cap evicts the OLDEST ids, not
     lexicographically-smallest ones. A key with no state unpacks with no
-    ``view``: :func:`_fold_pdfs` starts it from the key's seed row, or fresh."""
-    return json.loads(packed_json) if packed_json is not None else {"seen": []}
+    ``view``: :func:`_fold_pdfs` starts it from the key's seed row, or fresh.
+
+    Every number the state holds is a long. State written while the fold
+    read pandas frames can hold integral floats instead (pandas widened a
+    nested long with a null sibling to float64), which the output's JSON
+    parse would reject, so floats read back as ints."""
+    if packed_json is None:
+        return {"seen": []}
+    return json.loads(packed_json, parse_float=lambda s: int(float(s)))
 
 
 def _pack(st: dict[str, Any], cap: int) -> str:
@@ -110,7 +112,8 @@ def _fold_pdfs(
     lineage: dict[str, dict[str, Any]] | None = None,
     history: list[dict[str, Any]] | None = None,
 ) -> list[dict[str, str]]:
-    """Apply one micro-batch's events (arrival order) to the unpacked state
+    """Apply one micro-batch's events (arrival order), read from the
+    :func:`_pack_events` frames of ``pdf_iter``, to the unpacked state
     ``st`` in place; returns the poison-pill quarantine list. Shared by the
     view, lineage and history folds.
 
@@ -131,17 +134,11 @@ def _fold_pdfs(
     events: list[dict[str, Any]] = []
     seeds: list[str] = []
     for pdf in pdf_iter:
-        if SEED_COL in pdf.columns:
-            is_seed = pdf[SEED_COL].notna()
-            seeds.extend(pdf.loc[is_seed, SEED_COL])
-            # seed rows null the event columns, which widens the non-null
-            # longs to float64 on the way to pandas: narrow them back
-            pdf = (
-                pdf.loc[~is_seed]
-                .drop(columns=SEED_COL)
-                .astype({"seq": "int64", "_ts_millis": "int64"})
-            )
-        events.extend(pdf.to_dict("records"))
+        for event, seed in zip(pdf[EVENT_COL].tolist(), pdf[SEED_COL].tolist()):
+            if event is None:
+                seeds.append(seed)
+            else:
+                events.append(json.loads(event))
     events.sort(key=lambda e: e["seq"])
     if "view" not in st:
         st["view"] = _seed_view(key, seeds[0]) if seeds else new_view(key)
@@ -149,8 +146,7 @@ def _fold_pdfs(
     seen = set(seen_list)
 
     poisoned: list[dict[str, str]] = []
-    for raw in events:
-        e = {k: _clean(v) for k, v in raw.items()}
+    for e in events:
         eid = e.get("id")
         if eid is None:
             # identity-less events cannot be lock-keyed or folded
@@ -222,7 +218,7 @@ def fold_state_func(
     if view_state_ttl_seconds is not None:
         # processing-time TTL, re-armed on every update (idle keys expire)
         state.setTimeoutDuration(int(view_state_ttl_seconds * 1000))
-    yield pd.DataFrame([{**view_as_row(st["view"]), POISONED_COL: poisoned or None}])
+    yield _emit(key, {**view_as_row(st["view"]), POISONED_COL: poisoned or None})
 
 
 def seed_stream(spark, seed_dir: str):
@@ -260,18 +256,60 @@ def seed_stream(spark, seed_dir: str):
 
 # every fold's state is one packed-JSON string (see _unpack/_pack)
 _STATE_TYPE = T.StructType([T.StructField("packed", T.StringType())])
+_WIRE_OUT_TYPE = T.StructType(
+    [
+        T.StructField("transactionId", T.StringType()),
+        T.StructField(OUT_COL, T.StringType()),
+    ]
+)
+
+
+def _emit(key: tuple, row: dict[str, Any]) -> pd.DataFrame:
+    """One fold output row → the one-row wire frame (see _apply_with_state)."""
+    return pd.DataFrame({"transactionId": [key[0]], OUT_COL: [json.dumps(row)]})
+
+
+def _pack_events(prepared_stream):
+    """Prepared (optionally seed-unioned) stream → the fold's input wire
+    columns: ``transactionId``; ``_event``, every column but ``_seed`` as
+    one JSON object with nulls kept (null on seed rows); ``_seed``, null
+    when the stream carries no seed rows."""
+    cols = prepared_stream.columns
+    event = F.to_json(
+        F.struct(*[c for c in cols if c != SEED_COL]), {"ignoreNullFields": "false"}
+    )
+    seed = F.col(SEED_COL) if SEED_COL in cols else F.lit(None).cast("string")
+    return prepared_stream.select(
+        "transactionId",
+        F.when(seed.isNull(), event).alias(EVENT_COL),
+        seed.alias(SEED_COL),
+    )
 
 
 def _apply_with_state(prepared_stream, fold, output_type, timeout="NoTimeout"):
     """Group by ``transactionId`` and run ``fold`` as the keyed stateful
-    operator, emitting only the keys a micro-batch touched."""
-    return prepared_stream.groupBy("transactionId").applyInPandasWithState(
+    operator, emitting only the keys a micro-batch touched.
+
+    The fold reads :func:`_pack_events` frames and yields (``transactionId``,
+    ``_out``) frames, ``_out`` being its output row as JSON; the result is
+    that JSON parsed into ``output_type``'s columns (all nullable)."""
+    out = _pack_events(prepared_stream).groupBy("transactionId").applyInPandasWithState(
         fold,
-        outputStructType=output_type,
+        outputStructType=_WIRE_OUT_TYPE,
         stateStructType=_STATE_TYPE,
         outputMode="update",
         timeoutConf=timeout,
     )
+    return _decode_out(out, output_type)
+
+
+def _decode_out(wire, output_type):
+    """The folds' (``transactionId``, ``_out``) frames → ``output_type``'s
+    columns."""
+    # FAILFAST: a value that does not fit its column is a fold bug, never
+    # a silent null
+    parsed = F.from_json(OUT_COL, output_type, {"mode": "FAILFAST"})
+    return wire.select(parsed.alias(OUT_COL)).select(f"{OUT_COL}.*")
 
 
 def incremental_view(
@@ -357,7 +395,7 @@ def lineage_state_func(
     _fold_pdfs(st, key[0], pdf_iter, lineage=lin)
     state.update((_pack(st, seen_ids_cap),))
     rows = [{"field": f, **m} for f, m in sorted(lin.items())]
-    yield pd.DataFrame([{"transactionId": key[0], "lineage": rows or None}])
+    yield _emit(key, {"transactionId": key[0], "lineage": rows or None})
 
 
 def incremental_field_lineage(
@@ -413,7 +451,7 @@ def history_state_func(
     hist = st.setdefault("hist", [])
     _fold_pdfs(st, key[0], pdf_iter, history=hist)
     state.update((_pack(st, seen_ids_cap),))
-    yield pd.DataFrame([{"transactionId": key[0], "history": hist or None}])
+    yield _emit(key, {"transactionId": key[0], "history": hist or None})
 
 
 def incremental_status_history(

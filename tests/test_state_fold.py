@@ -1,7 +1,9 @@
 """Unit tests for the streaming state fold's seen-set (ST3 dedup) semantics:
 eviction is by ARRIVAL recency, not lexicographic id order, and identity-less
 events are skipped rather than fatal. No SparkSession needed — the fold
-function is driven directly with a fake GroupState."""
+function is driven directly with a fake GroupState, on frames shaped like
+the ones ``_pack_events`` builds (one JSON string per event, one per key
+out)."""
 
 from __future__ import annotations
 
@@ -10,7 +12,10 @@ import json
 import pandas as pd
 
 from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
+    EVENT_COL,
     MAX_SEEN_IDS_PER_KEY,
+    OUT_COL,
+    SEED_COL,
     fold_state_func,
 )
 
@@ -46,10 +51,24 @@ def _activated(i: int, *, eid=_DEFAULT, email=None, ts=None, seq=None):
     }
 
 
-def _run(state, events):
-    out = list(fold_state_func(("tx-1",), [pd.DataFrame(events)], state))
+def _frame(events, seeds=()):
+    """Event dicts (and seed-row JSON strings) → the fold's input frame, as
+    ``_pack_events`` builds it: ``_event`` is the event as JSON, null on seed
+    rows; ``_seed`` is null on event rows."""
+    rows = [("tx-1", json.dumps(e), None) for e in events]
+    rows += [("tx-1", None, seed) for seed in seeds]
+    return pd.DataFrame(rows, columns=["transactionId", EVENT_COL, SEED_COL])
+
+
+def _row(out):
+    """The fold's one output frame → its decoded ``_out`` row."""
     assert len(out) == 1 and len(out[0]) == 1
-    return out[0].iloc[0].to_dict()
+    assert out[0].iloc[0]["transactionId"] == "tx-1"
+    return json.loads(out[0].iloc[0][OUT_COL])
+
+
+def _run(state, events, seeds=()):
+    return _row(list(fold_state_func(("tx-1",), [_frame(events, seeds)], state)))
 
 
 def test_seen_cap_keeps_arrival_recency_not_lexicographic_order():
@@ -87,13 +106,15 @@ def test_poison_pill_event_quarantined_view_survives():
     poison["_ts_millis"] = None
     poison["creationDate"] = "not-a-timestamp"  # parse_millis → ValueError
 
-    out = list(
-        fold_state_func(
-            ("tx-1",),
-            [pd.DataFrame([_activated(1), poison, _activated(3)])],
-            state,
+    out = _row(
+        list(
+            fold_state_func(
+                ("tx-1",),
+                [_frame([_activated(1), poison, _activated(3)])],
+                state,
+            )
         )
-    )[0].iloc[0].to_dict()
+    )
 
     assert out["email"] == "e3"  # view built from the surviving events
     assert len(out["_poisoned"]) == 1
@@ -131,7 +152,7 @@ def test_seen_ids_cap_configurable():
     list(
         fold_state_func(
             ("tx-1",),
-            [pd.DataFrame([_activated(i) for i in range(5)])],
+            [_frame([_activated(i) for i in range(5)])],
             state,
             seen_ids_cap=2,
         )
@@ -167,10 +188,10 @@ def test_packed_state_keys_stable_across_folds():
         (history_state_func, {"hist"}),
     ):
         state = FakeGroupState()
-        list(func(("tx-1",), [pd.DataFrame([_activated(1)])], state, seen_ids_cap=1))
+        list(func(("tx-1",), [_frame([_activated(1)])], state, seen_ids_cap=1))
         assert set(json.loads(state.get[0])) == {"view", "seen"} | extra
         batch2 = [_activated(1, email="dup"), _activated(2)]
-        list(func(("tx-1",), [pd.DataFrame(batch2)], state, seen_ids_cap=1))
+        list(func(("tx-1",), [_frame(batch2)], state, seen_ids_cap=1))
         packed = json.loads(state.get[0])
         assert set(packed) == {"view", "seen"} | extra
         assert packed["seen"] == ["ev-2"]
@@ -178,16 +199,11 @@ def test_packed_state_keys_stable_across_folds():
 
 
 def _seed(**fields):
-    """A seed_stream row as the union delivers it: event columns absent
-    (null), the batch-folded view row as JSON in ``_seed``."""
+    """A seed_stream row's ``_seed`` value: the batch-folded view row as
+    JSON."""
     view = {"transactionId": "tx-1", "status": "CLOSED", "email": "batch"}
     view.update(fields)
-    return {"transactionId": "tx-1", "_seed": json.dumps(view)}
-
-
-def _with_seed(events, seed):
-    rows = [dict(e, _seed=None) for e in events] + [seed]
-    return pd.DataFrame(rows, columns=[*_activated(0), "_seed"])
+    return json.dumps(view)
 
 
 def test_seed_row_starts_view_and_carries_the_guard():
@@ -198,7 +214,7 @@ def test_seed_row_starts_view_and_carries_the_guard():
     seen-id list starts empty."""
     state = FakeGroupState()
     seed = _seed(lastProcessedEventAt=5_000, userId=None)
-    row = _run(state, _with_seed([_activated(1, ts=1_001)], seed))
+    row = _run(state, [_activated(1, ts=1_001)], [seed])
     assert row["status"] == "CLOSED"
     assert row["lastProcessedEventAt"] == 5_000
     assert row["email"] == "e1"
@@ -216,7 +232,7 @@ def test_seed_row_ignored_when_key_has_state():
     reset the view (seeds only start keys)."""
     state = FakeGroupState()
     _run(state, [_activated(1, ts=9_000)])
-    row = _run(state, _with_seed([], _seed(lastProcessedEventAt=5_000)))
+    row = _run(state, [], [_seed(lastProcessedEventAt=5_000)])
     assert row["status"] == "ACTIVATED"
     assert row["email"] == "e1"
     assert row["lastProcessedEventAt"] == 9_000
@@ -226,7 +242,7 @@ def test_seed_only_batch_emits_the_seeded_view():
     """A micro-batch holding only the seed row emits the seeded view as is
     (absent fields → null), with an empty seen-id list in state."""
     state = FakeGroupState()
-    row = _run(state, _with_seed([], _seed(lastProcessedEventAt=5_000)))
+    row = _run(state, [], [_seed(lastProcessedEventAt=5_000)])
     assert row["status"] == "CLOSED"
     assert row["email"] == "batch"
     assert row["lastProcessedEventAt"] == 5_000
@@ -236,15 +252,15 @@ def test_seed_only_batch_emits_the_seeded_view():
 
 
 def test_seed_rows_do_not_widen_event_longs():
-    """Seed rows null the event columns, which widens seq/_ts_millis to
-    float64 in pandas; the fold narrows them back, so the stored guard
-    stays an integer and events still apply in seq order."""
+    """With seed rows mixed into the batch (their ``_event`` is null), events
+    still apply in seq order, whatever their arrival order in the frame,
+    and the stored guard and the emitted one stay integers."""
     state = FakeGroupState()
     events = [_activated(2, ts=7_002), _activated(1, ts=7_001)]
-    pdf = _with_seed(events, _seed(lastProcessedEventAt=5_000))
-    assert pdf["seq"].dtype == "float64"
-    row = _run(state, pdf)
+    row = _run(state, events, [_seed(lastProcessedEventAt=5_000)])
     assert row["email"] == "e2"  # seq 2 applied last
+    assert row["lastProcessedEventAt"] == 7_002
+    assert isinstance(row["lastProcessedEventAt"], int)
     lpea = json.loads(state.get[0])["view"]["lastProcessedEventAt"]
     assert lpea == 7_002 and isinstance(lpea, int)
 
@@ -253,8 +269,8 @@ def test_seed_view_without_guard_starts_unguarded():
     """A seed row with no lastProcessedEventAt (the batch half never applied
     a guarded event) leaves the guard open, like a fresh view."""
     state = FakeGroupState()
-    seed = {"transactionId": "tx-1", "_seed": json.dumps({"status": "CLOSED"})}
-    row = _run(state, _with_seed([_activated(1, ts=1_001)], seed))
+    seed = json.dumps({"status": "CLOSED"})
+    row = _run(state, [_activated(1, ts=1_001)], [seed])
     assert row["status"] == "ACTIVATED"
     assert row["transactionId"] == "tx-1"
     assert row["lastProcessedEventAt"] == 1_001
@@ -275,9 +291,9 @@ def test_lineage_and_history_restore_packed_state():
     lin_state.update(
         (json.dumps({"view": view, "seen": ["ev-0"], "lin": {"status": meta}}),)
     )
-    out = list(
-        lineage_state_func(("tx-1",), [pd.DataFrame([_activated(1, ts=6_000)])], lin_state)
-    )[0].iloc[0]
+    out = _row(
+        list(lineage_state_func(("tx-1",), [_frame([_activated(1, ts=6_000)])], lin_state))
+    )
     fields = {r["field"]: r["event_id"] for r in out["lineage"]}
     assert fields["status"] == "ev-1" and fields["email"] == "ev-1"
     assert json.loads(lin_state.get[0])["seen"] == ["ev-0", "ev-1"]
@@ -285,11 +301,31 @@ def test_lineage_and_history_restore_packed_state():
     hist = [{"version": 1, "status": "CLOSED", "valid_from_ms": 5_000}]
     hist_state = FakeGroupState()
     hist_state.update((json.dumps({"view": view, "seen": ["ev-0"], "hist": hist}),))
-    out = list(
-        history_state_func(("tx-1",), [pd.DataFrame([_activated(1, ts=6_000)])], hist_state)
-    )[0].iloc[0]
+    out = _row(
+        list(history_state_func(("tx-1",), [_frame([_activated(1, ts=6_000)])], hist_state))
+    )
     assert [h["status"] for h in out["history"]] == ["CLOSED", "ACTIVATED"]
     assert out["history"][1]["version"] == 2
+
+
+def test_pandas_era_state_floats_restore_as_longs():
+    """State written while the fold read pandas frames can hold integral
+    floats for nested longs (pandas widened a long with a null sibling to
+    float64). They restore as ints, so the output row parses into its long
+    columns."""
+    view = {
+        "transactionId": "tx-1",
+        "feeTotal": 266.0,
+        "paymentNotices": [{"paymentToken": "t", "amount": 1569.0}],
+        "lastProcessedEventAt": 5_000,
+    }
+    state = FakeGroupState()
+    state.update((json.dumps({"view": view, "seen": ["ev-0"]}),))
+    row = _run(state, [])
+    assert row["feeTotal"] == 266 and isinstance(row["feeTotal"], int)
+    (notice,) = row["paymentNotices"]
+    assert notice["amount"] == 1569 and isinstance(notice["amount"], int)
+    assert isinstance(json.loads(state.get[0])["view"]["feeTotal"], int)  # repacked
 
 
 class FakeTimeoutGroupState(FakeGroupState):
@@ -322,7 +358,7 @@ def test_view_state_ttl_evicts_then_reinserts_fresh():
     state = FakeTimeoutGroupState()
     out = list(
         fold_state_func(
-            ("tx-1",), [pd.DataFrame([_activated(1)])], state,
+            ("tx-1",), [_frame([_activated(1)])], state,
             view_state_ttl_seconds=30.0,
         )
     )
@@ -350,10 +386,10 @@ def test_view_state_ttl_evicts_then_reinserts_fresh():
 
 
 def _run_ttl(state, events):
-    out = list(
-        fold_state_func(
-            ("tx-1",), [pd.DataFrame(events)], state, view_state_ttl_seconds=30.0
+    return _row(
+        list(
+            fold_state_func(
+                ("tx-1",), [_frame(events)], state, view_state_ttl_seconds=30.0
+            )
         )
     )
-    assert len(out) == 1 and len(out[0]) == 1
-    return out[0].iloc[0].to_dict()

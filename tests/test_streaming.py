@@ -1352,3 +1352,130 @@ def test_bootstrap_handoff_matches_oracle_from_foreign_cwd(query_from_foreign_cw
     """The Python workers of the stateful fold must import the package from
     any working directory."""
     query_from_foreign_cwd("cdc_bootstrap_handoff")
+
+
+def test_packed_events_decode_to_the_pandas_records(spark):
+    """The fold's input wire (one JSON string per event, see
+    state_fold._pack_events) decodes to exactly the dict the pandas-frame
+    input gave: Arrow → pandas in a Python worker, ``to_dict("records")``,
+    then NaN → None and numpy → native. Nested notices keep their long
+    amounts, a null ``data`` and a null ``ttl`` stay ``None``, and a seed
+    row packs to a null event. Past 2**53 JSON is exact where pandas was
+    not: a null sibling turned a nested long into a float64."""
+    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import prepare_events
+    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
+        EVENT_COL,
+        SEED_COL,
+        _pack_events,
+    )
+
+    def envelope(i, code, data):
+        return {
+            "id": f"ev-{i}",
+            "transactionId": "tx-1",
+            "eventCode": code,
+            "creationDate": f"2025-01-01T00:00:0{i}.000Z",
+            "seq": i,
+            "ttl": None,
+            "operationType": "insert",
+            "data": data,
+        }
+
+    notice = {"paymentToken": "tok", "rptId": "rpt", "description": "d"}
+    auth = {"kind": "NPG", "operationResult": "EXECUTED", "outcome": "OK",
+            "paymentEndToEndId": None, "errorCode": "E001"}
+    events = [
+        envelope(1, "TRANSACTION_ACTIVATED_EVENT", {
+            "email": "a@b", "clientId": "IO",
+            "paymentNotices": [dict(notice, amount=12_345_678_901),
+                               dict(notice, amount=None)],
+        }),
+        envelope(2, "TRANSACTION_AUTHORIZATION_COMPLETED_EVENT",
+                 {"rrn": "r", "gatewayAuthData": auth}),
+        envelope(3, "TRANSACTION_USER_CANCELED_EVENT", None),
+        envelope(4, "TRANSACTION_ACTIVATED_EVENT", {
+            "paymentNotices": [dict(notice, amount=2**53 + 1), dict(notice, amount=None)],
+        }),
+    ]
+    prepared = prepare_events(spark.createDataFrame(events, EVENT_ENVELOPE_TYPE))
+
+    def pandas_records(pdfs):
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        def native(v):
+            if isinstance(v, float) and math.isnan(v):
+                return None
+            if isinstance(v, dict):
+                return {k: native(x) for k, x in v.items()}
+            if isinstance(v, (list, tuple, np.ndarray)):
+                return [native(x) for x in v]
+            return v.item() if isinstance(v, np.generic) else v
+
+        for pdf in pdfs:
+            recs = [{k: native(v) for k, v in r.items()} for r in pdf.to_dict("records")]
+            yield pd.DataFrame(
+                {"id": [r["id"] for r in recs], "rec": [json.dumps(r) for r in recs]}
+            )
+
+    expected = {
+        r["id"]: json.loads(r["rec"])
+        for r in prepared.mapInPandas(pandas_records, "id string, rec string").collect()
+    }
+    seed = spark.createDataFrame(
+        [("tx-2", '{"status": "CLOSED"}')], f"transactionId string, {SEED_COL} string"
+    )
+    packed = _pack_events(prepared.unionByName(seed, allowMissingColumns=True)).collect()
+
+    assert [r[SEED_COL] for r in packed if r[EVENT_COL] is None] == ['{"status": "CLOSED"}']
+    got = {}
+    for r in packed:
+        if r[EVENT_COL] is not None:
+            assert r[SEED_COL] is None
+            e = json.loads(r[EVENT_COL])
+            got[e["id"]] = e
+    assert sorted(got) == sorted(expected) == ["ev-1", "ev-2", "ev-3", "ev-4"]
+    for eid in ("ev-1", "ev-2", "ev-3"):
+        assert got[eid] == expected[eid]
+    assert got["ev-1"]["data"]["paymentNotices"][0]["amount"] == 12_345_678_901
+    assert got["ev-3"]["data"] is None and got["ev-3"]["ttl"] is None
+    (exact, _), (rounded, _) = (
+        [n["amount"] for n in rec["data"]["paymentNotices"]]
+        for rec in (got["ev-4"], expected["ev-4"])
+    )
+    assert exact == 2**53 + 1 and rounded == float(2**53)
+
+
+def test_fold_output_survives_the_json_round_trip(spark):
+    """The folds' output wire (one JSON string per key) parses back into the
+    typed columns: a poisoned event's ``_poisoned`` list, the lineage array
+    and the history array come out as the fold built them."""
+    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
+        OUT_COL,
+        STREAM_HISTORY_TYPE,
+        STREAM_LINEAGE_TYPE,
+        STREAM_VIEW_TYPE,
+        _decode_out,
+        fold_state_func,
+        history_state_func,
+        lineage_state_func,
+    )
+    from test_state_fold import FakeGroupState, _activated, _frame
+
+    poison = _activated(2, ts=None)
+    poison["_ts_millis"] = None
+    poison["creationDate"] = "boom"  # parse_millis → ValueError
+    batch = [_activated(1), poison, _activated(3, ts=2_000)]
+    for func, out_type, col in (
+        (fold_state_func, STREAM_VIEW_TYPE, "_poisoned"),
+        (lineage_state_func, STREAM_LINEAGE_TYPE, "lineage"),
+        (history_state_func, STREAM_HISTORY_TYPE, "history"),
+    ):
+        (wire,) = func(("tx-1",), [_frame(batch)], FakeGroupState())
+        built = json.loads(wire.iloc[0][OUT_COL])
+        assert built[col], col
+        (row,) = _decode_out(spark.createDataFrame(wire), out_type).collect()
+        assert row.asDict(recursive=True) == built
+        assert row.__fields__ == out_type.fieldNames()
