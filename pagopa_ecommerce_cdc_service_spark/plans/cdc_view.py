@@ -352,8 +352,9 @@ _STREAM_LIMIT = 3000
 def _run_gate_phase(spark: SparkSession, src: str, view_dir: str, ckpt: str) -> None:
     from ..streaming.pipeline import start_view_maintenance
 
-    # few hundred keys at gate scale: 8 buckets keeps the per-batch file ops
-    # proportionate (bucket count scales with view size, not a constant)
+    # few hundred keys at gate scale: 8 buckets keeps each merge's old-state
+    # read to a few touched buckets (files written follow the write tasks,
+    # not the bucket count)
     q = start_view_maintenance(spark, src, view_dir, ckpt, n_buckets=8)
     try:
         q.processAllAvailable()

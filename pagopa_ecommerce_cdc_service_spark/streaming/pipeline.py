@@ -115,9 +115,11 @@ def stream_transactions_view(
 
 
 VIEW_BUCKET_COL = "_bucket"
+VIEW_GEN_COL = "_gen"
 _COMMITS_DIR = "_commits"
 _DATA_DIR = "data"
-_MANIFEST_VERSION = 1
+_MANIFEST_VERSION = 2
+_READABLE_VERSIONS = (1, _MANIFEST_VERSION)
 
 
 def view_bucket(key_col: str, n_buckets: int):
@@ -129,11 +131,26 @@ def view_bucket(key_col: str, n_buckets: int):
 # Manifest-pointer commit protocol (object-store-atomic, rename-free).
 #
 # Layout:
-#   <view_dir>/data/g-<epoch>-<nonce>/_bucket=<b>/part-*.parquet
-#       immutable generation dirs — written once, never renamed or mutated
+#   <view_dir>/data/g-<epoch>-<nonce>/part-*.parquet
+#       immutable generation dirs — written once, never renamed or mutated.
+#       A generation holds the full new state of the buckets one merge (or
+#       compaction) rewrote, as one file per write task with rows sorted by
+#       ``_bucket``; every row carries its ``_bucket`` and its generation
+#       ``_gen`` (the dir's path relative to <view_dir>).
 #   <view_dir>/_commits/c-<seq 10 digits>.json
 #       immutable commit manifests; the LIVE table state is defined by the
-#       highest-sequence manifest whose embedded checksum validates
+#       highest-sequence manifest whose embedded checksum validates. A
+#       manifest maps each bucket to the generation holding its live rows
+#       (``buckets``) and records how many buckets each live generation was
+#       written with (``gens``).
+#
+# A row is live iff the manifest maps its bucket to its generation: every
+# reader keeps ``element_at(buckets, _bucket) = _gen`` and nothing else, so
+# a later merge retires a bucket's rows in an older generation by moving
+# one manifest entry, without touching a file. Version-1 manifests map a
+# bucket to ``data/<gen>/_bucket=<b>``, a directory of that bucket alone
+# whose files carry neither column; the same filter reads them, a null
+# ``_gen`` counting as live.
 #
 # A commit is ONE small-file write (create-new, never overwrite, no rename
 # anywhere in the protocol) — atomic on any store where a closed object is
@@ -225,7 +242,7 @@ def valid_commits(spark: SparkSession, view_dir: str):
             payload = doc["payload"]
             if doc.get("sha") == _manifest_digest(payload) and payload.get(
                 "version"
-            ) == _MANIFEST_VERSION:
+            ) in _READABLE_VERSIONS:
                 out.append((seq, payload))
         except Exception:
             continue  # torn or foreign file: fall back to previous seq
@@ -252,6 +269,54 @@ def _write_commit(spark: SparkSession, view_dir: str, seq: int, payload: dict):
     )
 
 
+def _with_layout_cols(schema):
+    """``schema`` plus ``_bucket`` and ``_gen`` where it lacks them
+    (version-1 files carry neither)."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    extra = [
+        StructField(name, typ)
+        for name, typ in ((VIEW_BUCKET_COL, IntegerType()), (VIEW_GEN_COL, StringType()))
+        if name not in schema.fieldNames()
+    ]
+    return StructType(schema.fields + extra)
+
+
+def _live_rows(
+    spark: SparkSession, view_dir: str, entries: dict, gens: dict, schema=None
+) -> DataFrame:
+    """The live rows of the buckets in ``entries`` ({bucket: relative dir},
+    a manifest's ``buckets`` or part of it), with ``_bucket`` and ``_gen``.
+    Each dir is scanned once however many buckets it serves, and a row is
+    kept only when ``entries`` maps its bucket to its generation.
+    ``schema`` (the data columns) spares the footer read that infers it;
+    the inference reads a generation's footer where there is one, since
+    version-1 files lack the layout columns."""
+    if schema is None:
+        probe = next(
+            (rel for rel in entries.values() if rel in gens),
+            next(iter(entries.values())),
+        )
+        schema = spark.read.parquet(f"{view_dir}/{probe}").schema
+    live_gen = F.create_map(
+        *[c for b, rel in entries.items() for c in (F.lit(int(b)), F.lit(rel))]
+    )
+    gen = F.col(VIEW_GEN_COL)
+    return (
+        spark.read.schema(_with_layout_cols(schema))
+        .parquet(*[f"{view_dir}/{rel}" for rel in sorted(set(entries.values()))])
+        .filter(gen.isNull() | (F.element_at(live_gen, F.col(VIEW_BUCKET_COL)) == gen))
+    )
+
+
+def read_commit(spark: SparkSession, view_dir: str, payload: dict) -> DataFrame:
+    """The view as of one resolved manifest ``payload`` (its data columns
+    only)."""
+    return _live_rows(
+        spark, view_dir, payload["buckets"], payload.get("gens", {})
+    ).drop(VIEW_BUCKET_COL, VIEW_GEN_COL)
+
+
 def read_view(
     spark: SparkSession, view_dir: str, version: int | None = None
 ) -> DataFrame:
@@ -259,10 +324,11 @@ def read_view(
 
     Pure resolution, no mutation: a reader lists ``_commits/``, picks the
     highest checksum-valid manifest (or the retained commit named by
-    ``version`` — time travel), and scans exactly the generation dirs it
-    names — snapshot isolation against a live writer (the old rename
-    protocol could expose a bucket as absent mid-commit; a manifest can
-    only be seen whole or not at all)."""
+    ``version`` — time travel), scans the generation dirs it names, and
+    keeps a row only where that manifest maps the row's bucket to the row's
+    generation — snapshot isolation against a live writer (a manifest can
+    only be seen whole or not at all, and rows a later commit superseded
+    are filtered by the manifest, not removed from files)."""
     if version is None:
         _, payload = current_commit(spark, view_dir)
     else:
@@ -276,8 +342,7 @@ def read_view(
             )
     if payload is None or not payload["buckets"]:
         raise FileNotFoundError(f"no committed view at {view_dir}")
-    dirs = [f"{view_dir}/{rel}" for rel in payload["buckets"].values()]
-    return spark.read.parquet(*dirs)
+    return read_commit(spark, view_dir, payload)
 
 
 def recover_view(
@@ -291,75 +356,61 @@ def recover_view(
     history beyond the retention window) and drop commit files outside the
     newest ``retain_commits`` valid ones (torn higher-sequence manifests
     and expired history). A crash at ANY point loses no rows: every
-    retained manifest names complete, immutable generations."""
+    retained manifest names complete, immutable generations. Generations
+    go whole: one still serving any bucket keeps its dead rows (and a
+    version-1 generation its superseded bucket dirs) until
+    :func:`compact_view` rewrites the live ones elsewhere."""
     fs, root = _hadoop_fs(spark, view_dir)
     if not fs.exists(root):
         return
     jvm = spark._jvm
     kept = valid_commits(spark, view_dir)[: max(1, retain_commits)]
     kept_seqs = {s for s, _ in kept}
-    referenced = set()  # relative "data/<gen>/_bucket=N" paths still live
-    for _, payload in kept:
-        referenced |= set(payload["buckets"].values())
-    gens_referenced = {rel.split("/")[1] for rel in referenced}
+    # "data/<gen>" or, version 1, "data/<gen>/_bucket=N" → <gen>
+    referenced = {
+        rel.split("/")[1] for _, payload in kept for rel in payload["buckets"].values()
+    }
     data_root = jvm.org.apache.hadoop.fs.Path(root, _DATA_DIR)
     if fs.exists(data_root):
         for status in fs.listStatus(data_root):
-            gen = status.getPath().getName()
-            if gen not in gens_referenced:
+            if status.getPath().getName() not in referenced:
                 fs.delete(status.getPath(), True)
-                continue
-            # a later commit may have superseded SOME of this generation's
-            # buckets: drop exactly the bucket subdirs no retained commit
-            # references, so disk usage tracks the retained window
-            for child in fs.listStatus(status.getPath()):
-                name = child.getPath().getName()
-                if (
-                    name.startswith(f"{VIEW_BUCKET_COL}=")
-                    and f"{_DATA_DIR}/{gen}/{name}" not in referenced
-                ):
-                    fs.delete(child.getPath(), True)
     _, found = _list_commit_files(spark, view_dir)
     for s, path in found:
         if not kept_seqs or s not in kept_seqs:
             fs.delete(path, False)
 
 
-def _write_generation(merged: DataFrame, view_dir: str, epoch_id) -> dict:
-    """Write one immutable generation dir holding the full new state of the
-    touched buckets; returns {bucket: relative dir} for the manifest. The
-    nonce keeps a replayed epoch from colliding with a generation the
-    previous attempt may already have committed."""
+def _write_generation(rows: DataFrame, view_dir: str, epoch_id) -> str:
+    """Write ``rows`` (the full new state of the buckets they cover, with
+    ``_bucket``) as one immutable generation dir, one file per write task
+    sorted by bucket; returns its relative dir, which every row carries as
+    ``_gen``. The nonce keeps a replayed epoch from colliding with a
+    generation the previous attempt may already have committed."""
     import uuid
 
-    gen = f"g-{epoch_id}-{uuid.uuid4().hex[:8]}"
+    gen = f"{_DATA_DIR}/g-{epoch_id}-{uuid.uuid4().hex[:8]}"
     (
-        merged.write.mode("overwrite")
-        .partitionBy(VIEW_BUCKET_COL)
-        .parquet(f"{view_dir}/{_DATA_DIR}/{gen}")
+        rows.withColumn(VIEW_GEN_COL, F.lit(gen))
+        .sortWithinPartitions(VIEW_BUCKET_COL)
+        .write.mode("overwrite")
+        .parquet(f"{view_dir}/{gen}")
     )
-    spark = merged.sparkSession
-    fs, _ = _hadoop_fs(spark, view_dir)
-    gen_path = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{view_dir}/{_DATA_DIR}/{gen}"
-    )
-    out = {}
-    for status in fs.listStatus(gen_path):
-        name = status.getPath().getName()
-        if name.startswith(f"{VIEW_BUCKET_COL}="):
-            bucket = int(name.split("=", 1)[1])
-            out[bucket] = f"{_DATA_DIR}/{gen}/{name}"
-    return out
+    return gen
 
 
 def _publish(
-    spark, view_dir, seq, payload, new_entries, failpoint, n_buckets,
+    spark, view_dir, seq, payload, gen, touched, failpoint, n_buckets,
     retain_commits=1, key_col="transactionId",
 ):
-    """Fold ``new_entries`` into the manifest and publish seq+1 (ONE small
-    create-new file write — the commit point), then GC superseded state."""
-    buckets = dict(payload["buckets"]) if payload else {}
-    buckets.update({str(b): rel for b, rel in new_entries.items()})
+    """Point the ``touched`` buckets at generation ``gen`` and publish
+    seq+1 (ONE small create-new file write — the commit point), then GC
+    superseded state."""
+    prior = payload or {}
+    buckets = {**prior.get("buckets", {}), **{str(b): gen for b in touched}}
+    serving = set(buckets.values())
+    gens = {rel: n for rel, n in prior.get("gens", {}).items() if rel in serving}
+    gens[gen] = len(touched)
     if failpoint is not None:
         failpoint("staged")
     _write_commit(
@@ -371,6 +422,7 @@ def _publish(
             "n_buckets": n_buckets,
             "key_col": key_col,
             "buckets": buckets,
+            "gens": gens,
         },
     )
     if failpoint is not None:
@@ -391,13 +443,18 @@ def parquet_upsert_sink(
     CDC view's transactionId; any unique key column works — the sink is a
     generic keyed-upsert engine component).
 
-    Only the buckets actually touched by the batch are rewritten, and the
-    old rows are read from exactly the manifest entries of those buckets —
-    pruning by construction (untouched buckets' files are never listed,
-    read, or replaced). Per-batch cost is O(touched buckets), not O(view
-    size). Local stand-in for ``MERGE INTO`` on a Delta/Iceberg table
-    (jars not in this image); the manifest commit is the same idea as
-    their log-structured commit, scoped to this one table.
+    Each merge writes the full new state of the buckets the batch touched
+    as ONE new generation — one file per write task of the batch, rows
+    sorted by bucket — and repoints those buckets' manifest entries at it.
+    The old rows are read from the generations the manifest names for the
+    touched buckets only, with ``_bucket IN touched`` pushed into the scan
+    so row groups of other buckets are skipped; untouched buckets' entries
+    and files are never replaced. Per-batch cost is the touched rows (plus
+    the row groups the sorted ``_bucket`` cannot skip), not the view size,
+    and the files written follow the write tasks, not the bucket count.
+    Local stand-in for ``MERGE INTO`` on a Delta/Iceberg table (jars not in
+    this image); the manifest commit is the same idea as their
+    log-structured commit, scoped to this one table.
 
     CRASH GUARANTEE: new generations are immutable dirs invisible to
     readers until the single manifest write publishes them; a kill before
@@ -428,29 +485,37 @@ def parquet_upsert_sink(
             )
             if not touched:
                 return  # empty micro-batch: no generation, no commit churn
-            old_dirs = (
-                [
-                    f"{view_dir}/{payload['buckets'][str(b)]}"
-                    for b in touched
-                    if str(b) in payload["buckets"]
-                ]
-                if payload
-                else []
-            )
-            if old_dirs:
-                # the old buckets were written from this same schema: pass
-                # it, sparing the per-batch footer-inference job
-                old = spark.read.schema(batch_df.schema).parquet(*old_dirs).withColumn(
-                    VIEW_BUCKET_COL, view_bucket(key_col, n_buckets)
+            live = payload["buckets"] if payload else {}
+            old_entries = {str(b): live[str(b)] for b in touched if str(b) in live}
+            merged = updates
+            if old_entries:
+                # the old rows were written from this same schema: pass it,
+                # sparing the per-batch footer-inference job. Version-1 rows
+                # carry no _bucket: the IN conjunct spares them by that null
+                # (phrased on _gen, the optimizer would fold it into the
+                # liveness filter, which cannot be pushed into the scan) and
+                # the recomputation fills it.
+                bucket = F.col(VIEW_BUCKET_COL)
+                old = (
+                    _live_rows(
+                        spark, view_dir, old_entries, payload.get("gens", {}),
+                        batch_df.schema,
+                    )
+                    .filter(bucket.isin(touched) | bucket.isNull())
+                    .drop(VIEW_GEN_COL)
+                    .withColumn(VIEW_BUCKET_COL, view_bucket(key_col, n_buckets))
                 )
                 merged = old.join(
                     updates.select(key_col), key_col, "left_anti"
                 ).unionByName(updates)
-            else:
-                merged = updates
-            new_entries = _write_generation(merged, view_dir, epoch_id)
+            # as many write tasks as the batch has partitions: without the
+            # coalesce each old file would pass through as a task of its own,
+            # and a generation's file count would grow with every merge
+            gen = _write_generation(
+                merged.coalesce(updates.rdd.getNumPartitions()), view_dir, epoch_id
+            )
             _publish(
-                spark, view_dir, seq, payload, new_entries, failpoint,
+                spark, view_dir, seq, payload, gen, touched, failpoint,
                 n_buckets, retain_commits, key_col,
             )
         finally:
@@ -462,55 +527,48 @@ def parquet_upsert_sink(
 def compact_view(
     spark: SparkSession,
     view_dir: str,
-    max_files_per_bucket: int = 4,
     failpoint=None,
     retain_commits: int = 1,
 ) -> list[int]:
-    """Compact fragmented view buckets back to one file each (small-file
-    maintenance — the operational cost of per-batch bucket rewrites at
-    100 TB: a long-running stream leaves each hot bucket with one file per
-    touching batch, and scan/open cost grows with file count, not data).
+    """Rewrite away the dead rows the shared generations accrete (storage
+    maintenance). A merge moves the buckets it touched to a new generation,
+    so every older generation that also served one of them keeps a dead
+    copy of its rows on disk, and keeps them in the scans of the buckets it
+    still serves, until no retained commit names the generation at all.
 
     WRITER-SCOPE operation (same single-writer assumption as the sink; run
     it from the maintenance window or the foreachBatch callback, not beside
-    a live stream). Only buckets whose manifest dir holds more than
-    ``max_files_per_bucket`` data files are rewritten — one FileSystem
-    listing pass, no Spark job for the untouched ones — and the rewrite
-    publishes through the same single-manifest-write commit as the sink, so
-    a crash mid-compact plus a re-run loses nothing (compaction changes
-    layout, never data; it is idempotent). Returns the bucket ids
-    compacted."""
+    a live stream). The live buckets of every generation that serves fewer
+    buckets than it was written with, plus every version-1 entry, are
+    rewritten into ONE new generation — chosen from the manifest alone, no
+    listing and no Spark job when none qualifies — and published through
+    the same single-manifest-write commit as the sink, so a crash
+    mid-compact plus a re-run loses nothing (compaction changes layout,
+    never data; it is idempotent). Returns the bucket ids rewritten."""
+    from collections import Counter
+
     recover_view(spark, view_dir, retain_commits)
     seq, payload = current_commit(spark, view_dir)
     if payload is None:
         return []
-    fs, _ = _hadoop_fs(spark, view_dir)
-    jvm = spark._jvm
-    touched = []
-    for bucket_str, rel in payload["buckets"].items():
-        bdir = jvm.org.apache.hadoop.fs.Path(f"{view_dir}/{rel}")
-        n_files = sum(
-            1
-            for f in fs.listStatus(bdir)
-            if f.getPath().getName().endswith(".parquet")
-        )
-        if n_files > max_files_per_bucket:
-            touched.append(int(bucket_str))
-    if not touched:
+    gens = payload.get("gens", {})
+    serving = Counter(payload["buckets"].values())
+    # a version-1 entry, or a generation that holds dead rows
+    stale = {rel for rel, n in serving.items() if rel not in gens or n < gens[rel]}
+    entries = {b: rel for b, rel in payload["buckets"].items() if rel in stale}
+    if not entries:
         return []
-    touched.sort()
     n_buckets = payload["n_buckets"]
     key_col = payload.get("key_col", "transactionId")
-    rows = spark.read.parquet(
-        *[f"{view_dir}/{payload['buckets'][str(b)]}" for b in touched]
-    ).withColumn(VIEW_BUCKET_COL, view_bucket(key_col, n_buckets))
-    # repartition BY the bucket column: each bucket lands in exactly one
-    # task → exactly one output file per bucket directory
-    new_entries = _write_generation(
-        rows.repartition(len(touched), VIEW_BUCKET_COL), view_dir, "compact"
+    rows = (
+        _live_rows(spark, view_dir, entries, gens)
+        .drop(VIEW_GEN_COL)
+        .withColumn(VIEW_BUCKET_COL, view_bucket(key_col, n_buckets))
     )
+    touched = sorted(int(b) for b in entries)
+    gen = _write_generation(rows, view_dir, "compact")
     _publish(
-        spark, view_dir, seq, payload, new_entries, failpoint, n_buckets,
+        spark, view_dir, seq, payload, gen, touched, failpoint, n_buckets,
         retain_commits, key_col,
     )
     return touched

@@ -195,9 +195,13 @@ def test_fallback_not_applied_on_restart(spark, tmp_path):
 
 def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     """The bucketed sink's point: a micro-batch touching one transaction must
-    leave every other bucket's parquet files untouched on disk (same paths,
-    same bytes, same mtimes) — per-batch cost O(touched buckets)."""
+    leave every other bucket's manifest entry and the files of its
+    generation untouched on disk (same paths, same bytes, same mtimes), and
+    write only the touched bucket's rows — per-batch cost O(touched rows)."""
+    import pyarrow.parquet as pq
+
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        VIEW_BUCKET_COL,
         current_commit,
         parquet_upsert_sink,
         view_bucket,
@@ -226,7 +230,6 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
         view_bucket(F.lit(events[0]["transactionId"]), 8).alias("b")
     ).collect()[0]["b"]
     _, payload1 = current_commit(spark, view_dir)
-    old_touched_dir = os.path.join(view_dir, payload1["buckets"][str(touched_bucket)])
 
     before = bucket_files()
     # second batch: update exactly one existing transaction
@@ -240,22 +243,34 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     sink(batch2, epoch_id=1)
     after = bucket_files()
     _, payload2 = current_commit(spark, view_dir)
-    new_touched_dir = os.path.join(view_dir, payload2["buckets"][str(touched_bucket)])
+    new_gen = payload2["buckets"][str(touched_bucket)]
+    new_gen_dir = os.path.join(view_dir, new_gen) + os.sep
 
-    # the manifest moved exactly the touched bucket to a new generation dir;
-    # every other bucket's entry — and its on-disk files — is untouched
-    assert new_touched_dir != old_touched_dir
-    assert {
+    # the manifest moved exactly the touched bucket to a new generation;
+    # every other bucket's entry — and the files of its generation — is
+    # untouched
+    assert new_gen != payload1["buckets"][str(touched_bucket)]
+    untouched = {
         b: rel for b, rel in payload1["buckets"].items() if b != str(touched_bucket)
-    } == {b: rel for b, rel in payload2["buckets"].items() if b != str(touched_bucket)}
-    untouched_before = {
-        p: v for p, v in before.items() if not p.startswith(old_touched_dir)
     }
-    untouched_after = {
-        p: v for p, v in after.items() if not p.startswith(new_touched_dir)
+    assert untouched == {
+        b: rel for b, rel in payload2["buckets"].items() if b != str(touched_bucket)
     }
+    untouched_dirs = tuple(
+        os.path.join(view_dir, rel) + os.sep for rel in set(untouched.values())
+    )
+    untouched_before = {p: v for p, v in before.items() if p.startswith(untouched_dirs)}
+    untouched_after = {p: v for p, v in after.items() if p.startswith(untouched_dirs)}
     assert untouched_before, "expected data outside the touched bucket"
     assert untouched_before == untouched_after
+    # the new generation holds the touched bucket's rows and no other's
+    new_files = [p for p in after if p.startswith(new_gen_dir)]
+    assert new_files
+    assert {
+        b for p in new_files for b in pq.read_table(p, columns=[VIEW_BUCKET_COL])[
+            VIEW_BUCKET_COL
+        ].to_pylist()
+    } == {touched_bucket}
     # merged result is still the full fold
     merged = read_view(spark, view_dir)
     assert merged.count() == batch1.count()
@@ -416,17 +431,19 @@ def test_upsert_sink_commit_protocol_is_rename_free(spark, tmp_path, monkeypatch
     events = generate_event_log(seed=23, n_transactions=16)
     tx_ids = sorted({e["transactionId"] for e in events})
     sink = pipeline.parquet_upsert_sink(view_dir, n_buckets=4)
-    for i, tx in enumerate(tx_ids[:6]):
+    # one merge of all six, then re-merges of two: the first generation
+    # holds dead rows, so compaction has a generation to rewrite
+    for i, txs in enumerate([tx_ids[:6], *([tx] for tx in tx_ids[:2])]):
         sink(
             transactions_view_from_log(
                 spark.createDataFrame(
-                    [e for e in events if e["transactionId"] == tx],
+                    [e for e in events if e["transactionId"] in txs],
                     schema=EVENT_ENVELOPE_TYPE,
                 )
             ),
             epoch_id=i,
         )
-    pipeline.compact_view(spark, view_dir, max_files_per_bucket=1)
+    assert pipeline.compact_view(spark, view_dir)
     pipeline.recover_view(spark, view_dir)
     assert read_view(spark, view_dir).count() == 6
 
@@ -654,9 +671,8 @@ def _view_state(spark, view_dir):
 
 def _assert_no_orphans(spark, view_dir):
     """The directory holds exactly the live commit's state: one commit file,
-    and every on-disk bucket dir referenced by it (GC left no garbage)."""
+    and every on-disk generation referenced by it (GC left no garbage)."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
-        VIEW_BUCKET_COL,
         current_commit,
     )
 
@@ -669,12 +685,7 @@ def _assert_no_orphans(spark, view_dir):
         if f.startswith("c-") and f.endswith(".json")
     ]
     assert len(commits) == 1, commits
-    on_disk = set()
-    data_root = os.path.join(base, "data")
-    for gen in os.listdir(data_root):
-        for child in os.listdir(os.path.join(data_root, gen)):
-            if child.startswith(f"{VIEW_BUCKET_COL}="):
-                on_disk.add(f"data/{gen}/{child}")
+    on_disk = {f"data/{gen}" for gen in os.listdir(os.path.join(base, "data"))}
     assert on_disk == referenced
 
 
@@ -764,48 +775,58 @@ def test_upsert_sink_and_recovery_honor_path_uris(spark, tmp_path):
     assert read_view(spark, view_dir).count() == len(tx_ids)
 
 
-def test_compact_view_single_file_per_bucket_same_rows(spark, tmp_path):
-    """After many small merges each hot bucket holds one file per batch;
-    compaction must collapse each fragmented bucket to ONE file without
-    changing a single row, and be a no-op the second time."""
+def _one_merge_then_remerges(spark, view_dir, seed, n_transactions, n_remerges):
+    """A view of ``n_transactions`` written by one merge, then
+    ``n_remerges`` single-transaction merges: each moves one bucket out of
+    the first generation, which keeps that bucket's rows as dead ones."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
-        VIEW_BUCKET_COL,
-        compact_view,
         parquet_upsert_sink,
     )
 
-    view_dir = str(tmp_path / "view")
-    events = generate_event_log(seed=17, n_transactions=30)
+    events = generate_event_log(seed=seed, n_transactions=n_transactions)
     tx_ids = sorted({e["transactionId"] for e in events})
-    sink = parquet_upsert_sink(view_dir, n_buckets=2)
-    # 6 single-transaction batches -> every touched bucket accretes files
-    for i, tx in enumerate(tx_ids):
-        batch = transactions_view_from_log(
-            spark.createDataFrame(
-                [e for e in events if e["transactionId"] == tx],
-                schema=EVENT_ENVELOPE_TYPE,
-            )
+    sink = parquet_upsert_sink(view_dir, n_buckets=4)
+    for i, txs in enumerate([tx_ids, *([tx] for tx in tx_ids[:n_remerges])]):
+        sink(
+            transactions_view_from_log(
+                spark.createDataFrame(
+                    [e for e in events if e["transactionId"] in txs],
+                    schema=EVENT_ENVELOPE_TYPE,
+                )
+            ),
+            epoch_id=i,
         )
-        sink(batch, epoch_id=i)
+
+
+def test_compact_view_drops_dead_rows_same_rows(spark, tmp_path):
+    """Re-merges leave dead copies of the buckets they moved in the older
+    generations; compaction must rewrite the live rest of each such
+    generation so that no dead row stays on disk, without changing a
+    single row, and be a no-op the second time."""
+    import pyarrow.parquet as pq
+
+    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import compact_view
+
+    view_dir = str(tmp_path / "view")
+    _one_merge_then_remerges(spark, view_dir, seed=17, n_transactions=30, n_remerges=2)
     before = _view_state(spark, view_dir)
 
-    def files_per_bucket():
-        out = {}
-        for root, _dirs, files in os.walk(view_dir):
-            base = os.path.basename(root)
-            if base.startswith(f"{VIEW_BUCKET_COL}="):
-                out[base] = out.get(base, 0) + sum(
-                    1 for f in files if f.endswith(".parquet")
-                )
-        return out
+    def rows_on_disk():
+        return sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows
+            for root, _dirs, files in os.walk(view_dir)
+            for f in files
+            if f.endswith(".parquet")
+        )
 
-    assert max(files_per_bucket().values()) > 4, "fixture not fragmented"
-    compacted = compact_view(spark, view_dir, max_files_per_bucket=4)
+    assert rows_on_disk() > len(before), "fixture holds no dead rows"
+    compacted = compact_view(spark, view_dir)
     assert compacted, "nothing compacted"
-    assert all(n == 1 for n in files_per_bucket().values()), files_per_bucket()
+    assert rows_on_disk() == len(before)
     assert _view_state(spark, view_dir) == before
-    # idempotent / no-op when nothing exceeds the threshold
-    assert compact_view(spark, view_dir, max_files_per_bucket=4) == []
+    # idempotent / no-op when no generation holds dead rows
+    assert compact_view(spark, view_dir) == []
+    _assert_no_orphans(spark, view_dir)
 
 
 @pytest.mark.parametrize("kill_step", ["staged", "committed"])
@@ -813,25 +834,10 @@ def test_compact_view_kill_mid_commit_then_rerun(spark, tmp_path, kill_step):
     """A kill around compaction's single manifest write plus a re-run must
     leave exactly the original rows (compaction changes layout, never
     data)."""
-    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
-        compact_view,
-        parquet_upsert_sink,
-    )
+    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import compact_view
 
     view_dir = str(tmp_path / "view")
-    events = generate_event_log(seed=19, n_transactions=24)
-    tx_ids = sorted({e["transactionId"] for e in events})
-    sink = parquet_upsert_sink(view_dir, n_buckets=2)
-    for i, tx in enumerate(tx_ids):
-        sink(
-            transactions_view_from_log(
-                spark.createDataFrame(
-                    [e for e in events if e["transactionId"] == tx],
-                    schema=EVENT_ENVELOPE_TYPE,
-                )
-            ),
-            epoch_id=i,
-        )
+    _one_merge_then_remerges(spark, view_dir, seed=19, n_transactions=24, n_remerges=1)
     before = _view_state(spark, view_dir)
 
     class Kill(RuntimeError):
@@ -842,9 +848,157 @@ def test_compact_view_kill_mid_commit_then_rerun(spark, tmp_path, kill_step):
             raise Kill(step)
 
     with pytest.raises(Kill):
-        compact_view(spark, view_dir, max_files_per_bucket=1, failpoint=failpoint)
-    compact_view(spark, view_dir, max_files_per_bucket=1)
+        compact_view(spark, view_dir, failpoint=failpoint)
+    compact_view(spark, view_dir)
     assert _view_state(spark, view_dir) == before
+    _assert_no_orphans(spark, view_dir)
+
+
+def test_generation_files_follow_write_tasks_not_buckets(spark, tmp_path):
+    """A merge writes one file per write task, not one per touched bucket:
+    a batch touching every bucket writes fewer files than there are
+    buckets, and re-merging one bucket never grows the file count of the
+    generation that serves it."""
+    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        current_commit,
+        parquet_upsert_sink,
+        view_bucket,
+    )
+
+    n_buckets = 16
+    view_dir = str(tmp_path / "view")
+    events = generate_event_log(seed=41, n_transactions=120)
+    batch = transactions_view_from_log(
+        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
+    )
+    sink = parquet_upsert_sink(view_dir, n_buckets=n_buckets)
+    sink(batch, epoch_id=0)
+    _, payload = current_commit(spark, view_dir)
+    assert len(payload["buckets"]) == n_buckets, "fixture misses a bucket"
+
+    def files_under(rel):
+        return sum(
+            f.endswith(".parquet")
+            for _root, _dirs, files in os.walk(os.path.join(view_dir, rel))
+            for f in files
+        )
+
+    assert files_under("data") < n_buckets
+
+    one_tx = events[0]["transactionId"]
+    bucket = str(
+        spark.range(1).select(view_bucket(F.lit(one_tx), n_buckets)).first()[0]
+    )
+    one = transactions_view_from_log(
+        spark.createDataFrame(
+            [e for e in events if e["transactionId"] == one_tx],
+            schema=EVENT_ENVELOPE_TYPE,
+        )
+    )
+    counts = [files_under(payload["buckets"][bucket])]
+    for epoch in range(1, 5):
+        sink(one, epoch_id=epoch)
+        _, payload = current_commit(spark, view_dir)
+        counts.append(files_under(payload["buckets"][bucket]))
+    assert all(b <= a for a, b in zip(counts, counts[1:])), counts
+
+
+def test_merge_pushes_the_touched_buckets_into_the_old_state_scan(
+    spark, tmp_path, monkeypatch
+):
+    """The merge reads old rows from generations that also serve other
+    buckets; its ``_bucket IN touched`` conjunct must reach the parquet scan
+    as a pushed filter, so that row groups of other buckets (the files are
+    sorted by bucket) are skipped, instead of being evaluated only after
+    every row is read."""
+    import contextlib
+    import io
+
+    from pagopa_ecommerce_cdc_service_spark.streaming import pipeline
+
+    view_dir = str(tmp_path / "view")
+    sink = pipeline.parquet_upsert_sink(view_dir, n_buckets=16, key_col="k")
+    sink(spark.range(200).selectExpr("id AS k", "id * 2 AS v"), epoch_id=0)
+
+    plans = []
+    write = pipeline._write_generation
+
+    def capture(rows, *args):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            rows.explain()
+        plans.append(out.getvalue())
+        return write(rows, *args)
+
+    monkeypatch.setattr(pipeline, "_write_generation", capture)
+    sink(spark.createDataFrame([(7, 0)], "k bigint, v bigint"), epoch_id=1)
+    scan = next(line for line in plans[0].splitlines() if "FileScan parquet" in line)
+    pushed = scan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    assert "(_bucket," in pushed, scan
+    assert pipeline.read_view(spark, view_dir).count() == 200
+
+
+def test_sink_merges_into_a_version_1_view(spark, tmp_path):
+    """A view written before generations were shared (manifest version 1:
+    one ``partitionBy(_bucket)`` dir per bucket, no layout columns in the
+    files) stays readable, takes merges that leave some of its bucket
+    dirs live beside the new generations, and compacts into the new
+    layout, equal to the batch fold throughout."""
+    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        VIEW_BUCKET_COL,
+        _write_commit,
+        compact_view,
+        current_commit,
+        parquet_upsert_sink,
+        view_bucket,
+    )
+
+    view_dir = str(tmp_path / "view")
+    events = generate_event_log(seed=43, n_transactions=30)
+    tx_ids = sorted({e["transactionId"] for e in events})
+
+    def fold(evs):
+        return transactions_view_from_log(
+            spark.createDataFrame(evs, schema=EVENT_ENVELOPE_TYPE)
+        )
+
+    def state(df):
+        return {r["transactionId"]: r.asDict(recursive=True) for r in df.collect()}
+
+    # the old writer: every transaction but tx0, and tx1 only up to its
+    # first event; tx0 and tx1 then arrive in full
+    first_tx1 = min((e for e in events if e["transactionId"] == tx_ids[1]),
+                    key=lambda e: e["seq"])
+    old_events = [e for e in events if e["transactionId"] not in tx_ids[:2]]
+    gen = "g-0-legacy00"
+    fold(old_events + [first_tx1]).withColumn(
+        VIEW_BUCKET_COL, view_bucket("transactionId", 4)
+    ).write.partitionBy(VIEW_BUCKET_COL).parquet(f"{view_dir}/data/{gen}")
+    buckets = {
+        name.split("=", 1)[1]: f"data/{gen}/{name}"
+        for name in os.listdir(f"{view_dir}/data/{gen}")
+        if name.startswith(f"{VIEW_BUCKET_COL}=")
+    }
+    assert len(buckets) == 4
+    _write_commit(
+        spark, view_dir, 1,
+        {"version": 1, "n_buckets": 4, "key_col": "transactionId", "buckets": buckets},
+    )
+    assert _view_state(spark, view_dir) == state(fold(old_events + [first_tx1]))
+
+    parquet_upsert_sink(view_dir, n_buckets=4)(
+        fold([e for e in events if e["transactionId"] in tx_ids[:2]]), epoch_id=1
+    )
+    _, payload = current_commit(spark, view_dir)
+    assert payload["version"] == 2
+    legacy = {b for b, rel in payload["buckets"].items() if rel.startswith(f"data/{gen}/")}
+    assert 0 < len(legacy) < 4, "fixture must leave version-1 buckets live"
+    expected = state(fold(events))
+    assert _view_state(spark, view_dir) == expected
+
+    assert sorted(compact_view(spark, view_dir)) == sorted(int(b) for b in legacy)
+    assert _view_state(spark, view_dir) == expected
+    assert compact_view(spark, view_dir) == []
     _assert_no_orphans(spark, view_dir)
 
 
@@ -961,7 +1115,7 @@ def test_upsert_sink_soak_many_batches_with_crashes_and_compaction(
                 )(batch_df, epoch_id=i)
         sink(batch_df, epoch_id=i)  # normal run / checkpoint replay
         if i % 7 == 6:
-            compact_view(spark, view_dir, max_files_per_bucket=3)
+            compact_view(spark, view_dir)
 
     final = _view_state(spark, view_dir)
     assert_views_equal(final, replay_reference(events))
@@ -1070,7 +1224,7 @@ def test_upsert_sink_generic_key_column(spark, tmp_path):
     assert merged.count() == 40
     target = one.collect()[0]["doc_id"]
     assert merged.filter(F.col("doc_id") == target).collect()[0]["lang"] == "xx"
-    compact_view(spark, view_dir, max_files_per_bucket=1)
+    assert compact_view(spark, view_dir)
     assert read_view(spark, view_dir).count() == 40
 
 
@@ -1154,6 +1308,7 @@ def test_manifest_gc_with_concurrent_readers(spark, tmp_path):
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
         current_commit,
         parquet_upsert_sink,
+        read_commit,
         valid_commits,
     )
 
@@ -1175,9 +1330,8 @@ def test_manifest_gc_with_concurrent_readers(spark, tmp_path):
                 if seq is None:
                     time.sleep(0.02)
                     continue
-                dirs = [f"{view_dir}/{rel}" for rel in payload["buckets"].values()]
                 time.sleep(0.05)  # linger inside the grace window
-                n = spark.read.parquet(*dirs).count()
+                n = read_commit(spark, view_dir, payload).count()
                 with lock:
                     expected = counts_by_seq.get(seq)
                 if expected is not None and n != expected:
@@ -1195,9 +1349,8 @@ def test_manifest_gc_with_concurrent_readers(spark, tmp_path):
                     time.sleep(0.02)
                     continue
                 seq, payload = retained[1]  # second-newest retained commit
-                dirs = [f"{view_dir}/{rel}" for rel in payload["buckets"].values()]
                 time.sleep(0.05)
-                n = spark.read.parquet(*dirs).count()
+                n = read_commit(spark, view_dir, payload).count()
                 with lock:
                     expected = counts_by_seq.get(seq)
                 if expected is not None and n != expected:
