@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql
 from ..operators.cdc_fold import fold_transactions_view, prepare_events
-from ..schemas import TRANSACTION_VIEW_CLASS
+from ..schemas import TRANSACTION_VIEW_CLASS, TRANSACTIONS_VIEW_TYPE
 from .helpers import read
 
 # index 0..18 = the 19 known codes (event_mapping order is semantic, this
@@ -134,50 +134,42 @@ def synthesize_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _payment_notice_proj():
-    """Deterministic scalars of the folded paymentNotices array — hash-stable
-    across Spark→pandas and DuckDB→pandas (a raw array<struct> column would
-    compare list-of-Rows vs ndarray-of-dicts); null array ⇒ all three null.
-    Lazy (column exprs need an active session at call time, not import)."""
-    return (
-        F.when(F.col("paymentNotices").isNotNull(), F.size("paymentNotices"))
-        .alias("paymentNoticesCount"),
-        F.expr(
+# The gated view: the fold's columns in TRANSACTIONS_VIEW_TYPE order, each
+# nested one flattened into scalars that hash the same from Spark→pandas and
+# DuckDB→pandas (a raw array<struct> column would compare list-of-Rows vs
+# ndarray-of-dicts; a null paymentNotices ⇒ all three of its scalars null).
+# The columns are built per call: column expressions need an active session.
+_FLATTENED = {
+    "paymentNotices": {
+        "paymentNoticesCount": lambda: F.when(
+            F.col("paymentNotices").isNotNull(), F.size("paymentNotices")
+        ),
+        "paymentNoticesTotal": lambda: F.expr(
             "aggregate(paymentNotices, CAST(0 AS BIGINT), (acc, x) -> acc + x.amount)"
-        ).alias("paymentNoticesTotal"),
-        F.when(
+        ),
+        "firstPaymentToken": lambda: F.when(
             F.col("paymentNotices").isNotNull(),
             F.element_at("paymentNotices", 1)["paymentToken"],
-        ).alias("firstPaymentToken"),
-    )
+        ),
+    },
+    "closureErrorData": {
+        "closureHttpErrorCode": lambda: F.col("closureErrorData.httpErrorCode"),
+    },
+}
+_VIEW_COLS = tuple(
+    c for f in TRANSACTIONS_VIEW_TYPE.fieldNames() for c in _FLATTENED.get(f, (f,))
+)
+
+
+def _gate_view(view: DataFrame) -> DataFrame:
+    """A fold's view projected to the gated columns, :data:`_VIEW_COLS`."""
+    flat = {c: make for cols in _FLATTENED.values() for c, make in cols.items()}
+    return view.select(*(flat[c]().alias(c) if c in flat else c for c in _VIEW_COLS))
 
 
 def cdc_transactions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = synthesize_envelope(spark, sf_dir)
-    view = fold_transactions_view(prepare_events(env))
-    return view.select(
-        "transactionId",
-        "email",
-        *_payment_notice_proj(),
-        "clientId",
-        "creationDate",
-        "userId",
-        "status",
-        "lastProcessedEventAt",
-        "paymentGateway",
-        "paymentTypeCode",
-        "pspId",
-        "feeTotal",
-        "authorizationRequestId",
-        "authorizationCode",
-        "rrn",
-        "gatewayAuthorizationStatus",
-        "endToEndId",
-        "authorizationErrorCode",
-        "sendPaymentResultOutcome",
-        F.col("closureErrorData.httpErrorCode").alias("closureHttpErrorCode"),
-        "_class",
-    )
+    return _gate_view(fold_transactions_view(prepare_events(env)))
 
 
 # ---------------------------------------------------------------------------
@@ -338,84 +330,76 @@ ORACLES = {"cdc_transactions_view": ORACLE_SQL}
 # to the first 3000 events for gate latency) is replayed through the real
 # production pipeline — file readStream → prepare_events →
 # applyInPandasWithState incremental fold → foreachBatch bucketed parquet
-# upsert sink — in TWO phases that share one checkpoint: the first query
-# folds the first half of the log and is stopped; a second query starts
-# against the same checkpoint, recovers the per-key state store and file
-# log, and folds only the files that "arrived" while it was down. The
-# maintained view on disk must then hash-match the pure-SQL oracle of the
-# batch fold: batch ≡ streaming-with-restart-and-upsert-sink ≡ SQL
-# (S1-S5 + fold + ST2 under one hard gate).
+# upsert sink — as TWO drains that share one checkpoint (_restart_gate): the
+# first folds the first half of the log and stops; the second recovers the
+# per-key state store and file log, and folds only the files that "arrived"
+# while no query ran. The maintained view on disk must then hash-match the
+# pure-SQL oracle of the batch fold: batch ≡
+# streaming-with-restart-and-upsert-sink ≡ SQL (S1-S5 + fold + ST2 under one
+# hard gate).
 # ---------------------------------------------------------------------------
 _STREAM_LIMIT = 3000
+# the events source every fold oracle scans; the stream window and the
+# change feed's cutoff are spliced into it
+_CF_EVENTS_SRC = (
+    "FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value "
+    "FROM events) events"
+)
 
 
-def _run_gate_phase(spark: SparkSession, src: str, view_dir: str, ckpt: str) -> None:
-    from ..streaming.pipeline import start_view_maintenance
-
-    # few hundred keys at gate scale: 8 buckets keeps each merge's old-state
-    # read to a few touched buckets (files written follow the write tasks,
-    # not the bucket count)
-    q = start_view_maintenance(spark, src, view_dir, ckpt, n_buckets=8)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+def _stream_window(sql: str) -> str:
+    """A fold oracle cut to the stream window (``event_id < _STREAM_LIMIT``)."""
+    assert sql.count(_CF_EVENTS_SRC) == 1, "stream-window splice target moved"
+    return sql.replace(
+        _CF_EVENTS_SRC,
+        _CF_EVENTS_SRC[:-8] + f" WHERE event_id < {_STREAM_LIMIT}) events",
+    )
 
 
-def cdc_stream_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipeline import read_view
-    from ..streaming.state_fold import POISONED_COL
+def _restart_gate(
+    spark: SparkSession, sf_dir: str, prefix: str, to_updates
+) -> DataFrame:
+    """Replay the stream window of the synthetic log through ``to_updates``
+    (raw event stream → keyed update stream) into the upsert sink, as two
+    drains on ONE checkpoint: the first folds half A of the log; half B
+    "arrives" while no query runs, and the second recovers the state store
+    and file log and folds only half B. Returns the maintained table."""
+    from ..streaming.pipeline import (
+        drain,
+        parquet_upsert_sink,
+        read_event_stream,
+        read_view,
+    )
     from .helpers import gate_workdir, write_single_file
 
     env = synthesize_envelope(spark, sf_dir).filter(F.col("seq") < _STREAM_LIMIT)
-    workdir = gate_workdir("cdc-stream-gate-")
+    workdir = gate_workdir(prefix)
     src, view_dir, ckpt = f"{workdir}/events", f"{workdir}/view", f"{workdir}/ckpt"
+    seq, cut = F.col("seq"), _STREAM_LIMIT // 2
+    # one json file → one micro-batch per drain
+    for half, rows in (("a", env.filter(seq < cut)), ("b", env.filter(seq >= cut))):
+        write_single_file(rows, f"{src}/half-{half}.json")
+        # few hundred keys at gate scale: 8 buckets keeps each merge's
+        # old-state read to a few touched buckets
+        drain(
+            to_updates(read_event_stream(spark, src))
+            .writeStream.outputMode("update")
+            .foreachBatch(parquet_upsert_sink(view_dir, n_buckets=8)),
+            ckpt,
+            f"{prefix}half-{half}",
+        )
+    return read_view(spark, view_dir)
 
-    # phase 1: first half of the log (one json file → one micro-batch)
-    write_single_file(
-        env.filter(F.col("seq") < _STREAM_LIMIT // 2), f"{src}/half-a.json"
-    )
-    _run_gate_phase(spark, src, view_dir, ckpt)
-    # the query is stopped; the second half "arrives" while it is down
-    write_single_file(
-        env.filter(F.col("seq") >= _STREAM_LIMIT // 2), f"{src}/half-b.json"
-    )
-    # phase 2: new query, SAME checkpoint — recovers state + file log, folds
-    # only the new files, upserts only the touched buckets
-    _run_gate_phase(spark, src, view_dir, ckpt)
 
-    view = read_view(spark, view_dir).drop(POISONED_COL)
-    return view.select(
-        "transactionId",
-        "email",
-        *_payment_notice_proj(),
-        "clientId",
-        "creationDate",
-        "userId",
-        "status",
-        "lastProcessedEventAt",
-        "paymentGateway",
-        "paymentTypeCode",
-        "pspId",
-        "feeTotal",
-        "authorizationRequestId",
-        "authorizationCode",
-        "rrn",
-        "gatewayAuthorizationStatus",
-        "endToEndId",
-        "authorizationErrorCode",
-        "sendPaymentResultOutcome",
-        F.col("closureErrorData.httpErrorCode").alias("closureHttpErrorCode"),
-        "_class",
+def cdc_stream_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.pipeline import stream_transactions_view
+
+    return _gate_view(
+        _restart_gate(spark, sf_dir, "cdc-stream-gate-", stream_transactions_view)
     )
 
 
-_STREAM_ORACLE_SQL = ORACLE_SQL.replace(
-    "FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events) events",
-    f"FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events "
-    f"WHERE event_id < {_STREAM_LIMIT}) events",
-)
-assert _STREAM_ORACLE_SQL != ORACLE_SQL
+_STREAM_ORACLE_SQL = _stream_window(ORACLE_SQL)
 
 QUERIES["cdc_stream_incremental_view"] = cdc_stream_incremental_view
 ORACLES["cdc_stream_incremental_view"] = _STREAM_ORACLE_SQL
@@ -542,21 +526,8 @@ _CF_NULL = "<NULL>"
 _CF_SEP = "|~|"
 _CF_MOD = 1000000007
 
-_VIEW_COLS = (
-    "transactionId", "email", "paymentNoticesCount", "paymentNoticesTotal",
-    "firstPaymentToken", "clientId", "creationDate", "userId", "status",
-    "lastProcessedEventAt", "paymentGateway", "paymentTypeCode", "pspId",
-    "feeTotal", "authorizationRequestId", "authorizationCode", "rrn",
-    "gatewayAuthorizationStatus", "endToEndId", "authorizationErrorCode",
-    "sendPaymentResultOutcome", "closureHttpErrorCode", "_class",
-)
-
 _CF_CUT_SQL = (
     "(SELECT CAST(FLOOR((MAX(event_id) * 2.0) / 50.0) AS BIGINT) FROM events)"
-)
-_CF_EVENTS_SRC = (
-    "FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value "
-    "FROM events) events"
 )
 _CF_EVENTS_SRC_CUT = _CF_EVENTS_SRC[:-8] + f" WHERE event_id <= {_CF_CUT_SQL}) events"
 
@@ -638,30 +609,7 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     env0 = _v0_envelope(env)
 
     def view(e):
-        v = fold_transactions_view(prepare_events(e))
-        return v.select(
-            "transactionId",
-            "email",
-            *_payment_notice_proj(),
-            "clientId",
-            "creationDate",
-            "userId",
-            "status",
-            "lastProcessedEventAt",
-            "paymentGateway",
-            "paymentTypeCode",
-            "pspId",
-            "feeTotal",
-            "authorizationRequestId",
-            "authorizationCode",
-            "rrn",
-            "gatewayAuthorizationStatus",
-            "endToEndId",
-            "authorizationErrorCode",
-            "sendPaymentResultOutcome",
-            F.col("closureErrorData.httpErrorCode").alias("closureHttpErrorCode"),
-            "_class",
-        )
+        return _gate_view(fold_transactions_view(prepare_events(e)))
 
     h1 = _cf_rowhash(view(env)).withColumnRenamed("h", "h1")
     h0 = (
@@ -867,30 +815,7 @@ _ASOF_MS = 1705363200000  # 2024-01-16T00:00:00Z — mid-range at every SF
 def cdc_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = synthesize_envelope(spark, sf_dir)
     prepared = prepare_events(env).filter(F.col("_ts_millis") <= _ASOF_MS)
-    view = fold_transactions_view(prepared)
-    return view.select(
-        "transactionId",
-        "email",
-        *_payment_notice_proj(),
-        "clientId",
-        "creationDate",
-        "userId",
-        "status",
-        "lastProcessedEventAt",
-        "paymentGateway",
-        "paymentTypeCode",
-        "pspId",
-        "feeTotal",
-        "authorizationRequestId",
-        "authorizationCode",
-        "rrn",
-        "gatewayAuthorizationStatus",
-        "endToEndId",
-        "authorizationErrorCode",
-        "sendPaymentResultOutcome",
-        F.col("closureErrorData.httpErrorCode").alias("closureHttpErrorCode"),
-        "_class",
-    )
+    return _gate_view(fold_transactions_view(prepared))
 
 
 # oracle: the batch-fold oracle with the cutoff added to the `valid` CTE —
@@ -898,11 +823,17 @@ def cdc_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # anchor must appear exactly once; the assert keeps the splice honest if
 # ORACLE_SQL is ever reworked.
 _ASOF_ANCHOR = "WHERE op = 'insert' AND ttl IS NULL AND code IN"
-assert ORACLE_SQL.count(_ASOF_ANCHOR) == 1
-ASOF_ORACLE_SQL = ORACLE_SQL.replace(
-    _ASOF_ANCHOR,
-    f"WHERE ts_ms <= {_ASOF_MS} AND op = 'insert' AND ttl IS NULL AND code IN",
-)
+
+
+def _asof_spliced(ms: int) -> str:
+    assert ORACLE_SQL.count(_ASOF_ANCHOR) == 1
+    return ORACLE_SQL.replace(
+        _ASOF_ANCHOR,
+        f"WHERE ts_ms <= {ms} AND op = 'insert' AND ttl IS NULL AND code IN",
+    )
+
+
+ASOF_ORACLE_SQL = _asof_spliced(_ASOF_MS)
 
 QUERIES["cdc_asof_snapshot"] = cdc_asof_snapshot
 ORACLES["cdc_asof_snapshot"] = ASOF_ORACLE_SQL
@@ -924,8 +855,9 @@ ORACLES["cdc_asof_snapshot"] = ASOF_ORACLE_SQL
 # drop-and-log tolerance (:122-135).
 # ---------------------------------------------------------------------------
 def cdc_pyds_envelope_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .helpers import gate_workdir, write_single_file
     from ..sources import pyds
+    from ..streaming.pipeline import drain
+    from .helpers import gate_workdir, write_single_file
 
     pyds.register(spark)
     ev = read(spark, sf_dir, "events")
@@ -946,23 +878,17 @@ def cdc_pyds_envelope_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def drain_once() -> None:
-        q = (
+        drain(
             spark.readStream.format(pyds.SOURCE_NAME)
             .option("path", src)
             .option("maxFilesPerBatch", "1")
             .load()
             .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ckpt,
+            "cdc_pyds_envelope_feed",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "cdc_pyds_envelope_feed: availableNow run did not complete in 240s"
-            )
 
     # run 1 drains the prefetched first file; run 2 RESUMES from the
     # committed {"pos": 1} offset and drains the second — two files, two
@@ -1049,14 +975,6 @@ def cdc_view_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _asof_spliced(ms: int) -> str:
-    assert ORACLE_SQL.count(_ASOF_ANCHOR) == 1
-    return ORACLE_SQL.replace(
-        _ASOF_ANCHOR,
-        f"WHERE ts_ms <= {ms} AND op = 'insert' AND ttl IS NULL AND code IN",
-    )
-
-
 VIEW_DIFF_ORACLE_SQL = f"""
 WITH o AS (
   SELECT transactionId, status AS old_status,
@@ -1105,6 +1023,7 @@ ORACLES["cdc_view_diff"] = VIEW_DIFF_ORACLE_SQL
 # ---------------------------------------------------------------------------
 def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import (
+        drain,
         parquet_upsert_sink,
         read_event_stream,
         read_view,
@@ -1144,43 +1063,12 @@ def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = incremental_view(
         events.unionByName(seed_stream(spark, seed_dir), allowMissingColumns=True)
     )
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        out.writeStream.foreachBatch(sink).outputMode("update"),
+        ckpt,
+        "cdc_bootstrap_handoff",
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "cdc_bootstrap_handoff: availableNow run did not finish in 240s"
-        )
-
-    view = read_view(spark, view_dir).drop(POISONED_COL)
-    return view.select(
-        "transactionId",
-        "email",
-        *_payment_notice_proj(),
-        "clientId",
-        "creationDate",
-        "userId",
-        "status",
-        "lastProcessedEventAt",
-        "paymentGateway",
-        "paymentTypeCode",
-        "pspId",
-        "feeTotal",
-        "authorizationRequestId",
-        "authorizationCode",
-        "rrn",
-        "gatewayAuthorizationStatus",
-        "endToEndId",
-        "authorizationErrorCode",
-        "sendPaymentResultOutcome",
-        F.col("closureErrorData.httpErrorCode").alias("closureHttpErrorCode"),
-        "_class",
-    )
+    return _gate_view(read_view(spark, view_dir))
 
 
 QUERIES["cdc_bootstrap_handoff"] = cdc_bootstrap_handoff
@@ -1410,43 +1298,14 @@ ORACLES["cdc_field_lineage"] = CDC_FIELD_LINEAGE_ORACLE_SQL
 # of the log: batch law ≡ streaming-with-restart ≡ SQL.
 # ---------------------------------------------------------------------------
 def cdc_stream_field_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipeline import (
-        parquet_upsert_sink,
-        read_event_stream,
-        read_view,
-    )
     from ..streaming.state_fold import incremental_field_lineage
-    from .helpers import gate_workdir, write_single_file
 
-    env = synthesize_envelope(spark, sf_dir).filter(F.col("seq") < _STREAM_LIMIT)
-    workdir = gate_workdir("cdc-lineage-gate-")
-    src, view_dir, ckpt = f"{workdir}/events", f"{workdir}/lin", f"{workdir}/ckpt"
-
-    def run_phase() -> None:
-        out = incremental_field_lineage(
-            prepare_events(read_event_stream(spark, src))
-        )
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(parquet_upsert_sink(view_dir, n_buckets=8))
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    write_single_file(
-        env.filter(F.col("seq") < _STREAM_LIMIT // 2), f"{src}/half-a.json"
+    table = _restart_gate(
+        spark,
+        sf_dir,
+        "cdc-lineage-gate-",
+        lambda raw: incremental_field_lineage(prepare_events(raw)),
     )
-    run_phase()
-    write_single_file(
-        env.filter(F.col("seq") >= _STREAM_LIMIT // 2), f"{src}/half-b.json"
-    )
-    run_phase()
-
-    table = read_view(spark, view_dir)
     e = table.select(
         "transactionId", F.explode("lineage").alias("e")
     )
@@ -1460,15 +1319,8 @@ def cdc_stream_field_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_LINEAGE_ORACLE_SQL = CDC_FIELD_LINEAGE_ORACLE_SQL.replace(
-    "FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events) events",
-    f"FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events "
-    f"WHERE event_id < {_STREAM_LIMIT}) events",
-)
-assert _STREAM_LINEAGE_ORACLE_SQL != CDC_FIELD_LINEAGE_ORACLE_SQL
-
 QUERIES["cdc_stream_field_lineage"] = cdc_stream_field_lineage
-ORACLES["cdc_stream_field_lineage"] = _STREAM_LINEAGE_ORACLE_SQL
+ORACLES["cdc_stream_field_lineage"] = _stream_window(CDC_FIELD_LINEAGE_ORACLE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1487,44 +1339,15 @@ ORACLES["cdc_stream_field_lineage"] = _STREAM_LINEAGE_ORACLE_SQL
 # deployed-mode certification.
 # ---------------------------------------------------------------------------
 def cdc_stream_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipeline import (
-        parquet_upsert_sink,
-        read_event_stream,
-        read_view,
-    )
     from ..streaming.state_fold import incremental_status_history
-    from .helpers import gate_workdir, write_single_file
-
-    env = synthesize_envelope(spark, sf_dir).filter(F.col("seq") < _STREAM_LIMIT)
-    workdir = gate_workdir("cdc-hist-gate-")
-    src, view_dir, ckpt = f"{workdir}/events", f"{workdir}/hist", f"{workdir}/ckpt"
-
-    def run_phase() -> None:
-        out = incremental_status_history(
-            prepare_events(read_event_stream(spark, src))
-        )
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(parquet_upsert_sink(view_dir, n_buckets=8))
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    write_single_file(
-        env.filter(F.col("seq") < _STREAM_LIMIT // 2), f"{src}/half-a.json"
-    )
-    run_phase()
-    write_single_file(
-        env.filter(F.col("seq") >= _STREAM_LIMIT // 2), f"{src}/half-b.json"
-    )
-    run_phase()
 
     return (
-        read_view(spark, view_dir)
+        _restart_gate(
+            spark,
+            sf_dir,
+            "cdc-hist-gate-",
+            lambda raw: incremental_status_history(prepare_events(raw)),
+        )
         .select("transactionId", "history")
         .select(
             "transactionId",
@@ -1544,12 +1367,5 @@ def cdc_stream_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_HISTORY_ORACLE_SQL = CDC_STATUS_HISTORY_ORACLE_SQL.replace(
-    "FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events) events",
-    f"FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events "
-    f"WHERE event_id < {_STREAM_LIMIT}) events",
-)
-assert _STREAM_HISTORY_ORACLE_SQL != CDC_STATUS_HISTORY_ORACLE_SQL
-
 QUERIES["cdc_stream_status_history"] = cdc_stream_status_history
-ORACLES["cdc_stream_status_history"] = _STREAM_HISTORY_ORACLE_SQL
+ORACLES["cdc_stream_status_history"] = _stream_window(CDC_STATUS_HISTORY_ORACLE_SQL)

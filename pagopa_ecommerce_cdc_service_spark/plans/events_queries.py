@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..streaming.pipeline import drain_to_memory
 from .helpers import dec, money_sum, read
 
 QUERIES = {}
@@ -229,7 +230,6 @@ def w_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -252,28 +252,18 @@ def w_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dump(flush, "flush", now - 10)
 
-    name = f"swt_{uuid.uuid4().hex[:8]}"
-    q = (
+    stream = (
         spark.readStream.schema("ts timestamp, event_type string, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), money_sum(dec("value"), "sum_value"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_tumbling_hourly: availableNow run did not complete in 240s"
-        )
     return (
-        spark.table(name)
+        drain_to_memory(
+            stream, "append", f"{workdir}/ckpt", "w_stream_tumbling_hourly"
+        )
         .filter(F.col("event_type") != "__flush__")
         .select(
             F.col("w.start").alias("hour_start"),
@@ -310,7 +300,6 @@ def w_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -326,9 +315,8 @@ def w_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     dump(ev, "original", now - 20)
     dump(ev.filter(F.col("event_id") % 3 == 0), "redelivered", now - 10)
 
-    name = f"sdw_{uuid.uuid4().hex[:8]}"
     schema = "event_id bigint, ts timestamp, event_type string, value double"
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
@@ -336,21 +324,11 @@ def w_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         # dropped row is provably the dedup state's decision
         .withWatermark("ts", "365 days")
         .dropDuplicatesWithinWatermark(["event_id"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_dedup_within_watermark: availableNow run did not "
-            "complete in 240s"
-        )
     return (
-        spark.table(name)
+        drain_to_memory(
+            stream, "append", f"{workdir}/ckpt", "w_stream_dedup_within_watermark"
+        )
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -389,7 +367,6 @@ def w_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def w_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -417,26 +394,14 @@ def w_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dump(ev.filter(F.col("user_id") % 2 == 0), "even", now - 20)
     dump(ev.filter(F.col("user_id") % 2 == 1), "odd", now - 10)
 
-    name = f"sse_{uuid.uuid4().hex[:8]}"
-    q = (
+    stream = (
         spark.readStream.schema("user_id bigint, event_type string, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .join(F.broadcast(dim), "user_id", "inner")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_static_enrich: availableNow run did not complete in 240s"
-        )
     return (
-        spark.table(name)
+        drain_to_memory(stream, "append", f"{workdir}/ckpt", "w_stream_static_enrich")
         .groupBy("mktsegment", "nation_name", "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -1527,7 +1492,6 @@ def w_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -1581,23 +1545,10 @@ def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_join_click_purchase: availableNow run did not "
-            "complete in 240s"
-        )
     return (
-        spark.table(name)
+        drain_to_memory(
+            joined, "append", f"{workdir}/ckpt", "w_stream_join_click_purchase"
+        )
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(
             F.count("*").alias("n_pairs"),
@@ -1650,7 +1601,6 @@ def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -1675,8 +1625,7 @@ def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dump(flush, "flush", now - 10)
 
-    name = f"ssw_{uuid.uuid4().hex[:8]}"
-    q = (
+    stream = (
         spark.readStream.schema(
             "event_id bigint, ts timestamp, user_id bigint, value double"
         )
@@ -1691,20 +1640,9 @@ def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             money_sum(dec("value"), "sum_value"),
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_session_windows: availableNow run did not complete in 240s"
-        )
     return (
-        spark.table(name)
+        drain_to_memory(stream, "append", f"{workdir}/ckpt", "w_stream_session_windows")
         .filter(F.col("user_id") >= 0)
         .select(
             "user_id",
@@ -1752,7 +1690,6 @@ def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -1821,22 +1758,10 @@ def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     )
-    name = f"slj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_left_join_clicks: availableNow run did not complete in 240s"
-        )
     return (
-        spark.table(name)
+        drain_to_memory(
+            joined, "append", f"{workdir}/ckpt", "w_stream_left_join_clicks"
+        )
         .filter(F.col("c_user") >= 0)
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(
@@ -1972,7 +1897,6 @@ def w_interval_overlap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("w_stream_hist_merge", _hist_quantiles_oracle())
 def w_stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -1989,7 +1913,6 @@ def w_stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
     )
 
-    name = f"shg_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("event_id bigint, event_type string, value double")
         .option("maxFilesPerTrigger", 1)
@@ -2000,20 +1923,9 @@ def w_stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("cnt"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    hist = drain_to_memory(
+        stream, "complete", f"{workdir}/ckpt", "w_stream_hist_merge"
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_hist_merge: availableNow run did not complete in 240s"
-        )
-    hist = spark.table(name)
     return _hist_quantile_report(hist, ev)
 
 
@@ -2087,7 +1999,6 @@ _TRANS_SPLIT_TS = "2024-01-16 00:00:00"
 
 def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
@@ -2141,22 +2052,10 @@ def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-    name = f"set_{uuid.uuid4().hex[:8]}"
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_event_transitions: availableNow run did not complete in 240s"
-        )
     agg = (
-        spark.table(name)
+        drain_to_memory(
+            pairs, "append", f"{workdir}/ckpt", "w_stream_event_transitions"
+        )
         .groupBy("prev_type", "curr_type")
         .agg(F.count("*").alias("n"))
     )
@@ -2278,7 +2177,6 @@ def w_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def w_stream_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -2295,7 +2193,6 @@ def w_stream_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
     )
 
-    name = f"sad_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("event_id bigint, event_type string, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -2303,24 +2200,14 @@ def w_stream_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
         .agg(F.count("*").alias("cnt"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    grid = drain_to_memory(
+        stream, "complete", f"{workdir}/ckpt", "w_stream_anomaly_days"
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_anomaly_days: availableNow run did not complete in 240s"
-        )
     # persist the bounded grid before the flag self-joins (a memory-table
     # lineage joined against itself trips conflicting-reference resolution;
     # a deployed monitor checkpoints its grid anyway)
     grid_dir = f"{workdir}/grid"
-    spark.table(name).write.mode("overwrite").parquet(grid_dir)
+    grid.write.mode("overwrite").parquet(grid_dir)
     return _anomaly_flags(spark.read.parquet(grid_dir))
 
 
@@ -3166,7 +3053,6 @@ def _cusum_flags(daily: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 def w_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -3183,7 +3069,6 @@ def w_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
     )
 
-    name = f"scu_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("event_id bigint, event_type string, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -3191,21 +3076,9 @@ def w_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_cusum: availableNow run did not complete in 240s"
-        )
+    grid = drain_to_memory(stream, "complete", f"{workdir}/ckpt", "w_stream_cusum")
     grid_dir = f"{workdir}/grid"
-    spark.table(name).write.mode("overwrite").parquet(grid_dir)
+    grid.write.mode("overwrite").parquet(grid_dir)
     return _cusum_flags(spark.read.parquet(grid_dir))
 
 
@@ -3225,7 +3098,6 @@ ORACLES["w_stream_cusum"] = ORACLES["w_cusum_changepoint"]
 # ---------------------------------------------------------------------------
 def w_stream_rolling_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -3242,7 +3114,6 @@ def w_stream_rolling_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
     )
 
-    name = f"sdau_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -3250,21 +3121,11 @@ def w_stream_rolling_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    grid = drain_to_memory(
+        stream, "complete", f"{workdir}/ckpt", "w_stream_rolling_dau_wau"
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_rolling_dau_wau: availableNow run did not complete in 240s"
-        )
     grid_dir = f"{workdir}/grid"
-    spark.table(name).write.mode("overwrite").parquet(grid_dir)
+    grid.write.mode("overwrite").parquet(grid_dir)
     ud = spark.read.parquet(grid_dir).select("user_id", "day")
     return _dau_wau_from_grid(ud)
 
@@ -3286,7 +3147,6 @@ ORACLES["w_stream_rolling_dau_wau"] = ORACLES["w_rolling_dau_wau"]
 # ---------------------------------------------------------------------------
 def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
-    import uuid
 
     import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
@@ -3336,23 +3196,11 @@ def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-    name = f"smk_{uuid.uuid4().hex[:8]}"
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_markov_stationary: availableNow run did not finish in 240s"
-        )
     wt = Window.partitionBy("cur")
     m = (
-        spark.table(name)
+        drain_to_memory(
+            pairs, "append", f"{workdir}/ckpt", "w_stream_markov_stationary"
+        )
         .groupBy(
             F.col("prev_type").alias("cur"), F.col("curr_type").alias("nxt")
         )
@@ -3382,7 +3230,6 @@ ORACLES["w_stream_markov_stationary"] = ORACLES["w_markov_stationary"]
 # ---------------------------------------------------------------------------
 def _drain_stream_grid(spark, sf_dir, prefix, cols, agg_exprs, group_cols):
     import time as _time
-    import uuid
 
     from .helpers import gate_workdir, write_staged_file
 
@@ -3404,7 +3251,6 @@ def _drain_stream_grid(spark, sf_dir, prefix, cols, agg_exprs, group_cols):
             for c in cols
         ]
     )
-    name = f"sg_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3412,19 +3258,9 @@ def _drain_stream_grid(spark, sf_dir, prefix, cols, agg_exprs, group_cols):
         .groupBy(*group_cols)
         .agg(*agg_exprs)
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(f"{prefix}: availableNow run did not finish in 240s")
+    grid = drain_to_memory(stream, "complete", f"{workdir}/ckpt", prefix)
     grid_dir = f"{workdir}/grid"
-    spark.table(name).write.mode("overwrite").parquet(grid_dir)
+    grid.write.mode("overwrite").parquet(grid_dir)
     return spark.read.parquet(grid_dir)
 
 

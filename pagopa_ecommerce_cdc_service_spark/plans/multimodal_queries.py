@@ -18,6 +18,7 @@ from ..operators.multimodal import (
     synthesize_bmp_media,
     synthesize_wav_media,
 )
+from ..streaming.pipeline import drain
 from .helpers import read, spread
 
 QUERIES = {}
@@ -682,21 +683,14 @@ def mm_stream_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             sig.unpersist()
 
     def run_incarnation(n_files: int) -> None:
-        q = (
+        drain(
             spark.readStream.schema("media_id bigint, payload binary")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(merge),
+            f"{workdir}/ckpt",
+            f"mm_stream_image_near_dup ({n_files} files)",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "mm_stream_image_near_dup: availableNow run did not "
-                f"complete in 240s ({n_files} files)"
-            )
 
     # restart leg: incarnation 1 drains the two staged files; the third
     # appears only after the handoff and is picked up from the checkpoint
@@ -1037,21 +1031,14 @@ def mm_stream_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             sig.unpersist()
 
     def run_incarnation(n_files: int) -> None:
-        q = (
+        drain(
             spark.readStream.schema("media_id bigint, payload binary")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(merge),
+            f"{workdir}/ckpt",
+            f"mm_stream_audio_near_dup ({n_files} files)",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "mm_stream_audio_near_dup: availableNow run did not "
-                f"complete in 240s ({n_files} files)"
-            )
 
     import os as _os
 

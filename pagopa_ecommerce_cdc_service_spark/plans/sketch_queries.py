@@ -50,6 +50,7 @@ from ..operators.sketches import (
     hll_rho_sql,
 )
 from ..operators.text import TOKENS_SQL, tokens
+from ..streaming.pipeline import drain_to_memory
 from .helpers import read, spread
 
 QUERIES = {}
@@ -347,8 +348,6 @@ def t_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from .helpers import gate_workdir, write_single_file
 
     docs = read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -360,7 +359,6 @@ def w_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_single_file(docs.filter(half == 0), f"{src}/half0.parquet", fmt="parquet")
     write_single_file(docs.filter(half == 1), f"{src}/half1.parquet", fmt="parquet")
 
-    name = f"shll_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("doc_id bigint, lang string, text string")
         .option("maxFilesPerTrigger", 1)
@@ -370,20 +368,7 @@ def w_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", hll_bucket(F.col("h")).alias("bucket"))
         .agg(F.max(hll_rho(F.col("h"))).alias("m_rho"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_hll_merge: availableNow run did not complete in 240s"
-        )
-    regs = spark.table(name)
+    regs = drain_to_memory(stream, "complete", f"{workdir}/ckpt", "w_stream_hll_merge")
     agg = regs.groupBy("lang").agg(
         F.count("*").alias("used_buckets"),
         F.sum(hll_register_term(F.col("m_rho"))).alias("occ_sum"),
@@ -430,8 +415,6 @@ def w_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from .helpers import gate_workdir, write_single_file
 
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
@@ -442,7 +425,6 @@ def w_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_single_file(docs.filter(half == 1), f"{src}/half1.parquet", fmt="parquet")
 
     pos_arr = F.array(*[cms_pos(F.col("tok"), r) for r in range(CMS_D)])
-    name = f"scms_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
@@ -452,20 +434,9 @@ def w_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("hrow", "pos")
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    sketch = drain_to_memory(
+        stream, "complete", f"{workdir}/ckpt", "w_stream_cms_merge"
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "w_stream_cms_merge: availableNow run did not complete in 240s"
-        )
-    sketch = spark.table(name)
 
     toks = (
         spread(read(spark, sf_dir, "documents"), spark)

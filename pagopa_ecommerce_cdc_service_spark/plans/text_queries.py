@@ -46,6 +46,7 @@ from ..operators.text import (
     word_ngrams,
     word_ngrams_sql,
 )
+from ..streaming.pipeline import drain
 from .helpers import read, spread
 
 QUERIES = {}
@@ -1672,20 +1673,14 @@ def t_stream_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(pairs_dir)
         )
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge),
+        f"{workdir}/ckpt",
+        "t_stream_lsh_pairs",
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "t_stream_lsh_pairs: availableNow run did not complete in 240s"
-        )
     # a pair forms exactly once (its later doc's batch); distinct guards the
     # value hash against any at-least-once replay of a batch
     return spark.read.parquet(pairs_dir).distinct()
@@ -3252,20 +3247,14 @@ def t_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store_dir)
         )
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge),
+        f"{workdir}/ckpt",
+        "t_stream_chunk_dedup",
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "t_stream_chunk_dedup: availableNow run did not complete in 240s"
-        )
     # fold outcomes first-writer-wins by (doc_id, chunk_idx): a replayed
     # batch re-evaluates its own first occurrences as store hits (their keys
     # were already appended), emitting a conflicting dropped=true row next
@@ -3734,20 +3723,14 @@ def t_stream_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(contrib_dir)
         )
 
-    q = (
+    drain(
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge),
+        f"{workdir}/ckpt",
+        "t_stream_winnow_pairs",
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError(
-            "t_stream_winnow_pairs: availableNow run did not complete in 240s"
-        )
 
     # final adjudication over the accumulated narrow stores (no text, no
     # re-fingerprinting): global df cap, shared counts, overlap threshold.
@@ -5225,21 +5208,14 @@ def t_stream_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_incarnation(n_files: int) -> None:
-        q = (
+        drain(
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(merge),
+            f"{workdir}/ckpt",
+            f"t_stream_lang_fertility ({n_files} files)",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "t_stream_lang_fertility: availableNow run did not "
-                f"complete in 240s ({n_files} files)"
-            )
 
     part2 = f"{src}/part2.parquet"
     staged_part2 = f"{workdir}/part2.staged"
@@ -5319,21 +5295,14 @@ def t_stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_incarnation(n_files: int) -> None:
-        q = (
+        drain(
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(merge),
+            f"{workdir}/ckpt",
+            f"t_stream_perplexity_buckets ({n_files} files)",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "t_stream_perplexity_buckets: availableNow run did not "
-                f"complete in 240s ({n_files} files)"
-            )
 
     part2 = f"{src}/part2.parquet"
     staged_part2 = f"{workdir}/part2.staged"
@@ -5770,21 +5739,14 @@ def t_stream_lang_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_incarnation(n_files: int) -> None:
-        q = (
+        drain(
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(merge),
+            f"{workdir}/ckpt",
+            f"t_stream_lang_quality_mix ({n_files} files)",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "t_stream_lang_quality_mix: availableNow run did not "
-                f"complete in 240s ({n_files} files)"
-            )
 
     part2 = f"{src}/part2.parquet"
     staged_part2 = f"{workdir}/part2.staged"
@@ -6027,21 +5989,14 @@ def t_stream_lang_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     def run_incarnation(n_files: int) -> None:
-        q = (
+        drain(
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(merge),
+            f"{workdir}/ckpt",
+            f"t_stream_lang_temperature_mix ({n_files} files)",
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "t_stream_lang_temperature_mix: availableNow run did not "
-                f"complete in 240s ({n_files} files)"
-            )
 
     part2 = f"{src}/part2.parquet"
     staged_part2 = f"{workdir}/part2.staged"

@@ -606,6 +606,40 @@ def start_view_maintenance(
     )
 
 
+# the bound on every run-to-completion stream: a hung drain fails its own
+# query instead of exhausting the caller's whole time budget
+DRAIN_TIMEOUT_S = 240
+
+
+def drain(writer, ckpt: str, what: str) -> None:
+    """Run ``writer`` (a ``DataStreamWriter``) to completion on checkpoint
+    ``ckpt``: one ``availableNow`` query that processes everything present
+    at its start, then stops. Waits at most :data:`DRAIN_TIMEOUT_S`; on
+    timeout the query is stopped and ``TimeoutError`` names ``what``.
+    Draining again on the same checkpoint resumes from its committed
+    offsets (a restart)."""
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{what}: availableNow run did not finish in {DRAIN_TIMEOUT_S}s"
+        )
+
+
+def drain_to_memory(stream: DataFrame, mode: str, ckpt: str, what: str) -> DataFrame:
+    """:func:`drain` ``stream`` into a memory sink in output mode ``mode``;
+    returns the sink's table (named here, unique per call)."""
+    import uuid
+
+    name = f"drain_{uuid.uuid4().hex}"
+    drain(
+        stream.writeStream.format("memory").queryName(name).outputMode(mode),
+        ckpt,
+        what,
+    )
+    return stream.sparkSession.table(name)
+
+
 def read_kafka_event_stream(
     spark: SparkSession,
     bootstrap_servers: str,

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
+from .pipeline import drain
 
 
 def stream_stratified_quota(
@@ -52,18 +53,14 @@ def stream_stratified_quota(
             md5_long(F.col("doc_id").cast("string")).alias("hkey"),
         ).write.mode("append").parquet(store_dir)
 
-    q = (
+    drain(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{workdir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge),
+        f"{workdir}/ckpt",
+        "stream_stratified_quota",
     )
-    if not q.awaitTermination(240):
-        q.stop()
-        raise TimeoutError("stream_stratified_quota: run did not finish in 240s")
 
     seen = spark.read.parquet(store_dir).distinct()
     strat = Window.partitionBy("lang", "source")

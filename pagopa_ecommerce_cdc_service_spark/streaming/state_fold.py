@@ -314,7 +314,6 @@ def _decode_out(wire, output_type):
 
 def incremental_view(
     prepared_stream,
-    spark=None,
     seen_ids_cap: int = MAX_SEEN_IDS_PER_KEY,
     view_state_ttl_seconds: float | None = None,
 ):

@@ -1632,3 +1632,70 @@ def test_fold_output_survives_the_json_round_trip(spark):
         (row,) = _decode_out(spark.createDataFrame(wire), out_type).collect()
         assert row.asDict(recursive=True) == built
         assert row.__fields__ == out_type.fieldNames()
+
+
+# ---------------------------------------------------------------------------
+# The drain policy: every run-to-completion stream goes through
+# pipeline.drain, which bounds its wait.
+# ---------------------------------------------------------------------------
+def _one_file_stream(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.json").write_text('{"x": 1}\n')
+    return spark.readStream.schema("x long").json(str(src))
+
+
+def test_drain_stops_the_query_and_names_it_on_timeout(spark, tmp_path, monkeypatch):
+    from pagopa_ecommerce_cdc_service_spark.streaming import pipeline
+
+    def slow(batch_df, epoch_id):
+        time.sleep(4)
+
+    monkeypatch.setattr(pipeline, "DRAIN_TIMEOUT_S", 0.5)
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(slow)
+    with pytest.raises(TimeoutError, match="slow-gate"):
+        pipeline.drain(writer, str(tmp_path / "ckpt"), "slow-gate")
+    assert not spark.streams.active
+
+
+def test_drain_returns_after_one_batch(spark, tmp_path):
+    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import drain
+
+    batches = []
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(
+        lambda batch_df, epoch_id: batches.append((epoch_id, batch_df.count()))
+    )
+    drain(writer, str(tmp_path / "ckpt"), "one-batch")
+    assert batches == [(0, 1)]
+    assert not spark.streams.active
+
+
+def test_only_the_pipeline_runs_streams_to_completion():
+    """No package module but streaming/pipeline.py waits on a streaming
+    query or sets the availableNow trigger. Walks the ASTs, so docstrings
+    that name these calls do not count."""
+    import ast
+    from pathlib import Path
+
+    import pagopa_ecommerce_cdc_service_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            if isinstance(func, ast.Attribute) and func.attr in (
+                "awaitTermination",
+                "processAllAvailable",
+            ):
+                what = func.attr
+            elif any(k.arg == "availableNow" for k in node.keywords):
+                what = "availableNow="
+            else:
+                continue
+            hits.append((path.relative_to(root).as_posix(), node.lineno, what))
+    owner = "streaming/pipeline.py"
+    assert {w for p, _, w in hits if p == owner} == {"awaitTermination", "availableNow="}
+    assert [h for h in hits if h[0] != owner] == []
