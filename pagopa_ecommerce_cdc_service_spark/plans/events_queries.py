@@ -15,7 +15,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..streaming.pipeline import drain_to_memory
-from .helpers import dec, money_sum, read
+from .helpers import (
+    dec,
+    gate_workdir,
+    money_sum,
+    read,
+    registrar,
+    staged_stream,
+)
 
 QUERIES = {}
 ORACLES = {}
@@ -29,14 +36,7 @@ EV = (
 )
 
 
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+query = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -229,20 +229,7 @@ def w_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events").select("ts", "event_type", "value")
-
-    workdir = gate_workdir("stream-window-gate-")
-    src = f"{workdir}/src"
-
-    def dump(df, label: str, mtime: float) -> None:
-        write_staged_file(df, f"{src}/{label}.parquet", mtime)
-
-    now = _time.time()
-    dump(ev, "real", now - 20)
     # watermark flush row at max(ts)+3h, computed and written executor-side
     # (a one-row aggregate DF) — no scalar ever crosses to the driver
     flush = ev.agg(
@@ -250,12 +237,9 @@ def w_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("__flush__").alias("event_type"),
         F.lit(0.0).alias("value"),
     )
-    dump(flush, "flush", now - 10)
-
+    workdir = gate_workdir("stream-window-gate-")
     stream = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [ev, flush])
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), money_sum(dec("value"), "sum_value"))
@@ -299,27 +283,10 @@ def w_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-
     workdir = gate_workdir("stream-dedup-gate-")
-    src = f"{workdir}/src"
-
-    def dump(df, label: str, mtime: float) -> None:
-        write_staged_file(df, f"{src}/{label}.parquet", mtime)
-
-    now = _time.time()
-    dump(ev, "original", now - 20)
-    dump(ev.filter(F.col("event_id") % 3 == 0), "redelivered", now - 10)
-
-    schema = "event_id bigint, ts timestamp, event_type string, value double"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [ev, ev.filter(F.col("event_id") % 3 == 0)])
         # delay > the whole corpus span: nothing is ever late, so every
         # dropped row is provably the dedup state's decision
         .withWatermark("ts", "365 days")
@@ -366,10 +333,6 @@ def w_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def w_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events").select("user_id", "event_type", "value")
     dim = (
         read(spark, sf_dir, "customer")
@@ -383,23 +346,11 @@ def w_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation_name"),
         )
     )
-
     workdir = gate_workdir("stream-enrich-gate-")
-    src = f"{workdir}/src"
-
-    def dump(df, label: str, mtime: float) -> None:
-        write_staged_file(df, f"{src}/{label}.parquet", mtime)
-
-    now = _time.time()
-    dump(ev.filter(F.col("user_id") % 2 == 0), "even", now - 20)
-    dump(ev.filter(F.col("user_id") % 2 == 1), "odd", now - 10)
-
-    stream = (
-        spark.readStream.schema("user_id bigint, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .join(F.broadcast(dim), "user_id", "inner")
-    )
+    parity = F.col("user_id") % 2
+    stream = staged_stream(
+        workdir, [ev.filter(parity == 0), ev.filter(parity == 1)]
+    ).join(F.broadcast(dim), "user_id", "inner")
     return (
         drain_to_memory(stream, "append", f"{workdir}/ckpt", "w_stream_static_enrich")
         .groupBy("mktsegment", "nation_name", "event_type")
@@ -1124,8 +1075,6 @@ def w_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w_partition_pruned_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    from .helpers import gate_workdir
-
     ev = read(spark, sf_dir, "events")
     workdir = gate_workdir("part-prune-gate-")
     dest = f"{workdir}/events_by_day_{uuid.uuid4().hex[:8]}"
@@ -1491,10 +1440,6 @@ def w_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id"
@@ -1504,34 +1449,21 @@ def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     workdir = gate_workdir("stream-join-gate-")
-
-    def dump(df, sub: str, label: str, mtime: float) -> None:
-        write_staged_file(df, f"{workdir}/{sub}/{label}.parquet", mtime)
-
-    now = _time.time()
     # opposite-phase user-parity split: each trigger holds clicks and
     # purchases of DISJOINT user sets, so no match can form inside a
     # trigger — every emitted pair is the join state store's doing
-    dump(clicks.filter(F.col("user_id") % 2 == 0), "clicks", "half0", now - 20)
-    dump(clicks.filter(F.col("user_id") % 2 == 1), "clicks", "half1", now - 10)
-    dump(purchases.filter(F.col("user_id") % 2 == 1), "purch", "half0", now - 20)
-    dump(purchases.filter(F.col("user_id") % 2 == 0), "purch", "half1", now - 10)
-
+    even, odd = F.col("user_id") % 2 == 0, F.col("user_id") % 2 == 1
     c = (
-        spark.readStream.schema("event_id bigint, ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{workdir}/clicks")
+        staged_stream(workdir, [clicks.filter(even), clicks.filter(odd)], sub="clicks")
         .withWatermark("ts", "365 days")
         .select(
             F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
         )
     )
     p = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, value double"
+        staged_stream(
+            workdir, [purchases.filter(odd), purchases.filter(even)], sub="purch"
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{workdir}/purch")
         .withWatermark("ts", "365 days")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1600,21 +1532,7 @@ def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
-
-    workdir = gate_workdir("stream-session-gate-")
-    src = f"{workdir}/src"
-
-    def dump(df, label: str, mtime: float) -> None:
-        write_staged_file(df, f"{src}/{label}.parquet", mtime)
-
-    now = _time.time()
-    dump(ev.filter(F.col("event_id") % 2 == 0), "half0", now - 30)
-    dump(ev.filter(F.col("event_id") % 2 == 1), "half1", now - 20)
     # one watermark-advancing flush row far past the corpus: finalizes every
     # real session; computed executor-side (one-row aggregate), no collect
     flush = ev.agg(
@@ -1623,14 +1541,10 @@ def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("long").alias("user_id"),
         F.lit(0.0).alias("value"),
     )
-    dump(flush, "flush", now - 10)
-
+    workdir = gate_workdir("stream-session-gate-")
+    half = F.col("event_id") % 2
     stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [ev.filter(half == 0), ev.filter(half == 1), flush])
         # delay > corpus span: the hash-split batches interleave in event
         # time, so nothing may be late; only the flush row moves the
         # watermark past the real sessions
@@ -1689,10 +1603,6 @@ def w_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id"
@@ -1700,11 +1610,6 @@ def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "ts", "user_id"
     )
-
-    workdir = gate_workdir("stream-ljoin-gate-")
-
-    def dump(df, sub: str, label: str, mtime: float) -> None:
-        write_staged_file(df, f"{workdir}/{sub}/{label}.parquet", mtime)
 
     def flush(df, uid: int):
         # one watermark-advancing row per SOURCE (global watermark = min
@@ -1718,22 +1623,17 @@ def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(uid).cast("long").alias("user_id"),
         )
 
-    now = _time.time()
+    workdir = gate_workdir("stream-ljoin-gate-")
     # opposite-phase user-parity split (as in the inner-join gate): every
     # MATCHED pair forms from the join state store across the batch
     # boundary; unmatched clicks additionally exercise eviction emission
-    dump(clicks.filter(F.col("user_id") % 2 == 0), "clicks", "half0", now - 40)
-    dump(clicks.filter(F.col("user_id") % 2 == 1), "clicks", "half1", now - 30)
-    dump(purchases.filter(F.col("user_id") % 2 == 1), "purch", "half0", now - 40)
-    dump(purchases.filter(F.col("user_id") % 2 == 0), "purch", "half1", now - 30)
-    dump(flush(clicks, -1), "clicks", "flush", now - 10)
-    dump(flush(purchases, -2), "purch", "flush", now - 10)
-
-    schema = "event_id bigint, ts timestamp, user_id bigint"
+    even, odd = F.col("user_id") % 2 == 0, F.col("user_id") % 2 == 1
     c = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{workdir}/clicks")
+        staged_stream(
+            workdir,
+            [clicks.filter(even), clicks.filter(odd), flush(clicks, -1)],
+            sub="clicks",
+        )
         # 45 days > corpus span (no real row late); the flush rows land
         # 200 days out, pushing the watermark past every match window so
         # unmatched state evicts and emits
@@ -1743,9 +1643,11 @@ def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     p = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{workdir}/purch")
+        staged_stream(
+            workdir,
+            [purchases.filter(odd), purchases.filter(even), flush(purchases, -2)],
+            sub="purch",
+        )
         .withWatermark("ts", "45 days")
         .select(
             F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
@@ -1896,27 +1798,12 @@ def w_interval_overlap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query("w_stream_hist_merge", _hist_quantiles_oracle())
 def w_stream_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events")
     src_rows = ev.select("event_id", "event_type", "value")
-
     workdir = gate_workdir("stream-hist-gate-")
-    src = f"{workdir}/src"
-    now = _time.time()
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 0), f"{src}/half0.parquet", now - 20
-    )
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
-    )
-
+    half = F.col("event_id") % 2
     stream = (
-        spark.readStream.schema("event_id bigint, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [src_rows.filter(half == 0), src_rows.filter(half == 1)])
         .groupBy(
             "event_type",
             F.floor(F.col("value") / F.lit(_HIST_W)).cast("long").alias("bin"),
@@ -1998,22 +1885,14 @@ _TRANS_SPLIT_TS = "2024-01-16 00:00:00"
 
 
 def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
     import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
-
-    from .helpers import gate_workdir, write_staged_file
 
     ev = read(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     workdir = gate_workdir("stream-transitions-gate-")
-    src = f"{workdir}/src"
-    now = _time.time()
     cut = F.lit(_TRANS_SPLIT_TS).cast("timestamp")
-    write_staged_file(ev.filter(F.col("ts") < cut), f"{src}/a.parquet", now - 20)
-    write_staged_file(ev.filter(F.col("ts") >= cut), f"{src}/b.parquet", now - 10)
 
     def lag_fn(key, pdf_iter, state):
         parts = list(pdf_iter)
@@ -2038,12 +1917,8 @@ def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((None if pd.isna(last) else str(last),))
         yield out[out["prev_type"].notna()]
 
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp, event_id bigint, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = staged_stream(
+        workdir, [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
     )
     pairs = stream.groupBy("user_id").applyInPandasWithState(
         lag_fn,
@@ -2176,39 +2051,15 @@ def w_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the tiny grid each evaluation.
 # ---------------------------------------------------------------------------
 def w_stream_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
-    ev = read(spark, sf_dir, "events")
-    src_rows = ev.select("event_id", "event_type", "ts")
-
-    workdir = gate_workdir("stream-anomaly-gate-")
-    src = f"{workdir}/src"
-    now = _time.time()
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 0), f"{src}/half0.parquet", now - 20
+    grid = _drain_stream_grid(
+        spark,
+        sf_dir,
+        "stream-anomaly-gate-",
+        ["event_type", "ts"],
+        [F.count("*").alias("cnt")],
+        ["event_type", F.date_trunc("day", "ts").alias("day")],
     )
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
-    )
-
-    stream = (
-        spark.readStream.schema("event_id bigint, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    grid = drain_to_memory(
-        stream, "complete", f"{workdir}/ckpt", "w_stream_anomaly_days"
-    )
-    # persist the bounded grid before the flag self-joins (a memory-table
-    # lineage joined against itself trips conflicting-reference resolution;
-    # a deployed monitor checkpoints its grid anyway)
-    grid_dir = f"{workdir}/grid"
-    grid.write.mode("overwrite").parquet(grid_dir)
-    return _anomaly_flags(spark.read.parquet(grid_dir))
+    return _anomaly_flags(grid)
 
 
 QUERIES["w_stream_anomaly_days"] = w_stream_anomaly_days
@@ -3052,34 +2903,15 @@ def _cusum_flags(daily: DataFrame) -> DataFrame:
 # tiny grid each evaluation.
 # ---------------------------------------------------------------------------
 def w_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
-    ev = read(spark, sf_dir, "events")
-    src_rows = ev.select("event_id", "event_type", "ts")
-
-    workdir = gate_workdir("stream-cusum-gate-")
-    src = f"{workdir}/src"
-    now = _time.time()
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 0), f"{src}/half0.parquet", now - 20
+    grid = _drain_stream_grid(
+        spark,
+        sf_dir,
+        "stream-cusum-gate-",
+        ["event_type", "ts"],
+        [F.count("*").cast("long").alias("cnt")],
+        ["event_type", F.date_trunc("day", "ts").alias("day")],
     )
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
-    )
-
-    stream = (
-        spark.readStream.schema("event_id bigint, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    grid = drain_to_memory(stream, "complete", f"{workdir}/ckpt", "w_stream_cusum")
-    grid_dir = f"{workdir}/grid"
-    grid.write.mode("overwrite").parquet(grid_dir)
-    return _cusum_flags(spark.read.parquet(grid_dir))
+    return _cusum_flags(grid)
 
 
 QUERIES["w_stream_cusum"] = w_stream_cusum
@@ -3097,37 +2929,15 @@ ORACLES["w_stream_cusum"] = ORACLES["w_cusum_changepoint"]
 # ratio recomputes on the tiny (user, day) grid each evaluation.
 # ---------------------------------------------------------------------------
 def w_stream_rolling_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
-    ev = read(spark, sf_dir, "events")
-    src_rows = ev.select("event_id", "user_id", "ts")
-
-    workdir = gate_workdir("stream-dau-gate-")
-    src = f"{workdir}/src"
-    now = _time.time()
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 0), f"{src}/half0.parquet", now - 20
+    grid = _drain_stream_grid(
+        spark,
+        sf_dir,
+        "stream-dau-gate-",
+        ["user_id", "ts"],
+        [F.count("*").cast("long").alias("cnt")],
+        ["user_id", F.date_trunc("day", "ts").alias("day")],
     )
-    write_staged_file(
-        src_rows.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
-    )
-
-    stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    grid = drain_to_memory(
-        stream, "complete", f"{workdir}/ckpt", "w_stream_rolling_dau_wau"
-    )
-    grid_dir = f"{workdir}/grid"
-    grid.write.mode("overwrite").parquet(grid_dir)
-    ud = spark.read.parquet(grid_dir).select("user_id", "day")
-    return _dau_wau_from_grid(ud)
+    return _dau_wau_from_grid(grid.select("user_id", "day"))
 
 
 QUERIES["w_stream_rolling_dau_wau"] = w_stream_rolling_dau_wau
@@ -3146,22 +2956,14 @@ ORACLES["w_stream_rolling_dau_wau"] = ORACLES["w_rolling_dau_wau"]
 # the stream, the fixed-point recomputes on the bounded matrix.
 # ---------------------------------------------------------------------------
 def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
     import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
-
-    from .helpers import gate_workdir, write_staged_file
 
     ev = read(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     workdir = gate_workdir("stream-markov-gate-")
-    src = f"{workdir}/src"
-    now = _time.time()
     cut = F.lit(_TRANS_SPLIT_TS).cast("timestamp")
-    write_staged_file(ev.filter(F.col("ts") < cut), f"{src}/a.parquet", now - 20)
-    write_staged_file(ev.filter(F.col("ts") >= cut), f"{src}/b.parquet", now - 10)
 
     def lag_fn(key, pdf_iter, state):
         parts = list(pdf_iter)
@@ -3182,12 +2984,8 @@ def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((None if pd.isna(last) else str(last),))
         yield out[out["prev_type"].notna()]
 
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp, event_id bigint, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = staged_stream(
+        workdir, [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
     )
     pairs = stream.groupBy("user_id").applyInPandasWithState(
         lag_fn,
@@ -3209,7 +3007,7 @@ def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (r14: no persist — the in-row power iteration reads the matrix
         # exactly once, into its single collect_list array)
     )
-    types = spark.read.parquet(src).select("event_type").distinct()
+    types = spark.read.parquet(f"{workdir}/src").select("event_type").distinct()
     return _stationary_from_matrix(m, types)
 
 
@@ -3229,36 +3027,18 @@ ORACLES["w_stream_markov_stationary"] = ORACLES["w_markov_stationary"]
 # grid. Final tables ≡ the batch oracles.
 # ---------------------------------------------------------------------------
 def _drain_stream_grid(spark, sf_dir, prefix, cols, agg_exprs, group_cols):
-    import time as _time
-
-    from .helpers import gate_workdir, write_staged_file
-
     ev = read(spark, sf_dir, "events").select("event_id", *cols)
     workdir = gate_workdir(prefix)
-    src = f"{workdir}/src"
-    now = _time.time()
-    write_staged_file(
-        ev.filter(F.col("event_id") % 2 == 0), f"{src}/half0.parquet", now - 20
-    )
-    write_staged_file(
-        ev.filter(F.col("event_id") % 2 == 1), f"{src}/half1.parquet", now - 10
-    )
-    schema = ", ".join(
-        ["event_id bigint"]
-        + [
-            {"event_type": "event_type string", "ts": "ts timestamp",
-             "user_id": "user_id bigint"}[c]
-            for c in cols
-        ]
-    )
+    half = F.col("event_id") % 2
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [ev.filter(half == 0), ev.filter(half == 1)])
         .groupBy(*group_cols)
         .agg(*agg_exprs)
     )
     grid = drain_to_memory(stream, "complete", f"{workdir}/ckpt", prefix)
+    # persist the bounded grid before the post-processing (a memory-table
+    # lineage joined against itself trips conflicting-reference resolution;
+    # a deployed monitor checkpoints its grid anyway)
     grid_dir = f"{workdir}/grid"
     grid.write.mode("overwrite").parquet(grid_dir)
     return spark.read.parquet(grid_dir)

@@ -205,12 +205,61 @@ SQL_CHARGE = (
 )
 
 
-def write_staged_file(df: DataFrame, dest: str, mtime: float, fmt: str = "parquet") -> None:
-    """Stage one gate input file with a pinned mtime.
+def staged_stream(
+    workdir: str, slices: list[DataFrame], held: int = 0, sub: str = "src"
+) -> DataFrame:
+    """Stage ``slices`` as a bounded parquet file stream under
+    ``{workdir}/{sub}``: one file per slice, mtimes pinned in slice order
+    (``1000 * (i + 1)``), so the file source with ``maxFilesPerTrigger=1``
+    replays slice ``i`` as micro-batch ``i``.
 
-    The file stream source orders micro-batches by modification time, so
-    every gate that splits its input across batches writes each slice with
-    ``write_single_file`` and then pins ``mtime`` — centralized here so the
-    mtime-ordering trick lives in exactly one place."""
-    write_single_file(df, dest, fmt=fmt)
-    os.utime(dest, (mtime, mtime))
+    The stream's schema is ``slices[0].schema`` — derived, never inferred
+    from the files, so building the stream runs no Spark job. A slice whose
+    column names or types differ from the first raises ``ValueError``: the
+    by-name parquet read would otherwise null the mismatched column.
+
+    The last ``held`` slices are written beside the source dir, not in it;
+    :func:`release_held` moves them in for a restart leg on the same
+    checkpoint."""
+    first = slices[0]
+    for i, sl in enumerate(slices):
+        if sl.dtypes != first.dtypes:
+            raise ValueError(
+                f"staged slice {i} has columns {sl.dtypes}, slice 0 has {first.dtypes}"
+            )
+    for i, sl in enumerate(slices):
+        outside = i >= len(slices) - held
+        dest = f"{workdir}/{sub}{'.held' if outside else ''}/part{i}.parquet"
+        write_single_file(sl, dest, fmt="parquet")
+        os.utime(dest, (1000.0 * (i + 1),) * 2)
+    return (
+        first.sparkSession.readStream.schema(first.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{workdir}/{sub}")
+    )
+
+
+def release_held(workdir: str, sub: str = "src") -> None:
+    """Move the slices :func:`staged_stream` held back into the source dir.
+    A rename keeps their pinned mtimes, which sort after every slice the
+    stream has already seen, so the next drain ingests exactly them."""
+    held = f"{workdir}/{sub}.held"
+    for name in sorted(os.listdir(held)):
+        os.rename(f"{held}/{name}", f"{workdir}/{sub}/{name}")
+
+
+def registrar(queries: dict, oracles: dict):
+    """The ``@query(name, oracle)`` decorator of a plans module: registers
+    the function in ``queries`` and, when given, its DuckDB SQL in
+    ``oracles``."""
+
+    def query(name: str, oracle: str | None = None):
+        def deco(fn):
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return query

@@ -19,7 +19,7 @@ from ..operators.multimodal import (
     synthesize_wav_media,
 )
 from ..streaming.pipeline import drain
-from .helpers import read, spread
+from .helpers import gate_workdir, read, release_held, spread, staged_stream
 
 QUERIES = {}
 ORACLES: dict[str, str] = {}
@@ -572,7 +572,6 @@ def _pigeonhole_bands(sig: DataFrame, grid_cols: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 def mm_stream_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import image_patches, synthesize_bmp_media_twins
-    from .helpers import gate_workdir, write_staged_file
 
     docs = spread(read(spark, sf_dir, "documents"), spark, min_parts=8)
     # pin the synthesized corpus across the three staging writes (each
@@ -580,14 +579,12 @@ def mm_stream_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would run three times), and release it before the stream starts
     media = synthesize_bmp_media_twins(docs).persist()
     workdir = gate_workdir("stream-imgdup-gate-")
-    src = f"{workdir}/src"
     try:
-        for i in range(3):
-            write_staged_file(
-                media.filter(F.col("media_id") % 3 == i),
-                f"{src}/part{i}.parquet",
-                mtime=1000.0 * (i + 1),
-            )
+        stream = staged_stream(
+            workdir,
+            [media.filter(F.col("media_id") % 3 == i) for i in range(3)],
+            held=1,
+        )
     finally:
         media.unpersist()
 
@@ -682,27 +679,12 @@ def mm_stream_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             sig.unpersist()
 
-    def run_incarnation(n_files: int) -> None:
-        drain(
-            spark.readStream.schema("media_id bigint, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge),
-            f"{workdir}/ckpt",
-            f"mm_stream_image_near_dup ({n_files} files)",
-        )
-
     # restart leg: incarnation 1 drains the two staged files; the third
     # appears only after the handoff and is picked up from the checkpoint
-    import os as _os
-
-    third = f"{src}/part2.parquet"
-    staged_third = f"{workdir}/part2.staged"
-    _os.rename(third, staged_third)
-    run_incarnation(2)
-    _os.rename(staged_third, third)
-    _os.utime(third, (3000.0, 3000.0))
-    run_incarnation(3)
+    writer = stream.writeStream.foreachBatch(merge)
+    drain(writer, f"{workdir}/ckpt", "mm_stream_image_near_dup (2 files)")
+    release_held(workdir)
+    drain(writer, f"{workdir}/ckpt", "mm_stream_image_near_dup (3 files)")
     # a pair forms exactly once (its later media's batch); distinct guards
     # the value hash against any at-least-once replay of a batch
     return spark.read.parquet(pairs_dir).distinct()
@@ -939,19 +921,16 @@ FROM v WHERE n_match >= n_frames - 1
 # ---------------------------------------------------------------------------
 def mm_stream_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import audio_frame_energy, synthesize_wav_media_twins
-    from .helpers import gate_workdir, write_staged_file
 
     docs = spread(read(spark, sf_dir, "documents"), spark, min_parts=8)
     media = synthesize_wav_media_twins(docs).persist()
     workdir = gate_workdir("stream-auddup-gate-")
-    src = f"{workdir}/src"
     try:
-        for i in range(3):
-            write_staged_file(
-                media.filter(F.col("media_id") % 3 == i),
-                f"{src}/part{i}.parquet",
-                mtime=1000.0 * (i + 1),
-            )
+        stream = staged_stream(
+            workdir,
+            [media.filter(F.col("media_id") % 3 == i) for i in range(3)],
+            held=1,
+        )
     finally:
         media.unpersist()
 
@@ -1030,25 +1009,10 @@ def mm_stream_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             sig.unpersist()
 
-    def run_incarnation(n_files: int) -> None:
-        drain(
-            spark.readStream.schema("media_id bigint, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge),
-            f"{workdir}/ckpt",
-            f"mm_stream_audio_near_dup ({n_files} files)",
-        )
-
-    import os as _os
-
-    third = f"{src}/part2.parquet"
-    staged_third = f"{workdir}/part2.staged"
-    _os.rename(third, staged_third)
-    run_incarnation(2)
-    _os.rename(staged_third, third)
-    _os.utime(third, (3000.0, 3000.0))
-    run_incarnation(3)
+    writer = stream.writeStream.foreachBatch(merge)
+    drain(writer, f"{workdir}/ckpt", "mm_stream_audio_near_dup (2 files)")
+    release_held(workdir)
+    drain(writer, f"{workdir}/ckpt", "mm_stream_audio_near_dup (3 files)")
     return spark.read.parquet(pairs_dir).distinct()
 
 

@@ -481,25 +481,23 @@ def t_stream_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deferred, like the winnowing twin's df cap. Must hash-match the batch
     oracle over the whole corpus."""
     from ..streaming.sampling import stream_stratified_quota
-    from .helpers import gate_workdir, write_staged_file
+    from .helpers import gate_workdir, release_held, staged_stream
 
     docs = spread(read(spark, sf_dir, "documents"), spark).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     workdir = gate_workdir("stream-strat-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("stratsplit:"), F.col("doc_id").cast("string")))
         % 3
     )
-    write_staged_file(docs.filter(third == 0), f"{src}/part0.parquet", mtime=1000.0)
-    write_staged_file(docs.filter(third == 1), f"{src}/part1.parquet", mtime=2000.0)
+    stream = staged_stream(workdir, [docs.filter(third == i) for i in range(3)], held=1)
     # incarnation 1 drains the two staged files and adjudicates
-    stream_stratified_quota(spark, src, workdir)
+    stream_stratified_quota(stream, workdir)
     # the third file lands AFTER the handoff; incarnation 2 resumes the
     # same checkpoint, ingests only the new file, and re-adjudicates
-    write_staged_file(docs.filter(third == 2), f"{src}/part2.parquet", mtime=3000.0)
-    return stream_stratified_quota(spark, src, workdir)
+    release_held(workdir)
+    return stream_stratified_quota(stream, workdir)
 
 
 QUERIES["t_stratified_sample"] = t_stratified_sample

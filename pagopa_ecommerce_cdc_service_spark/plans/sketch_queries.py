@@ -51,20 +51,11 @@ from ..operators.sketches import (
 )
 from ..operators.text import TOKENS_SQL, tokens
 from ..streaming.pipeline import drain_to_memory
-from .helpers import read, spread
+from .helpers import gate_workdir, read, registrar, spread, staged_stream
 
 QUERIES = {}
 ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+query = registrar(QUERIES, ORACLES)
 
 
 _TOKS_SQL = TOKENS_SQL.format(c="text")
@@ -348,21 +339,13 @@ def t_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .helpers import gate_workdir, write_single_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     workdir = gate_workdir("stream-hll-gate-")
-    src = f"{workdir}/src"
     # two micro-batches split by doc hash — every register must merge
     # across the batch boundary, not within one batch
     half = md5_long(F.concat(F.lit("hllsplit:"), F.col("doc_id").cast("string"))) % 2
-    write_single_file(docs.filter(half == 0), f"{src}/half0.parquet", fmt="parquet")
-    write_single_file(docs.filter(half == 1), f"{src}/half1.parquet", fmt="parquet")
-
     stream = (
-        spark.readStream.schema("doc_id bigint, lang string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [docs.filter(half == 0), docs.filter(half == 1)])
         .select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
         .withColumn("h", md5_long(F.col("tok")))
         .groupBy("lang", hll_bucket(F.col("h")).alias("bucket"))
@@ -415,20 +398,12 @@ def w_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .helpers import gate_workdir, write_single_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-cms-gate-")
-    src = f"{workdir}/src"
     half = md5_long(F.concat(F.lit("cmssplit:"), F.col("doc_id").cast("string"))) % 2
-    write_single_file(docs.filter(half == 0), f"{src}/half0.parquet", fmt="parquet")
-    write_single_file(docs.filter(half == 1), f"{src}/half1.parquet", fmt="parquet")
-
     pos_arr = F.array(*[cms_pos(F.col("tok"), r) for r in range(CMS_D)])
     stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        staged_stream(workdir, [docs.filter(half == 0), docs.filter(half == 1)])
         .select(F.explode(tokens(F.col("text"))).alias("tok"))
         .select(F.posexplode(pos_arr).alias("hrow", "pos"))
         .groupBy("hrow", "pos")

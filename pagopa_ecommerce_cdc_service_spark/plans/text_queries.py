@@ -47,20 +47,18 @@ from ..operators.text import (
     word_ngrams_sql,
 )
 from ..streaming.pipeline import drain
-from .helpers import read, spread
+from .helpers import (
+    gate_workdir,
+    read,
+    registrar,
+    release_held,
+    spread,
+    staged_stream,
+)
 
 QUERIES = {}
 ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+query = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -1615,18 +1613,12 @@ def t_rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rescan of the corpus; the band/shingle stores only append.
 # ---------------------------------------------------------------------------
 def t_stream_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .helpers import gate_workdir, write_single_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-lsh-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("lshsplit:"), F.col("doc_id").cast("string"))) % 3
     )
-    for i in range(3):
-        write_single_file(
-            docs.filter(third == i), f"{src}/part{i}.parquet", fmt="parquet"
-        )
+    stream = staged_stream(workdir, [docs.filter(third == i) for i in range(3)])
 
     bands_dir = f"{workdir}/bands"
     sh_dir = f"{workdir}/shingles"
@@ -1674,10 +1666,7 @@ def t_stream_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     drain(
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge),
+        stream.writeStream.foreachBatch(merge),
         f"{workdir}/ckpt",
         "t_stream_lsh_pairs",
     )
@@ -3187,23 +3176,22 @@ def t_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..streaming.pipeline import _hadoop_fs
-    from .helpers import gate_workdir, write_staged_file
 
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-chunk-gate-")
-    src = f"{workdir}/src"
     # three ascending doc_id ranges → arrival order == (doc_id, chunk_idx)
     # order, so on-ingest keeper == the batch oracle's global-first keeper
     b1, b2 = docs.selectExpr(
         "percentile(doc_id, 0.34) AS b1", "percentile(doc_id, 0.67) AS b2"
     ).first()
-    slices = (
-        docs.filter(F.col("doc_id") <= b1),
-        docs.filter((F.col("doc_id") > b1) & (F.col("doc_id") <= b2)),
-        docs.filter(F.col("doc_id") > b2),
+    stream = staged_stream(
+        workdir,
+        [
+            docs.filter(F.col("doc_id") <= b1),
+            docs.filter((F.col("doc_id") > b1) & (F.col("doc_id") <= b2)),
+            docs.filter(F.col("doc_id") > b2),
+        ],
     )
-    for i, sl in enumerate(slices):
-        write_staged_file(sl, f"{src}/part{i}.parquet", mtime=1000.0 * (i + 1))
 
     store_dir = f"{workdir}/store"
     outcome_dir = f"{workdir}/outcomes"
@@ -3248,10 +3236,7 @@ def t_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     drain(
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge),
+        stream.writeStream.foreachBatch(merge),
         f"{workdir}/ckpt",
         "t_stream_chunk_dedup",
     )
@@ -3669,19 +3654,13 @@ def t_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replay of a batch, which re-derives byte-identical rows.
 # ---------------------------------------------------------------------------
 def t_stream_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .helpers import gate_workdir, write_single_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-winnow-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("winnowsplit:"), F.col("doc_id").cast("string")))
         % 3
     )
-    for i in range(3):
-        write_single_file(
-            docs.filter(third == i), f"{src}/part{i}.parquet", fmt="parquet"
-        )
+    stream = staged_stream(workdir, [docs.filter(third == i) for i in range(3)])
 
     fp_dir = f"{workdir}/fps"
     contrib_dir = f"{workdir}/contribs"
@@ -3724,10 +3703,7 @@ def t_stream_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     drain(
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge),
+        stream.writeStream.foreachBatch(merge),
         f"{workdir}/ckpt",
         "t_stream_winnow_pairs",
     )
@@ -5156,23 +5132,15 @@ ORACLES["t_lang_fertility"] = ORACLES["t_lang_fertility"].replace(
 # scoring of THE BATCH only; the final exchange moves |langs| partials.
 # ---------------------------------------------------------------------------
 def t_stream_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from .helpers import gate_workdir, write_staged_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-fert-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("fertsplit:"), F.col("doc_id").cast("string")))
         % 3
     )
-    for i in range(3):
-        write_staged_file(
-            docs.filter(third == i),
-            f"{src}/part{i}.parquet",
-            mtime=1000.0 * (i + 1),
-        )
+    stream = staged_stream(
+        workdir, [docs.filter(third == i) for i in range(3)], held=1
+    )
 
     store_dir = f"{workdir}/langscores"
 
@@ -5207,23 +5175,10 @@ def t_stream_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store_dir)
         )
 
-    def run_incarnation(n_files: int) -> None:
-        drain(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge),
-            f"{workdir}/ckpt",
-            f"t_stream_lang_fertility ({n_files} files)",
-        )
-
-    part2 = f"{src}/part2.parquet"
-    staged_part2 = f"{workdir}/part2.staged"
-    _os.rename(part2, staged_part2)
-    run_incarnation(2)
-    _os.rename(staged_part2, part2)
-    _os.utime(part2, (3000.0, 3000.0))
-    run_incarnation(3)
+    writer = stream.writeStream.foreachBatch(merge)
+    drain(writer, f"{workdir}/ckpt", "t_stream_lang_fertility (2 files)")
+    release_held(workdir)
+    drain(writer, f"{workdir}/ckpt", "t_stream_lang_fertility (3 files)")
 
     store = spark.read.parquet(store_dir).distinct()
     return store.groupBy(F.col("predicted_lang").alias("lang")).agg(
@@ -5263,23 +5218,15 @@ ORACLES["t_stream_lang_fertility"] = ORACLES["t_lang_fertility"]
 # vocabulary-keyed store — the same exchanges as the batch plan.
 # ---------------------------------------------------------------------------
 def t_stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from .helpers import gate_workdir, write_staged_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-perp-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("perpsplit:"), F.col("doc_id").cast("string")))
         % 3
     )
-    for i in range(3):
-        write_staged_file(
-            docs.filter(third == i),
-            f"{src}/part{i}.parquet",
-            mtime=1000.0 * (i + 1),
-        )
+    stream = staged_stream(
+        workdir, [docs.filter(third == i) for i in range(3)], held=1
+    )
 
     store_dir = f"{workdir}/tokcounts"
 
@@ -5294,23 +5241,10 @@ def t_stream_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store_dir)
         )
 
-    def run_incarnation(n_files: int) -> None:
-        drain(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge),
-            f"{workdir}/ckpt",
-            f"t_stream_perplexity_buckets ({n_files} files)",
-        )
-
-    part2 = f"{src}/part2.parquet"
-    staged_part2 = f"{workdir}/part2.staged"
-    _os.rename(part2, staged_part2)
-    run_incarnation(2)
-    _os.rename(staged_part2, part2)
-    _os.utime(part2, (3000.0, 3000.0))
-    run_incarnation(3)
+    writer = stream.writeStream.foreachBatch(merge)
+    drain(writer, f"{workdir}/ckpt", "t_stream_perplexity_buckets (2 files)")
+    release_held(workdir)
+    drain(writer, f"{workdir}/ckpt", "t_stream_perplexity_buckets (3 files)")
 
     store = spark.read.parquet(store_dir).distinct()
     vocab = store.groupBy("tok").agg(F.sum("cnt").alias("c"))
@@ -5686,25 +5620,17 @@ ORACLES["t_lang_quality_mix"] = ORACLES["t_lang_quality_mix"].replace(
 # partials — the same exchanges as the batch plan.
 # ---------------------------------------------------------------------------
 def t_stream_lang_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from pyspark.sql import Window
-
-    from .helpers import gate_workdir, write_staged_file
 
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-langmix-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("langmixsplit:"), F.col("doc_id").cast("string")))
         % 3
     )
-    for i in range(3):
-        write_staged_file(
-            docs.filter(third == i),
-            f"{src}/part{i}.parquet",
-            mtime=1000.0 * (i + 1),
-        )
+    stream = staged_stream(
+        workdir, [docs.filter(third == i) for i in range(3)], held=1
+    )
 
     store_dir = f"{workdir}/langtokcounts"
 
@@ -5738,23 +5664,10 @@ def t_stream_lang_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store_dir)
         )
 
-    def run_incarnation(n_files: int) -> None:
-        drain(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge),
-            f"{workdir}/ckpt",
-            f"t_stream_lang_quality_mix ({n_files} files)",
-        )
-
-    part2 = f"{src}/part2.parquet"
-    staged_part2 = f"{workdir}/part2.staged"
-    _os.rename(part2, staged_part2)
-    run_incarnation(2)
-    _os.rename(staged_part2, part2)
-    _os.utime(part2, (3000.0, 3000.0))
-    run_incarnation(3)
+    writer = stream.writeStream.foreachBatch(merge)
+    drain(writer, f"{workdir}/ckpt", "t_stream_lang_quality_mix (2 files)")
+    release_held(workdir)
+    drain(writer, f"{workdir}/ckpt", "t_stream_lang_quality_mix (3 files)")
 
     store = spark.read.parquet(store_dir).distinct()
     lang = store.select("doc_id", "predicted_lang").distinct()
@@ -5941,23 +5854,15 @@ ORACLES["t_lang_temperature_mix"] = ORACLES["t_lang_temperature_mix"].replace(
 # exchange moves epoch-partials, never documents.
 # ---------------------------------------------------------------------------
 def t_stream_lang_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from .helpers import gate_workdir, write_staged_file
-
     docs = read(spark, sf_dir, "documents").select("doc_id", "text")
     workdir = gate_workdir("stream-tmix-gate-")
-    src = f"{workdir}/src"
     third = (
         md5_long(F.concat(F.lit("tmixsplit:"), F.col("doc_id").cast("string")))
         % 3
     )
-    for i in range(3):
-        write_staged_file(
-            docs.filter(third == i),
-            f"{src}/part{i}.parquet",
-            mtime=1000.0 * (i + 1),
-        )
+    stream = staged_stream(
+        workdir, [docs.filter(third == i) for i in range(3)], held=1
+    )
 
     store_dir = f"{workdir}/langcensus"
 
@@ -5988,23 +5893,10 @@ def t_stream_lang_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame
             .parquet(store_dir)
         )
 
-    def run_incarnation(n_files: int) -> None:
-        drain(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge),
-            f"{workdir}/ckpt",
-            f"t_stream_lang_temperature_mix ({n_files} files)",
-        )
-
-    part2 = f"{src}/part2.parquet"
-    staged_part2 = f"{workdir}/part2.staged"
-    _os.rename(part2, staged_part2)
-    run_incarnation(2)
-    _os.rename(staged_part2, part2)
-    _os.utime(part2, (3000.0, 3000.0))
-    run_incarnation(3)
+    writer = stream.writeStream.foreachBatch(merge)
+    drain(writer, f"{workdir}/ckpt", "t_stream_lang_temperature_mix (2 files)")
+    release_held(workdir)
+    drain(writer, f"{workdir}/ckpt", "t_stream_lang_temperature_mix (3 files)")
 
     store = spark.read.parquet(store_dir).distinct()
     census = store.groupBy("lang").agg(

@@ -28,20 +28,12 @@ from .helpers import (
     disc_price,
     money_sum,
     read,
+    registrar,
 )
 
 QUERIES = {}
 ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+query = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------

@@ -23,20 +23,11 @@ from ..operators.similarity import (
     quantize,
     quantize_sql,
 )
-from .helpers import read, spread
+from .helpers import read, registrar, spread
 
 QUERIES = {}
 ORACLES = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+query = registrar(QUERIES, ORACLES)
 
 
 _QV = quantize_sql("embedding")

@@ -21,7 +21,7 @@ batch operator's single stratum exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
@@ -29,13 +29,10 @@ from .pipeline import drain
 
 
 def stream_stratified_quota(
-    spark: SparkSession,
-    src: str,
-    workdir: str,
-    schema: str = "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    denominator: int = 5,
+    stream: DataFrame, workdir: str, denominator: int = 5
 ) -> DataFrame:
-    """Run an ``availableNow`` pass over ``src`` (parquet), appending each
+    """Run an ``availableNow`` pass over the file ``stream`` (a staged
+    source with ``doc_id``, ``lang`` and ``source`` columns), appending each
     batch's (lang, source, hkey, doc_id) rows to ``workdir``/store; return
     the adjudicated kept set — identical to the batch
     :func:`stratified_quota_sample` law over everything ingested so far.
@@ -43,6 +40,7 @@ def stream_stratified_quota(
     on the same checkpoint (restart-safe)."""
     from pyspark.sql import Window
 
+    spark = stream.sparkSession
     store_dir = f"{workdir}/store"
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
@@ -54,10 +52,7 @@ def stream_stratified_quota(
         ).write.mode("append").parquet(store_dir)
 
     drain(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge),
+        stream.writeStream.foreachBatch(merge),
         f"{workdir}/ckpt",
         "stream_stratified_quota",
     )

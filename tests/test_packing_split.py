@@ -154,10 +154,16 @@ def test_stratified_quota_exactness_property(spark):
 
 
 def test_stream_stratified_quota_equals_batch_across_restart(spark, tmp_path):
-    """Two stream incarnations on one checkpoint (new files land between
-    them): the adjudicated kept set must equal the batch quota law over
-    everything ingested — including rows whose quota membership only
-    opened when their stratum grew in the second incarnation."""
+    """Two stream incarnations on one checkpoint (the held-back slice is
+    released between them): the adjudicated kept set must equal the batch
+    quota law over everything ingested — including rows whose quota
+    membership only opened when their stratum grew in the second
+    incarnation — and the second incarnation ingests only the released
+    file."""
+    from pagopa_ecommerce_cdc_service_spark.plans.helpers import (
+        release_held,
+        staged_stream,
+    )
     from pagopa_ecommerce_cdc_service_spark.plans.pipeline_queries import (
         stratified_quota_sample,
     )
@@ -165,7 +171,6 @@ def test_stream_stratified_quota_equals_batch_across_restart(spark, tmp_path):
         stream_stratified_quota,
     )
 
-    src = str(tmp_path / "src")
     work = str(tmp_path / "work")
     schema = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -178,22 +183,20 @@ def test_stream_stratified_quota_equals_batch_across_restart(spark, tmp_path):
             schema,
         )
 
-    from pagopa_ecommerce_cdc_service_spark.plans.helpers import (
-        write_staged_file,
-    )
-
-    write_staged_file(docs(0, 8), f"{src}/p1.parquet", mtime=1000.0)
-    write_staged_file(docs(8, 14), f"{src}/p2.parquet", mtime=2000.0)
-    first = stream_stratified_quota(spark, src, work, schema=schema)
+    stream = staged_stream(work, [docs(0, 8), docs(8, 14), docs(14, 40)], held=1)
+    first = stream_stratified_quota(stream, work)
     batch1 = stratified_quota_sample(docs(0, 14))
     assert {r.doc_id for r in first.collect()} == {
         r.doc_id for r in batch1.collect()
     }
+    # the store holds one row per ingested doc: the held slice stayed out
+    assert spark.read.parquet(f"{work}/store").count() == 14
 
-    # second incarnation: more files, SAME checkpoint — only the new files
-    # are ingested, and the final adjudication re-opens quota membership
-    write_staged_file(docs(14, 40), f"{src}/p3.parquet", mtime=3000.0)
-    second = stream_stratified_quota(spark, src, work, schema=schema)
+    # second incarnation: the released file, SAME checkpoint — only it is
+    # ingested, and the final adjudication re-opens quota membership
+    release_held(work)
+    second = stream_stratified_quota(stream, work)
+    assert spark.read.parquet(f"{work}/store").count() == 40
     batch2 = stratified_quota_sample(docs(0, 40))
     got = {(r.doc_id, r.stratum_size, r.quota, r.rk) for r in second.collect()}
     expect = {

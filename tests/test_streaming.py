@@ -1507,6 +1507,12 @@ def test_bootstrap_handoff_matches_oracle_from_foreign_cwd(query_from_foreign_cw
     query_from_foreign_cwd("cdc_bootstrap_handoff")
 
 
+def test_staged_stream_twin_matches_oracle_from_foreign_cwd(query_from_foreign_cwd):
+    """A twin that starts from plans/helpers.staged_stream writes and reads
+    its staged files under an absolute workdir, whatever the cwd."""
+    query_from_foreign_cwd("w_stream_tumbling_hourly")
+
+
 def test_packed_events_decode_to_the_pandas_records(spark):
     """The fold's input wire (one JSON string per event, see
     state_fold._pack_events) decodes to exactly the dict the pandas-frame
@@ -1698,4 +1704,70 @@ def test_only_the_pipeline_runs_streams_to_completion():
             hits.append((path.relative_to(root).as_posix(), node.lineno, what))
     owner = "streaming/pipeline.py"
     assert {w for p, _, w in hits if p == owner} == {"awaitTermination", "availableNow="}
+    assert [h for h in hits if h[0] != owner] == []
+
+
+def test_only_the_staged_source_starts_gate_streams():
+    """Under plans/ and streaming/sampling.py, only plans/helpers.py
+    (``staged_stream`` / ``release_held``) opens a ``readStream`` or
+    renames / re-times staged files. The one other allowed stream is the
+    pyds gate's ``readStream.format(pyds.SOURCE_NAME)``. Walks the ASTs,
+    so comments and docstrings do not count."""
+    import ast
+    from pathlib import Path
+
+    import pagopa_ecommerce_cdc_service_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    owner = "plans/helpers.py"
+    hits = []
+    for path in sorted([*root.glob("plans/*.py"), root / "streaming/sampling.py"]):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        # every local name `os` or its rename/utime is bound to
+        os_names, fn_names = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                os_names |= {a.asname or a.name for a in node.names if a.name == "os"}
+            elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                fn_names |= {
+                    a.asname or a.name for a in node.names if a.name in ("rename", "utime")
+                }
+        allowed = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            if (
+                rel == "plans/cdc_view.py"
+                and isinstance(func, ast.Attribute)
+                and func.attr == "format"
+                and isinstance(func.value, ast.Attribute)
+                and func.value.attr == "readStream"
+                and ast.unparse(node.args[0]) == "pyds.SOURCE_NAME"
+            ):
+                allowed.add(id(func.value))
+            elif (
+                isinstance(func, ast.Attribute)
+                and func.attr == "schema"
+                and isinstance(func.value, ast.Attribute)
+                and func.value.attr == "readStream"
+                and isinstance(node.args[0], (ast.Constant, ast.JoinedStr))
+            ):
+                hits.append((rel, node.lineno, "readStream.schema(<str>)"))
+            elif (
+                isinstance(func, ast.Attribute)
+                and func.attr in ("rename", "utime")
+                and isinstance(func.value, ast.Name)
+                and func.value.id in os_names
+            ) or (isinstance(func, ast.Name) and func.id in fn_names):
+                hits.append((rel, node.lineno, f"os.{ast.unparse(func).split('.')[-1]}"))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "readStream"
+                and id(node) not in allowed
+            ):
+                hits.append((rel, node.lineno, "readStream"))
+    assert {w for p, _, w in hits if p == owner} == {"readStream", "os.rename", "os.utime"}
     assert [h for h in hits if h[0] != owner] == []
