@@ -1454,7 +1454,7 @@ def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trigger — every emitted pair is the join state store's doing
     even, odd = F.col("user_id") % 2 == 0, F.col("user_id") % 2 == 1
     c = (
-        staged_stream(workdir, [clicks.filter(even), clicks.filter(odd)], sub="clicks")
+        staged_stream(f"{workdir}/clicks", [clicks.filter(even), clicks.filter(odd)])
         .withWatermark("ts", "365 days")
         .select(
             F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
@@ -1462,7 +1462,7 @@ def w_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = (
         staged_stream(
-            workdir, [purchases.filter(odd), purchases.filter(even)], sub="purch"
+            f"{workdir}/purch", [purchases.filter(odd), purchases.filter(even)]
         )
         .withWatermark("ts", "365 days")
         .select(
@@ -1630,9 +1630,8 @@ def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     even, odd = F.col("user_id") % 2 == 0, F.col("user_id") % 2 == 1
     c = (
         staged_stream(
-            workdir,
+            f"{workdir}/clicks",
             [clicks.filter(even), clicks.filter(odd), flush(clicks, -1)],
-            sub="clicks",
         )
         # 45 days > corpus span (no real row late); the flush rows land
         # 200 days out, pushing the watermark past every match window so
@@ -1644,9 +1643,8 @@ def w_stream_left_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = (
         staged_stream(
-            workdir,
+            f"{workdir}/purch",
             [purchases.filter(odd), purchases.filter(even), flush(purchases, -2)],
-            sub="purch",
         )
         .withWatermark("ts", "45 days")
         .select(
@@ -3007,7 +3005,7 @@ def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (r14: no persist — the in-row power iteration reads the matrix
         # exactly once, into its single collect_list array)
     )
-    types = spark.read.parquet(f"{workdir}/src").select("event_type").distinct()
+    types = ev.filter(F.col("ts").isNotNull()).select("event_type").distinct()
     return _stationary_from_matrix(m, types)
 
 

@@ -205,11 +205,9 @@ SQL_CHARGE = (
 )
 
 
-def staged_stream(
-    workdir: str, slices: list[DataFrame], held: int = 0, sub: str = "src"
-) -> DataFrame:
+def staged_stream(workdir: str, slices: list[DataFrame], held: int = 0) -> DataFrame:
     """Stage ``slices`` as a bounded parquet file stream under
-    ``{workdir}/{sub}``: one file per slice, mtimes pinned in slice order
+    ``{workdir}/src``: one file per slice, mtimes pinned in slice order
     (``1000 * (i + 1)``), so the file source with ``maxFilesPerTrigger=1``
     replays slice ``i`` as micro-batch ``i``.
 
@@ -229,23 +227,23 @@ def staged_stream(
             )
     for i, sl in enumerate(slices):
         outside = i >= len(slices) - held
-        dest = f"{workdir}/{sub}{'.held' if outside else ''}/part{i}.parquet"
+        dest = f"{workdir}/src{'.held' if outside else ''}/part{i}.parquet"
         write_single_file(sl, dest, fmt="parquet")
         os.utime(dest, (1000.0 * (i + 1),) * 2)
     return (
         first.sparkSession.readStream.schema(first.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(f"{workdir}/{sub}")
+        .parquet(f"{workdir}/src")
     )
 
 
-def release_held(workdir: str, sub: str = "src") -> None:
+def release_held(workdir: str) -> None:
     """Move the slices :func:`staged_stream` held back into the source dir.
     A rename keeps their pinned mtimes, which sort after every slice the
     stream has already seen, so the next drain ingests exactly them."""
-    held = f"{workdir}/{sub}.held"
+    held = f"{workdir}/src.held"
     for name in sorted(os.listdir(held)):
-        os.rename(f"{held}/{name}", f"{workdir}/{sub}/{name}")
+        os.rename(f"{held}/{name}", f"{workdir}/src/{name}")
 
 
 def registrar(queries: dict, oracles: dict):
