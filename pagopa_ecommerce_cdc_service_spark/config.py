@@ -43,18 +43,8 @@ class CdcConfig:
 
     # per-key dedup memory, the analog of the lock TTL's dedup horizon
     # (reference: CDC_REDIS_JOB_LOCK_TTL_MS, helm/values-prod.yaml:130):
-    # how many most-recent event ids each transaction remembers
+    # how many most-recent event ids each view row remembers (``_seen``)
     seen_ids_cap: int = 4096
-
-    # OPTIONAL view-state TTL, seconds (None = off, the DEFAULT and the
-    # reference-parity behavior: the Mongo view never evicts,
-    # TransactionViewUpsertService.kt:134-149, SURVEY §2 ST5). When set, a
-    # transaction key whose state has been idle longer than the TTL is
-    # evicted from the state store (bounding state size for abandoned
-    # transactions); a LATER event for that key re-inserts a fresh view —
-    # the fold restarts from the new event, it does NOT merge with the
-    # pre-TTL view. This is the documented deviation knob from SURVEY §7.
-    view_state_ttl_seconds: float | None = None
 
     # liveness staleness bound, seconds (reference:
     # CDC_LIVENESS_INACTIVITY_THRESHOLD_SECONDS, helm/values-prod.yaml:138);

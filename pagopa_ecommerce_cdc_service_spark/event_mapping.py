@@ -2,12 +2,14 @@
 
 Replaces the reference's per-event-type merge functions
 (/root/reference/src/main/kotlin/it/pagopa/ecommerce/cdc/services/TransactionViewUpsertService.kt:267-659)
-with one table interpreted three ways:
+with one table interpreted two ways:
 
-- batch fold     → Catalyst ``Column`` expressions (operators/cdc_fold.py)
-- streaming fold → plain-Python evaluators over event dicts (streaming/state_fold.py)
-- test oracle    → the same plain-Python evaluators drive a faithful replay
-                   simulator (tests/reference_replay.py)
+- the fold    → Catalyst ``Column`` expressions (operators/cdc_fold.py), for
+                the batch fold and for the stream, whose upsert sink folds
+                each micro-batch onto the stored view with them
+- test oracle → plain-Python evaluators over event dicts
+                (operators/python_fold.py) drive a faithful replay
+                simulator (tests/reference_replay.py)
 
 Merge semantics (SURVEY.md §2.3-2.4, verified against the reference):
 

@@ -39,6 +39,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import CdcConfig, DEFAULT_CONFIG
 from ..event_mapping import (
@@ -181,6 +182,19 @@ def _field_op(view_field: str, branch: _Branch = _value_branch) -> Column:
     return op
 
 
+def _lineage_ops() -> dict[str, Column]:
+    """Per lineage field (``status``, ``lastProcessedEventAt``, then the
+    written view fields), the writer-metadata op whose max over a key is
+    the field's last effective write."""
+    return {
+        "status": _status_op(_lineage_meta),
+        "lastProcessedEventAt": F.when(
+            F.col(_APPLIED), _lineage_meta(F.col(_TS), True)
+        ),
+        **{f: _field_op(f, _lineage_meta) for f in WRITTEN_VIEW_FIELDS},
+    }
+
+
 def fold_transactions_view(prepared: DataFrame) -> DataFrame:
     """Fold a prepared event log into the transactions view (batch mode).
 
@@ -321,18 +335,12 @@ def fold_field_lineage(prepared: DataFrame) -> DataFrame:
     """
     df = _applied(prepared, _KEY)
 
-    lpea_meta = _lineage_meta(F.col(_TS), True)
-    g = df.groupBy(F.col(_KEY).alias("transactionId")).agg(
-        F.max(_status_op(_lineage_meta)).alias("_lin_status"),
-        F.max(F.when(F.col(_APPLIED), lpea_meta)).alias("_lin_lpea"),
-        *(
-            F.max(_field_op(f, _lineage_meta)).alias(f"_lin_{f}")
-            for f in WRITTEN_VIEW_FIELDS
-        ),
-    )
-
     lin_cols = {"status": "_lin_status", "lastProcessedEventAt": "_lin_lpea"}
     lin_cols.update((f, f"_lin_{f}") for f in WRITTEN_VIEW_FIELDS)
+    ops = _lineage_ops()
+    g = df.groupBy(F.col(_KEY).alias("transactionId")).agg(
+        *(F.max(ops[f]).alias(c) for f, c in lin_cols.items())
+    )
     entries = [
         F.struct(F.lit(f).alias("field"), F.col(c).alias("w"))
         for f, c in lin_cols.items()
@@ -346,3 +354,228 @@ def fold_field_lineage(prepared: DataFrame) -> DataFrame:
         F.col("e.w.event_ts_millis").alias("event_ts_millis"),
         F.col("e.w.guarded").alias("guarded"),
     )
+
+
+# ---------------------------------------------------------------------------
+# The incremental fold: one micro-batch of prepared events folded onto the
+# stored rows of the keys it may touch. The view IS the fold's state, as in
+# the reference, whose strict-newer guard is a conditional update against
+# the view document's own lastProcessedEventAt
+# (TransactionViewUpsertService.kt:134-149); streaming/pipeline's upsert sink
+# reads the stored rows of the touched buckets and writes this fold's output
+# back in one commit.
+#
+# Each stored row enters the fold as its key's first event, its SEED row
+# (seq -1; every event's arrival-order seq is non-negative): _ts_millis is
+# its stored lastProcessedEventAt, so _applied's guard starts from it, and
+# every field is written unguarded with its stored value, so any later
+# effective write wins over it. The stored row also lists the last
+# ``seen_ids_cap`` event ids folded for its key (``_seen``, oldest first);
+# each enters as an id-only row at seq -1, which wins _applied's
+# first-delivery dedup, so a redelivered event drops out and re-merging a
+# committed micro-batch changes nothing. One pass of the batch fold's own
+# expressions then yields the new row of every key: a key with no events
+# passes through unchanged.
+# ---------------------------------------------------------------------------
+SEEN_COL = "_seen"
+# ``_poisoned`` (the stream's micro-batch rows and the maintained view carry
+# it): the ids and errors of events quarantined one by one inside the fold.
+# Always null: the fold runs no per-event code, so it has no event to
+# quarantine.
+POISONED_COL = "_poisoned"
+_POISONED_TYPE = T.ArrayType(
+    T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("error", T.StringType())]
+    )
+)
+_STORED = "_stored"
+_POS = "_pos"
+_LINEAGE_ENTRY = ("event_id", "event_code", "event_ts_millis", "guarded")
+_LPEA = TRANSACTIONS_VIEW_TYPE["lastProcessedEventAt"]
+_SEEN = T.StructField(SEEN_COL, T.ArrayType(T.StringType()))
+_LINEAGE_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("field", T.StringType()),
+            T.StructField("event_id", T.StringType()),
+            T.StructField("event_code", T.StringType()),
+            T.StructField("event_ts_millis", T.LongType()),
+            T.StructField("guarded", T.BooleanType()),
+        ]
+    )
+)
+_HISTORY_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("version", T.LongType()),
+            T.StructField("status", T.StringType()),
+            T.StructField("valid_from_ms", T.LongType()),
+        ]
+    )
+)
+_KEY_FIELD = TRANSACTIONS_VIEW_TYPE[_KEY]
+# what each fold step stores per transaction, its hidden ``_seen`` included
+_STORED_TYPES = {
+    "view": T.StructType(
+        [*TRANSACTIONS_VIEW_TYPE.fields, T.StructField(POISONED_COL, _POISONED_TYPE), _SEEN]
+    ),
+    "lineage": T.StructType(
+        [_KEY_FIELD, _LPEA, T.StructField("lineage", _LINEAGE_TYPE), _SEEN]
+    ),
+    "history": T.StructType(
+        [_KEY_FIELD, _LPEA, T.StructField("history", _HISTORY_TYPE), _SEEN]
+    ),
+}
+FOLD_STEPS = tuple(_STORED_TYPES)
+
+
+def no_poisoned() -> Column:
+    """The ``_poisoned`` column, null (see :data:`POISONED_COL`)."""
+    return F.lit(None).cast(_POISONED_TYPE).alias(POISONED_COL)
+
+
+def _seeded(op: Column, stored: Column) -> Column:
+    """``op`` on event rows; ``stored`` on a seed row."""
+    return F.when(F.col(_STORED).isNotNull(), stored).otherwise(op)
+
+
+def _view_step():
+    """The transactions view: every field's last effective write, the
+    stored value counting as the first one."""
+    def stored(f: str) -> Column:
+        return _value_branch(F.col(f"{_STORED}.{f}"), False)
+
+    aggs = [
+        F.max(_seeded(_status_op(), stored("status")))["v"].alias("status"),
+        *(
+            F.max(_seeded(_field_op(f), stored(f)))["v"].alias(f)
+            for f in WRITTEN_VIEW_FIELDS
+        ),
+    ]
+    out = [
+        F.lit(TRANSACTION_VIEW_CLASS).alias(f) if f == "_class" else F.col(f)
+        for f in TRANSACTIONS_VIEW_TYPE.fieldNames()
+    ]
+    return [], aggs, [*out, no_poisoned()]
+
+
+def _lineage_step():
+    """Per-field lineage (:func:`fold_field_lineage`) as one ``lineage``
+    array per key: each field's stored entry is its first write."""
+    def stored(f: str) -> Column:
+        e = F.try_element_at(
+            F.filter(F.col(f"{_STORED}.lineage"), lambda x: x["field"] == f), F.lit(1)
+        )
+        meta = [e[c].alias(c) for c in _LINEAGE_ENTRY]
+        return F.when(e.isNotNull(), F.struct(F.col("seq").alias("_s"), *meta))
+
+    ops = _lineage_ops()
+    aggs = [F.max(_seeded(op, stored(f))).alias(f"_lin_{f}") for f, op in ops.items()]
+    entries = [
+        F.when(
+            F.col(f"_lin_{f}").isNotNull(),
+            F.struct(
+                F.lit(f).alias("field"),
+                *(F.col(f"_lin_{f}.{c}").alias(c) for c in _LINEAGE_ENTRY),
+            ),
+        )
+        for f in ops
+    ]
+    lineage = F.filter(F.array(*entries), lambda x: x.isNotNull())
+    return [], aggs, [_KEY, "lastProcessedEventAt", lineage.alias("lineage")]
+
+
+def _history_step():
+    """SCD2 status intervals (:func:`status_history`) as one ``history``
+    array per key: an applied status write opens an interval when it
+    differs from the status before it, the stored intervals' last status
+    counting as the first write. ``valid_to``/``is_current`` derive from
+    the next entry at read time."""
+    stored = F.col(f"{_STORED}.history")
+    status = _seeded(_status_op()["v"], F.try_element_at(stored, F.lit(-1))["status"])
+    w = (
+        Window.partitionBy(_KEY)
+        .orderBy("seq")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    pre = [
+        status.alias("_st"),
+        F.last(status, ignorenulls=True).over(w).alias("_prev"),
+    ]
+    st, prev = F.col("_st"), F.col("_prev")
+    opens = F.col(_STORED).isNull() & st.isNotNull() & (prev.isNull() | (prev != st))
+    opened = F.struct("seq", st.alias("status"), F.col(_TS).alias("valid_from_ms"))
+    aggs = [
+        F.max(stored).alias("_old"),
+        F.sort_array(F.collect_list(F.when(opens, opened))).alias("_new"),
+    ]
+    old = F.coalesce(F.col("_old"), F.array().cast(_HISTORY_TYPE))
+    new = F.transform(
+        "_new",
+        lambda e, i: F.struct(
+            (F.size(old) + i + 1).cast("long").alias("version"),
+            e["status"].alias("status"),
+            e["valid_from_ms"].alias("valid_from_ms"),
+        ),
+    )
+    return pre, aggs, [_KEY, "lastProcessedEventAt", F.concat(old, new).alias("history")]
+
+
+_STEPS = {"view": _view_step, "lineage": _lineage_step, "history": _history_step}
+
+
+def fold_onto_stored(step: str, seen_ids_cap: int):
+    """Build the incremental fold of ``step`` (one of :data:`FOLD_STEPS`):
+    returns (``stored_type``, ``fold``). ``fold(events, stored)`` folds
+    ``events`` (prepared, with arrival-order ``seq``) onto ``stored`` (rows
+    of ``stored_type``, or None when there are none) and returns the new
+    ``stored_type`` row of every key in either. ``seen_ids_cap`` bounds each
+    row's ``_seen`` (CdcConfig.seen_ids_cap).
+
+    The fold's columns are built here, once: building them takes Python
+    and Py4J time that a per-micro-batch build would pay every batch."""
+    stored_type = _STORED_TYPES[step]
+    pre, aggs, out = _STEPS[step]()
+    stored_cols = [c for c in stored_type.fieldNames() if c != SEEN_COL]
+    no_ids = F.array().cast(_SEEN.dataType)
+    # the seed row (pos 0, no id) and one id-only row per stored id
+    ids = F.posexplode(
+        F.concat(F.array(F.lit(None).cast("string")), F.coalesce(SEEN_COL, no_ids))
+    )
+    seed = F.col(_POS) == 0
+    seeds = [
+        _KEY,
+        F.lit(-1).cast("long").alias("seq"),
+        F.when(seed, F.col("lastProcessedEventAt")).alias(_TS),
+        F.when(seed, F.struct(*stored_cols)).alias(_STORED),
+        "id",
+        _POS,
+    ]
+    # the ids folded so far, in arrival order: the stored ones, then this
+    # batch's first deliveries
+    seen = F.sort_array(
+        F.collect_list(F.when(F.col("id").isNotNull(), F.struct("seq", _POS, "id")))
+    )["id"]
+    lpea = F.max(F.when(F.col(_APPLIED), F.col(_TS))).alias("lastProcessedEventAt")
+    capped = F.when(
+        F.size(SEEN_COL) > seen_ids_cap, F.slice(SEEN_COL, -seen_ids_cap, seen_ids_cap)
+    ).otherwise(F.col(SEEN_COL))
+    no_stored = F.lit(None).cast(T.StructType([stored_type[c] for c in stored_cols]))
+
+    def fold(events: DataFrame, stored: DataFrame | None) -> DataFrame:
+        if stored is None:
+            rows = events.select(
+                "*", no_stored.alias(_STORED), F.lit(None).cast("int").alias(_POS)
+            )
+        else:
+            first = stored.select(*stored_cols, ids.alias(_POS, "id"))
+            rows = events.unionByName(first.select(*seeds), allowMissingColumns=True)
+        df = _applied(rows, _KEY)
+        if pre:
+            df = df.select("*", *pre)
+        g = df.groupBy(F.col(_KEY).alias("transactionId")).agg(
+            lpea, seen.alias(SEEN_COL), *aggs
+        )
+        return g.select(*out, capped.alias(SEEN_COL))
+
+    return stored_type, fold

@@ -8,8 +8,8 @@ order, mimicking exactly what the reference does per change-stream element
   attempt 2: unguarded dataUpdate when the guard blocked (:201-250)
   attempt 3: upsert-if-absent applying the statusUpdate + _class (:64-81)
 
-Used by the streaming state fold (per-key incremental state) and by the test
-oracle; the batch fold in :mod:`cdc_fold` must produce identical views.
+The differential-test reference (tests/reference_replay.py): the fold in
+:mod:`cdc_fold`, batch or streaming, must produce identical views.
 """
 
 from __future__ import annotations

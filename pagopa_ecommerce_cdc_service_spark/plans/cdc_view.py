@@ -328,15 +328,15 @@ ORACLES = {"cdc_transactions_view": ORACLE_SQL}
 # ---------------------------------------------------------------------------
 # Streaming twin under the driver gate: the SAME synthetic envelope (bounded
 # to the first 3000 events for gate latency) is replayed through the real
-# production pipeline — file readStream → prepare_events →
-# applyInPandasWithState incremental fold → foreachBatch bucketed parquet
-# upsert sink — as TWO drains that share one checkpoint (_restart_gate): the
-# first folds the first half of the log and stops; the second recovers the
-# per-key state store and file log, and folds only the files that "arrived"
-# while no query ran. The maintained view on disk must then hash-match the
-# pure-SQL oracle of the batch fold: batch ≡
-# streaming-with-restart-and-upsert-sink ≡ SQL (S1-S5 + fold + ST2 under one
-# hard gate).
+# production pipeline — file readStream → prepare_events → foreachBatch
+# bucketed parquet upsert sink, which folds each micro-batch onto the
+# stored rows it touches — as TWO drains that share one checkpoint
+# (_restart_gate): the first folds the first half of the log and stops; the
+# second recovers the file log from the checkpoint and the fold state from
+# the view, and folds only the files that "arrived" while no query ran. The
+# maintained view on disk must then hash-match the pure-SQL oracle of the
+# batch fold: batch ≡ streaming-with-restart-and-upsert-sink ≡ SQL (S1-S5 +
+# fold + ST2 under one hard gate).
 # ---------------------------------------------------------------------------
 _STREAM_LIMIT = 3000
 # the events source every fold oracle scans; the stream window and the
@@ -357,18 +357,19 @@ def _stream_window(sql: str) -> str:
 
 
 def _restart_gate(
-    spark: SparkSession, sf_dir: str, prefix: str, to_updates
+    spark: SparkSession, sf_dir: str, prefix: str, fold: str
 ) -> DataFrame:
-    """Replay the stream window of the synthetic log through ``to_updates``
-    (raw event stream → keyed update stream) into the upsert sink, as two
+    """Replay the stream window of the synthetic log into the upsert sink
+    that maintains ``fold`` (a ``parquet_upsert_sink`` fold step), as two
     drains on ONE checkpoint: the first folds half A of the log; half B
-    "arrives" while no query runs, and the second recovers the state store
-    and file log and folds only half B. Returns the maintained table."""
+    "arrives" while no query runs, and the second recovers the file log
+    and folds only half B onto the table. Returns the maintained table."""
     from ..streaming.pipeline import (
         drain,
         parquet_upsert_sink,
         read_event_stream,
         read_view,
+        stream_transactions_view,
     )
     from .helpers import gate_workdir, write_single_file
 
@@ -382,9 +383,9 @@ def _restart_gate(
         # few hundred keys at gate scale: 8 buckets keeps each merge's
         # old-state read to a few touched buckets
         drain(
-            to_updates(read_event_stream(spark, src))
+            stream_transactions_view(read_event_stream(spark, src))
             .writeStream.outputMode("update")
-            .foreachBatch(parquet_upsert_sink(view_dir, n_buckets=8)),
+            .foreachBatch(parquet_upsert_sink(view_dir, n_buckets=8, fold=fold)),
             ckpt,
             f"{prefix}half-{half}",
         )
@@ -392,11 +393,7 @@ def _restart_gate(
 
 
 def cdc_stream_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipeline import stream_transactions_view
-
-    return _gate_view(
-        _restart_gate(spark, sf_dir, "cdc-stream-gate-", stream_transactions_view)
-    )
+    return _gate_view(_restart_gate(spark, sf_dir, "cdc-stream-gate-", "view"))
 
 
 _STREAM_ORACLE_SQL = _stream_window(ORACLE_SQL)
@@ -1008,18 +1005,15 @@ ORACLES["cdc_view_diff"] = VIEW_DIFF_ORACLE_SQL
 
 # ---------------------------------------------------------------------------
 # BOOTSTRAP HANDOFF under the hard gate (the lambda→kappa migration path):
-# the first half of the log is folded in BATCH into a seed directory, which
-# lands in the view via the upsert sink; the stream then starts with the
-# seed rows unioned into its input (state_fold.seed_stream), so each key's
-# state starts from its batch row, and folds only the second half.
-# The final maintained view must hash-match the one-shot batch oracle of
-# the WHOLE log — proving a deployment can backfill history with the
+# the upsert sink folds the first half of the log in ONE batch, as the
+# view's first commit; the stream then folds the second half onto the same
+# view. The final maintained view must hash-match the one-shot batch oracle
+# of the WHOLE log — proving a deployment can backfill history with the
 # batch engine and hand off to the stream mid-log without replaying it
 # (the reference's S2 resume generalized to a cold-start bootstrap).
-# Cross-boundary guard correctness carries entirely in the seeded
-# lastProcessedEventAt; the seen-id dedup horizon restarts empty (ids are
-# unique in this log; see seed_stream for the duplicate that straddles
-# the handoff).
+# Cross-boundary correctness carries in the stored rows: the guard in
+# lastProcessedEventAt, and the seen ids, which also drop a redelivery that
+# straddles the handoff.
 # ---------------------------------------------------------------------------
 def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import (
@@ -1027,44 +1021,25 @@ def cdc_bootstrap_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         parquet_upsert_sink,
         read_event_stream,
         read_view,
-    )
-    from ..streaming.state_fold import (
-        POISONED_COL,
-        STREAM_VIEW_TYPE,
-        incremental_view,
-        seed_stream,
+        stream_transactions_view,
     )
     from .helpers import gate_workdir, write_single_file
 
     env = synthesize_envelope(spark, sf_dir).filter(F.col("seq") < _STREAM_LIMIT)
     cut = _STREAM_LIMIT // 2
     workdir = gate_workdir("cdc-bootstrap-gate-")
-    src, seed_dir = f"{workdir}/events", f"{workdir}/seed"
-    view_dir, ckpt = f"{workdir}/view", f"{workdir}/ckpt"
+    src, view_dir, ckpt = f"{workdir}/events", f"{workdir}/view", f"{workdir}/ckpt"
 
-    # phase 1: BATCH bootstrap of the first half → seed dir → upsert sink
-    # (epoch 0)
-    fold_transactions_view(
-        prepare_events(env.filter(F.col("seq") < cut))
-    ).write.parquet(seed_dir)
-    poisoned_t = STREAM_VIEW_TYPE[POISONED_COL].dataType
+    # phase 1: the history, folded by the sink as the view's first commit
     sink = parquet_upsert_sink(view_dir, n_buckets=8)
-    sink(
-        spark.read.parquet(seed_dir).withColumn(
-            POISONED_COL, F.lit(None).cast(poisoned_t)
-        ),
-        epoch_id="bootstrap",
-    )
+    sink(prepare_events(env.filter(F.col("seq") < cut)), epoch_id="bootstrap")
 
-    # phase 2: the second half "arrives" as a stream; the seed rows ride in
-    # with it, so the fold continues where the bootstrap stopped
+    # phase 2: the second half "arrives" as a stream onto the same view
     write_single_file(env.filter(F.col("seq") >= cut), f"{src}/tail.json")
-    events = prepare_events(read_event_stream(spark, src))
-    out = incremental_view(
-        events.unionByName(seed_stream(spark, seed_dir), allowMissingColumns=True)
-    )
     drain(
-        out.writeStream.foreachBatch(sink).outputMode("update"),
+        stream_transactions_view(read_event_stream(spark, src))
+        .writeStream.foreachBatch(sink)
+        .outputMode("update"),
         ckpt,
         "cdc_bootstrap_handoff",
     )
@@ -1288,24 +1263,17 @@ ORACLES["cdc_field_lineage"] = CDC_FIELD_LINEAGE_ORACLE_SQL
 
 # ---------------------------------------------------------------------------
 # STREAMING per-field lineage twin (round 10): the deployed-mode shape of
-# cdc_field_lineage. The stateful fold carries the per-field writer map in
-# its per-key state (streaming/state_fold.lineage_state_func) and emits the
-# full current map per touched key per micro-batch; the keyed upsert sink
-# replace-merges it. Run in TWO phases sharing one checkpoint (the second
-# half of the log "arrives" while the first query is down), so the gate
-# certifies state recovery of the LINEAGE map across a restart — then the
-# on-disk table must hash-match the BATCH lineage oracle on the same half
-# of the log: batch law ≡ streaming-with-restart ≡ SQL.
+# cdc_field_lineage. The upsert sink's "lineage" fold keeps one row per key
+# holding the full per-field writer map, and folds each micro-batch onto
+# the stored maps it touches (each stored entry counts as its field's
+# first write). Run in TWO phases sharing one checkpoint (the second half
+# of the log "arrives" while the first query is down), so the gate
+# certifies that the LINEAGE map resumes from the table across a restart —
+# then the on-disk table must hash-match the BATCH lineage oracle on the
+# stream window: batch law ≡ streaming-with-restart ≡ SQL.
 # ---------------------------------------------------------------------------
 def cdc_stream_field_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.state_fold import incremental_field_lineage
-
-    table = _restart_gate(
-        spark,
-        sf_dir,
-        "cdc-lineage-gate-",
-        lambda raw: incremental_field_lineage(prepare_events(raw)),
-    )
+    table = _restart_gate(spark, sf_dir, "cdc-lineage-gate-", "lineage")
     e = table.select(
         "transactionId", F.explode("lineage").alias("e")
     )
@@ -1325,12 +1293,11 @@ ORACLES["cdc_stream_field_lineage"] = _stream_window(CDC_FIELD_LINEAGE_ORACLE_SQ
 
 # ---------------------------------------------------------------------------
 # STREAMING SCD2 status history (round 10): the temporal table as it
-# deploys. The stateful fold appends an interval entry exactly when an
-# applied event CHANGES the view's status (streaming/state_fold.py:
-# history hook — sequential change detection ≡ the batch law's
-# lag-over-status-writes, since the view's running status IS the last
-# applied status write); per-key state is O(#status changes). Two phases
-# on one checkpoint certify interval-list recovery across a restart;
+# deploys. The upsert sink's "history" fold appends an interval entry
+# exactly when an applied event CHANGES the status (the batch law's
+# lag-over-status-writes, the stored last interval's status counting as
+# the first write); each stored row is O(#status changes). Two phases on
+# one checkpoint certify that the interval lists resume across a restart;
 # valid_to / is_current derive from the NEXT entry at read time (entries
 # are born ordered — applied timestamps strictly increase per key). Must
 # hash-match the batch SCD2 oracle on the stream window: with the
@@ -1339,15 +1306,8 @@ ORACLES["cdc_stream_field_lineage"] = _stream_window(CDC_FIELD_LINEAGE_ORACLE_SQ
 # deployed-mode certification.
 # ---------------------------------------------------------------------------
 def cdc_stream_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.state_fold import incremental_status_history
-
     return (
-        _restart_gate(
-            spark,
-            sf_dir,
-            "cdc-hist-gate-",
-            lambda raw: incremental_status_history(prepare_events(raw)),
-        )
+        _restart_gate(spark, sf_dir, "cdc-hist-gate-", "history")
         .select("transactionId", "history")
         .select(
             "transactionId",

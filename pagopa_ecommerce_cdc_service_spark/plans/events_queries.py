@@ -1882,14 +1882,19 @@ def w_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRANS_SPLIT_TS = "2024-01-16 00:00:00"
 
 
-def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lag_pair_stream(spark: SparkSession, sf_dir: str, prefix: str, what: str):
+    """The stateful-lag pair stream, drained: the events table replays as
+    two files split at ``_TRANS_SPLIT_TS``; per user, keyed state holds the
+    last ``event_type``, and each micro-batch emits the (``prev_type``,
+    ``curr_type``) pairs its rows induce in (ts, event_id) order, the first
+    seeded from state. Returns (the drained pair table, the events read)."""
     import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     ev = read(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    workdir = gate_workdir("stream-transitions-gate-")
+    workdir = gate_workdir(prefix)
     cut = F.lit(_TRANS_SPLIT_TS).cast("timestamp")
 
     def lag_fn(key, pdf_iter, state):
@@ -1925,13 +1930,14 @@ def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-    agg = (
-        drain_to_memory(
-            pairs, "append", f"{workdir}/ckpt", "w_stream_event_transitions"
-        )
-        .groupBy("prev_type", "curr_type")
-        .agg(F.count("*").alias("n"))
+    return drain_to_memory(pairs, "append", f"{workdir}/ckpt", what), ev
+
+
+def w_stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs, _ = _lag_pair_stream(
+        spark, sf_dir, "stream-transitions-gate-", "w_stream_event_transitions"
     )
+    agg = pairs.groupBy("prev_type", "curr_type").agg(F.count("*").alias("n"))
     wt = Window.partitionBy("prev_type")
     return (
         agg.withColumn("row_total", F.sum("n").over(wt))
@@ -2954,50 +2960,12 @@ ORACLES["w_stream_rolling_dau_wau"] = ORACLES["w_rolling_dau_wau"]
 # the stream, the fixed-point recomputes on the bounded matrix.
 # ---------------------------------------------------------------------------
 def w_stream_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    ev = read(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    workdir = gate_workdir("stream-markov-gate-")
-    cut = F.lit(_TRANS_SPLIT_TS).cast("timestamp")
-
-    def lag_fn(key, pdf_iter, state):
-        parts = list(pdf_iter)
-        pdf = pd.concat(parts) if parts else pd.DataFrame(
-            columns=["user_id", "ts", "event_id", "event_type"]
-        )
-        if len(pdf) == 0:
-            yield pd.DataFrame({"prev_type": [], "curr_type": []})
-            return
-        pdf = pdf.sort_values(["ts", "event_id"])
-        prevs = pdf["event_type"].shift(1)
-        if state.exists:
-            prevs.iloc[0] = state.get[0]
-        out = pd.DataFrame(
-            {"prev_type": prevs, "curr_type": pdf["event_type"]}
-        )
-        last = pdf["event_type"].iloc[-1]
-        state.update((None if pd.isna(last) else str(last),))
-        yield out[out["prev_type"].notna()]
-
-    stream = staged_stream(
-        workdir, [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
-    )
-    pairs = stream.groupBy("user_id").applyInPandasWithState(
-        lag_fn,
-        outputStructType="prev_type string, curr_type string",
-        stateStructType=StructType([StructField("last_type", StringType())]),
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    pairs, ev = _lag_pair_stream(
+        spark, sf_dir, "stream-markov-gate-", "w_stream_markov_stationary"
     )
     wt = Window.partitionBy("cur")
     m = (
-        drain_to_memory(
-            pairs, "append", f"{workdir}/ckpt", "w_stream_markov_stationary"
-        )
-        .groupBy(
+        pairs.groupBy(
             F.col("prev_type").alias("cur"), F.col("curr_type").alias("nxt")
         )
         .agg(F.count("*").alias("n"))

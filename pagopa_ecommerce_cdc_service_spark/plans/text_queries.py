@@ -16,7 +16,7 @@ quality/language/fingerprint analytics. Scale design per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
@@ -116,6 +116,24 @@ def t_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LANGS = sorted(STOPWORDS)
 
 
+def _best_lang(scores: list[Column]) -> Column:
+    """The stopword-argmax language: ``scores`` holds one long score per
+    language of ``_LANGS``, in order; the pick is the highest score, ties
+    going to the lexicographically SMALLEST language (a fold over the
+    (score, language) pairs, so the tie-break is deterministic)."""
+    pairs = F.array(
+        *[F.struct(s.alias("s"), F.lit(lg).alias("l")) for s, lg in zip(scores, _LANGS)]
+    )
+    best = F.aggregate(
+        pairs,
+        F.struct(F.lit(-1).cast("long").alias("s"), F.lit("~").alias("l")),
+        lambda acc, x: F.when(
+            (x["s"] > acc["s"]) | ((x["s"] == acc["s"]) & (x["l"] < acc["l"])), x
+        ).otherwise(acc),
+    )
+    return best["l"]
+
+
 @query(
     "t_lang_id",
     f"""
@@ -140,22 +158,8 @@ def t_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         *[stopword_count(F.col("text"), lg).cast("long").alias(f"score_{lg}") for lg in _LANGS],
     )
-    pairs = F.array(
-        *[
-            F.struct(F.col(f"score_{lg}").alias("s"), F.lit(lg).alias("l"))
-            for lg in _LANGS
-        ]
-    )
-    # argmax with deterministic tie-break: max score, then lexicographically
-    # SMALLEST language ⇒ compare (s, reversed(l)) via struct max on (s, neg)
-    best = F.aggregate(
-        pairs,
-        F.struct(F.lit(-1).cast("long").alias("s"), F.lit("~").alias("l")),
-        lambda acc, x: F.when(
-            (x["s"] > acc["s"]) | ((x["s"] == acc["s"]) & (x["l"] < acc["l"])), x
-        ).otherwise(acc),
-    )
-    return scored.withColumn("predicted_lang", best["l"]).drop("text")
+    best = _best_lang([F.col(f"score_{lg}") for lg in _LANGS])
+    return scored.withColumn("predicted_lang", best).drop("text")
 
 
 # ---------------------------------------------------------------------------
@@ -5144,28 +5148,15 @@ def t_stream_lang_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store_dir = f"{workdir}/langscores"
 
-    pairs = F.array(
-        *[
-            F.struct(
-                stopword_count(F.col("text"), lg).cast("long").alias("s"),
-                F.lit(lg).alias("l"),
-            )
-            for lg in _LANGS
-        ]
-    )
-    best = F.aggregate(
-        pairs,
-        F.struct(F.lit(-1).cast("long").alias("s"), F.lit("~").alias("l")),
-        lambda acc, x: F.when(
-            (x["s"] > acc["s"]) | ((x["s"] == acc["s"]) & (x["l"] < acc["l"])), x
-        ).otherwise(acc),
+    best = _best_lang(
+        [stopword_count(F.col("text"), lg).cast("long") for lg in _LANGS]
     )
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         (
             batch_df.select(
                 "doc_id",
-                best["l"].alias("predicted_lang"),
+                best.alias("predicted_lang"),
                 F.length("text").cast("long").alias("n_chars"),
                 F.size(F.regexp_extract_all("text", F.lit(_BPE_PAT), 0))
                 .cast("long")
@@ -5634,28 +5625,15 @@ def t_stream_lang_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store_dir = f"{workdir}/langtokcounts"
 
-    pairs = F.array(
-        *[
-            F.struct(
-                stopword_count(F.col("text"), lg).cast("long").alias("s"),
-                F.lit(lg).alias("l"),
-            )
-            for lg in _LANGS
-        ]
-    )
-    best = F.aggregate(
-        pairs,
-        F.struct(F.lit(-1).cast("long").alias("s"), F.lit("~").alias("l")),
-        lambda acc, x: F.when(
-            (x["s"] > acc["s"]) | ((x["s"] == acc["s"]) & (x["l"] < acc["l"])), x
-        ).otherwise(acc),
+    best = _best_lang(
+        [stopword_count(F.col("text"), lg).cast("long") for lg in _LANGS]
     )
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         (
             batch_df.select(
                 "doc_id",
-                best["l"].alias("predicted_lang"),
+                best.alias("predicted_lang"),
                 F.explode(tokens(F.col("text"))).alias("tok"),
             )
             .groupBy("doc_id", "predicted_lang", "tok")
@@ -5866,26 +5844,13 @@ def t_stream_lang_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame
 
     store_dir = f"{workdir}/langcensus"
 
-    pairs = F.array(
-        *[
-            F.struct(
-                stopword_count(F.col("text"), lg).cast("long").alias("s"),
-                F.lit(lg).alias("l"),
-            )
-            for lg in _LANGS
-        ]
-    )
-    best = F.aggregate(
-        pairs,
-        F.struct(F.lit(-1).cast("long").alias("s"), F.lit("~").alias("l")),
-        lambda acc, x: F.when(
-            (x["s"] > acc["s"]) | ((x["s"] == acc["s"]) & (x["l"] < acc["l"])), x
-        ).otherwise(acc),
+    best = _best_lang(
+        [stopword_count(F.col("text"), lg).cast("long") for lg in _LANGS]
     )
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         (
-            batch_df.select(best["l"].alias("lang"))
+            batch_df.select(best.alias("lang"))
             .groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_docs"))
             .withColumn("epoch", F.lit(epoch_id).cast("long"))

@@ -27,7 +27,7 @@ def default_parallelism() -> int:
 def ship_package(spark: SparkSession) -> None:
     """Distribute this library to Python workers via ``addPyFile``.
 
-    Pandas-UDF / stateful-fold closures reference package modules; executors
+    Pandas-UDF closures reference package modules; executors
     (and local-mode worker processes launched from an arbitrary cwd) must be
     able to import them. On a real cluster this is exactly how the engine
     ships itself alongside the job.

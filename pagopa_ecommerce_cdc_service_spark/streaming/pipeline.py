@@ -5,13 +5,14 @@ Spark translation of the reference's stream lifecycle
 
 - S1 change-stream source  → ``readStream`` (file source here; Kafka at prod
   scale — swap ``format``/options, the rest is unchanged)
-- S2-S4 resume/checkpoint  → ``checkpointLocation`` (offsets + state commits)
+- S2-S4 resume/checkpoint  → ``checkpointLocation`` (offsets + commits)
 - F1-F3 intake filters     → the same :func:`prepare_events` expressions
-- ST3 per-event lock/dedup → per-key seen-set in the state fold
+- ST3 per-event lock/dedup → per-key seen-id list stored in the view rows
 - ST2/ST4 retries          → micro-batch replay from checkpoint +
   ``spark.task.maxFailures``
-- S5 upsert sink           → ``foreachBatch`` keyed merge (Delta/Iceberg
-  MERGE INTO in production; local parquet swap here)
+- S5 upsert sink           → ``foreachBatch`` fold of each micro-batch onto
+  the stored rows it touches, one commit per batch (Delta/Iceberg MERGE
+  INTO in production; local parquet swap here)
 - ST7 liveness             → :class:`listeners.LivenessListener`
 """
 
@@ -21,9 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CdcConfig, DEFAULT_CONFIG
-from ..operators.cdc_fold import prepare_events
+from ..operators.cdc_fold import (
+    SEEN_COL,
+    fold_onto_stored,
+    no_poisoned,
+    prepare_events,
+)
 from ..schemas import EVENT_ENVELOPE_TYPE
-from .state_fold import incremental_view
 
 
 def read_event_stream(
@@ -98,7 +103,10 @@ def stream_transactions_view(
     raw_stream: DataFrame,
     config: CdcConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Raw envelope stream → per-batch view-update stream (update mode).
+    """Raw envelope stream → the prepared event stream that
+    :func:`parquet_upsert_sink` folds onto the view, one micro-batch at a
+    time. The query is stateless; its rows carry ``_poisoned``, always
+    null (see ``operators.cdc_fold.POISONED_COL``).
 
     The intake and fold row counters ride on the query as observed metrics
     (ST8) — attach a :class:`listeners.FoldMetricsListener` to consume them
@@ -107,11 +115,7 @@ def stream_transactions_view(
     from .listeners import observe_fold, observe_intake
 
     prepared = observe_fold(prepare_events(observe_intake(raw_stream), config))
-    return incremental_view(
-        prepared,
-        seen_ids_cap=config.seen_ids_cap,
-        view_state_ttl_seconds=config.view_state_ttl_seconds,
-    )
+    return prepared.select("*", no_poisoned())
 
 
 VIEW_BUCKET_COL = "_bucket"
@@ -135,8 +139,9 @@ def view_bucket(key_col: str, n_buckets: int):
 #       immutable generation dirs — written once, never renamed or mutated.
 #       A generation holds the full new state of the buckets one merge (or
 #       compaction) rewrote, as one file per write task with rows sorted by
-#       ``_bucket``; every row carries its ``_bucket`` and its generation
-#       ``_gen`` (the dir's path relative to <view_dir>).
+#       ``_bucket``; every row carries its ``_bucket``, its generation
+#       ``_gen`` (the dir's path relative to <view_dir>) and its key's
+#       ``_seen`` event ids.
 #   <view_dir>/_commits/c-<seq 10 digits>.json
 #       immutable commit manifests; the LIVE table state is defined by the
 #       highest-sequence manifest whose embedded checksum validates. A
@@ -311,10 +316,10 @@ def _live_rows(
 
 def read_commit(spark: SparkSession, view_dir: str, payload: dict) -> DataFrame:
     """The view as of one resolved manifest ``payload`` (its data columns
-    only)."""
+    only: no layout columns, no ``_seen``)."""
     return _live_rows(
         spark, view_dir, payload["buckets"], payload.get("gens", {})
-    ).drop(VIEW_BUCKET_COL, VIEW_GEN_COL)
+    ).drop(VIEW_BUCKET_COL, VIEW_GEN_COL, SEEN_COL)
 
 
 def read_view(
@@ -401,7 +406,7 @@ def _write_generation(rows: DataFrame, view_dir: str, epoch_id) -> str:
 
 def _publish(
     spark, view_dir, seq, payload, gen, touched, failpoint, n_buckets,
-    retain_commits=1, key_col="transactionId",
+    retain_commits=1,
 ):
     """Point the ``touched`` buckets at generation ``gen`` and publish
     seq+1 (ONE small create-new file write — the commit point), then GC
@@ -420,7 +425,6 @@ def _publish(
         {
             "version": _MANIFEST_VERSION,
             "n_buckets": n_buckets,
-            "key_col": key_col,
             "buckets": buckets,
             "gens": gens,
         },
@@ -436,22 +440,27 @@ def parquet_upsert_sink(
     n_buckets: int = 64,
     failpoint=None,
     retain_commits: int = 1,
-    key_col: str = "transactionId",
+    fold: str = "view",
+    seen_ids_cap: int = DEFAULT_CONFIG.seen_ids_cap,
 ):
-    """foreachBatch merge: upsert batch view-updates into a keyed parquet
-    table bucketed by ``hash(key_col) % n_buckets`` (key defaults to the
-    CDC view's transactionId; any unique key column works — the sink is a
-    generic keyed-upsert engine component).
+    """foreachBatch merge: fold each micro-batch of prepared events (as
+    :func:`stream_transactions_view` emits them) onto a keyed parquet table
+    bucketed by ``hash(transactionId) % n_buckets``. ``fold`` selects what
+    the table holds, one row per transaction (``operators.cdc_fold.
+    FOLD_STEPS``): the transactions ``"view"``, its per-field ``"lineage"``
+    or its status ``"history"``. The table is the fold's whole state: each
+    row also carries the guard (``lastProcessedEventAt``) and its key's
+    last ``seen_ids_cap`` event ids (``_seen``, which readers never see).
 
-    Each merge writes the full new state of the buckets the batch touched
-    as ONE new generation — one file per write task of the batch, rows
-    sorted by bucket — and repoints those buckets' manifest entries at it.
-    The old rows are read from the generations the manifest names for the
+    Each merge folds the batch onto the stored rows of the buckets it
+    touched (``operators.cdc_fold.fold_onto_stored``), writes their full
+    new state as ONE new generation — one file per write task, rows sorted
+    by bucket — and repoints those buckets' manifest entries at it. The
+    stored rows are read from the generations the manifest names for the
     touched buckets only, with ``_bucket IN touched`` pushed into the scan
     so row groups of other buckets are skipped; untouched buckets' entries
     and files are never replaced. Per-batch cost is the touched rows (plus
-    the row groups the sorted ``_bucket`` cannot skip), not the view size,
-    and the files written follow the write tasks, not the bucket count.
+    the row groups the sorted ``_bucket`` cannot skip), not the table size.
     Local stand-in for ``MERGE INTO`` on a Delta/Iceberg table (jars not in
     this image); the manifest commit is the same idea as their
     log-structured commit, scoped to this one table.
@@ -459,10 +468,10 @@ def parquet_upsert_sink(
     CRASH GUARANTEE: new generations are immutable dirs invisible to
     readers until the single manifest write publishes them; a kill before
     the manifest write leaves the previous commit live (replay re-merges),
-    a kill after it leaves the new commit live (replay's re-merge is
-    idempotent: delete-by-key ∪ upsert). No rename anywhere — atomic on
-    file:, HDFS, AND object stores (reference guarantee:
-    TransactionViewUpsertService.kt:160-189).
+    a kill after it leaves the new commit live, and the replay's re-merge
+    changes nothing: every event id it carries is in its key's ``_seen``.
+    No rename anywhere — atomic on file:, HDFS, AND object stores
+    (reference guarantee: TransactionViewUpsertService.kt:160-189).
 
     ``failpoint(step)`` (steps: "staged", "committed") is a test-only seam
     to simulate a crash around the commit point. ``retain_commits`` keeps
@@ -470,56 +479,39 @@ def parquet_upsert_sink(
     time travel (``read_view(version=)``) and to give concurrent readers a
     GC grace window of N−1 commits.
     """
+    stored_type, fold_batch = fold_onto_stored(fold, seen_ids_cap)
+    bucket = view_bucket("transactionId", n_buckets)
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         recover_view(spark, view_dir, retain_commits)
         seq, payload = current_commit(spark, view_dir)
-        updates = batch_df.withColumn(
-            VIEW_BUCKET_COL, view_bucket(key_col, n_buckets)
-        ).cache()
+        events = batch_df.cache()
         try:
             # metadata-sized collect: at most n_buckets ints
-            touched = sorted(
-                r[0] for r in updates.select(VIEW_BUCKET_COL).distinct().collect()
-            )
+            touched = sorted(r[0] for r in events.select(bucket).distinct().collect())
             if not touched:
                 return  # empty micro-batch: no generation, no commit churn
             live = payload["buckets"] if payload else {}
             old_entries = {str(b): live[str(b)] for b in touched if str(b) in live}
-            merged = updates
+            stored = None
             if old_entries:
-                # the old rows were written from this same schema: pass it,
-                # sparing the per-batch footer-inference job. Version-1 rows
-                # carry no _bucket: the IN conjunct spares them by that null
-                # (phrased on _gen, the optimizer would fold it into the
-                # liveness filter, which cannot be pushed into the scan) and
-                # the recomputation fills it.
-                bucket = F.col(VIEW_BUCKET_COL)
-                old = (
-                    _live_rows(
-                        spark, view_dir, old_entries, payload.get("gens", {}),
-                        batch_df.schema,
-                    )
-                    .filter(bucket.isin(touched) | bucket.isNull())
-                    .drop(VIEW_GEN_COL)
-                    .withColumn(VIEW_BUCKET_COL, view_bucket(key_col, n_buckets))
-                )
-                merged = old.join(
-                    updates.select(key_col), key_col, "left_anti"
-                ).unionByName(updates)
-            # as many write tasks as the batch has partitions: without the
-            # coalesce each old file would pass through as a task of its own,
-            # and a generation's file count would grow with every merge
-            gen = _write_generation(
-                merged.coalesce(updates.rdd.getNumPartitions()), view_dir, epoch_id
-            )
+                # Version-1 rows carry no _bucket: the IN conjunct spares
+                # them by that null (phrased on _gen, the optimizer would
+                # fold it into the liveness filter, which cannot be pushed
+                # into the scan); the fold recomputes the bucket.
+                b = F.col(VIEW_BUCKET_COL)
+                stored = _live_rows(
+                    spark, view_dir, old_entries, payload.get("gens", {}), stored_type
+                ).filter(b.isin(touched) | b.isNull())
+            rows = fold_batch(events, stored).withColumn(VIEW_BUCKET_COL, bucket)
+            gen = _write_generation(rows, view_dir, epoch_id)
             _publish(
                 spark, view_dir, seq, payload, gen, touched, failpoint,
-                n_buckets, retain_commits, key_col,
+                n_buckets, retain_commits,
             )
         finally:
-            updates.unpersist()
+            events.unpersist()
 
     return merge
 
@@ -559,17 +551,16 @@ def compact_view(
     if not entries:
         return []
     n_buckets = payload["n_buckets"]
-    key_col = payload.get("key_col", "transactionId")
     rows = (
         _live_rows(spark, view_dir, entries, gens)
         .drop(VIEW_GEN_COL)
-        .withColumn(VIEW_BUCKET_COL, view_bucket(key_col, n_buckets))
+        .withColumn(VIEW_BUCKET_COL, view_bucket("transactionId", n_buckets))
     )
     touched = sorted(int(b) for b in entries)
     gen = _write_generation(rows, view_dir, "compact")
     _publish(
         spark, view_dir, seq, payload, gen, touched, failpoint, n_buckets,
-        retain_commits, key_col,
+        retain_commits,
     )
     return touched
 
@@ -597,10 +588,11 @@ def start_view_maintenance(
         max_files_per_trigger,
         fallback_minutes=config.fallback_minutes if first_run else None,
     )
-    updates = stream_transactions_view(raw, config)
+    events = stream_transactions_view(raw, config)
+    sink = parquet_upsert_sink(view_dir, n_buckets, seen_ids_cap=config.seen_ids_cap)
     return (
-        updates.writeStream.outputMode("update")
-        .foreachBatch(parquet_upsert_sink(view_dir, n_buckets))
+        events.writeStream.outputMode("update")
+        .foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

@@ -45,7 +45,7 @@ def event_spans(prepared: DataFrame, error_ids: DataFrame | None = None) -> Data
     ``prepare_events`` output and on a micro-batch DataFrame alike).
 
     ``error_ids`` — an optional (id) DataFrame of events whose downstream
-    processing failed (the poison-pill quarantine, state_fold.py ST4) —
+    processing failed (the reference's ST4 poison-pill path) —
     flips those events' outcome to ERROR, the twin of the reference's
     ON_ERROR signal branch. The join is a broadcast against a tiny error
     set; everything else never shuffles.

@@ -14,22 +14,6 @@ if str(REPO_ROOT) not in sys.path:
 from pagopa_ecommerce_cdc_service_spark.session import build_session  # noqa: E402
 
 
-def pytest_collection_modifyitems(config, items):
-    # test_view_state_ttl_wiring_executes_end_to_end flaked three times
-    # across rounds (6, 8, 13), ALWAYS under full-suite load and always
-    # green in isolation — round 13's mechanism was a java.util.regex
-    # StackOverflowError killing the JVM stream-execution thread late in a
-    # long suite session. Run it FIRST: a fresh, unloaded JVM is exactly
-    # the isolated-run condition under which it has never failed, and the
-    # reordering costs nothing (the session fixture builds on first use).
-    front = [
-        it for it in items if "test_view_state_ttl_wiring_executes_end_to_end" in it.name
-    ]
-    if front:
-        rest = [it for it in items if it not in front]
-        items[:] = front + rest
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = build_session(
@@ -38,9 +22,10 @@ def spark():
         shuffle_partitions=4,
         extra_conf={
             "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-            # thread-stack headroom for long suite sessions: round 13's one
-            # flake was a java.util.regex StackOverflowError on a stream
-            # execution thread (default -Xss) after ~600 tests in one JVM
+            # thread-stack headroom for long suite sessions: one flake was
+            # a java.util.regex StackOverflowError on a stream execution
+            # thread (default -Xss) after ~600 tests in one JVM; which
+            # regex overflows is still not root-caused
             "spark.driver.extraJavaOptions": "-Xss16m",
         },
     )

@@ -138,10 +138,10 @@ def test_lineage_guard_flag_semantics(spark):
 
 
 def test_stream_lineage_restart_matches_batch(spark, tmp_path):
-    """Streaming per-field lineage twin (streaming/state_fold.py:
-    lineage_state_func): fold half the log, STOP, let the rest arrive,
-    restart on the same checkpoint — the recovered lineage map must equal
-    the batch law (fold_field_lineage) over the whole log, field for field.
+    """Streaming per-field lineage twin (the upsert sink's "lineage" fold):
+    fold half the log, STOP, let the rest arrive, restart on the same
+    checkpoint — the lineage map resumed from the table must equal the
+    batch law (fold_field_lineage) over the whole log, field for field.
     """
     import json as _json
     import os
@@ -152,9 +152,7 @@ def test_stream_lineage_restart_matches_batch(spark, tmp_path):
         parquet_upsert_sink,
         read_event_stream,
         read_view,
-    )
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        incremental_field_lineage,
+        stream_transactions_view,
     )
 
     events = generate_event_log(seed=19, n_transactions=30, p_duplicate=0.1)
@@ -172,12 +170,10 @@ def test_stream_lineage_restart_matches_batch(spark, tmp_path):
         os.utime(path, (mtime, mtime))
 
     def run_phase():
-        out = incremental_field_lineage(
-            prepare_events(read_event_stream(spark, log_dir))
-        )
+        out = stream_transactions_view(read_event_stream(spark, log_dir))
         q = (
             out.writeStream.outputMode("update")
-            .foreachBatch(parquet_upsert_sink(lin_dir, n_buckets=4))
+            .foreachBatch(parquet_upsert_sink(lin_dir, n_buckets=4, fold="lineage"))
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -214,9 +210,9 @@ def test_stream_lineage_restart_matches_batch(spark, tmp_path):
 
 
 def test_stream_status_history_restart_matches_batch(spark, tmp_path):
-    """Streaming SCD2 twin (streaming/state_fold.py: history hook): fold
-    half the log, STOP, let the rest arrive, restart on the same
-    checkpoint — the recovered interval lists must equal the batch law
+    """Streaming SCD2 twin (the upsert sink's "history" fold): fold half
+    the log, STOP, let the rest arrive, restart on the same checkpoint —
+    the interval lists resumed from the table must equal the batch law
     (operators/cdc_fold.status_history) over the whole log, row for row
     (version, status, valid_from, valid_to, is_current)."""
     import json as _json
@@ -229,9 +225,7 @@ def test_stream_status_history_restart_matches_batch(spark, tmp_path):
         parquet_upsert_sink,
         read_event_stream,
         read_view,
-    )
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        incremental_status_history,
+        stream_transactions_view,
     )
 
     events = generate_event_log(seed=23, n_transactions=30, p_duplicate=0.1)
@@ -249,12 +243,10 @@ def test_stream_status_history_restart_matches_batch(spark, tmp_path):
         os.utime(path, (mtime, mtime))
 
     def run_phase():
-        out = incremental_status_history(
-            prepare_events(read_event_stream(spark, log_dir))
-        )
+        out = stream_transactions_view(read_event_stream(spark, log_dir))
         q = (
             out.writeStream.outputMode("update")
-            .foreachBatch(parquet_upsert_sink(hist_dir, n_buckets=4))
+            .foreachBatch(parquet_upsert_sink(hist_dir, n_buckets=4, fold="history"))
             .option("checkpointLocation", ckpt)
             .start()
         )

@@ -1,9 +1,9 @@
 """Differential test: streaming incremental fold == batch fold == oracle.
 
 The same event log is replayed three ways — batch DataFrame fold, Structured
-Streaming stateful fold (4 micro-batches via maxFilesPerTrigger=1), and the
-pure-Python reference replay — and all three views must match exactly
-(SURVEY.md §5b).
+Streaming with the upsert sink folding each micro-batch onto the stored view
+(4 micro-batches via maxFilesPerTrigger=1), and the pure-Python reference
+replay — and all three views must match exactly (SURVEY.md §5b).
 """
 
 from __future__ import annotations
@@ -15,7 +15,10 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from pagopa_ecommerce_cdc_service_spark.operators import transactions_view_from_log
+from pagopa_ecommerce_cdc_service_spark.operators import (
+    prepare_events,
+    transactions_view_from_log,
+)
 from pagopa_ecommerce_cdc_service_spark.schemas import EVENT_ENVELOPE_TYPE
 from pagopa_ecommerce_cdc_service_spark.sources import generate_event_log
 from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
@@ -25,6 +28,11 @@ from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
 
 from reference_replay import replay_reference
 from test_cdc_fold import assert_views_equal, normalize
+
+
+def _prepared(spark, events):
+    """The events as the stream's micro-batch rows: prepared, for the sink."""
+    return prepare_events(spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE))
 
 
 def _write_chunks(events, log_dir, n_chunks=4):
@@ -111,6 +119,8 @@ def test_fallback_start_offset_skips_stale_files(spark, tmp_path):
     fallback window, files older than the window are not ingested — the
     reference's checkpoint-miss policy (RedisResumePolicyService.kt:43-52)."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        drain,
+        parquet_upsert_sink,
         read_event_stream,
         stream_transactions_view,
     )
@@ -126,23 +136,17 @@ def test_fallback_start_offset_skips_stale_files(spark, tmp_path):
     old = time.time() - 2 * 3600
     os.utime(stale, (old, old))
 
-    q = (
+    view_dir = str(tmp_path / "view")
+    drain(
         stream_transactions_view(
             read_event_stream(spark, str(log_dir), fallback_minutes=60)
         )
-        .writeStream.format("memory")
-        .queryName("fallback_demo")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(parquet_upsert_sink(view_dir, n_buckets=4))
+        .outputMode("update"),
+        str(tmp_path / "ckpt"),
+        "fallback-demo",
     )
-    assert q.awaitTermination(120)
-
-    folded = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in spark.table("fallback_demo").collect()
-    }
+    folded = _view_state(spark, view_dir)
     # exactly the view of the fresh half: replaying only events[mid:]
     assert folded.keys() == replay_reference(events[mid:]).keys()
     assert_views_equal(folded, replay_reference(events[mid:]))
@@ -211,10 +215,7 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     sink = parquet_upsert_sink(view_dir, n_buckets=8)
 
     events = generate_event_log(seed=5, n_transactions=30)
-    batch1 = transactions_view_from_log(
-        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-    )
-    sink(batch1, epoch_id=0)
+    sink(_prepared(spark, events), epoch_id=0)
 
     def bucket_files():
         out = {}
@@ -234,13 +235,10 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     before = bucket_files()
     # second batch: update exactly one existing transaction
     one_tx = events[0]["transactionId"]
-    batch2 = transactions_view_from_log(
-        spark.createDataFrame(
-            [e for e in events if e["transactionId"] == one_tx],
-            schema=EVENT_ENVELOPE_TYPE,
-        )
+    sink(
+        _prepared(spark, [e for e in events if e["transactionId"] == one_tx]),
+        epoch_id=1,
     )
-    sink(batch2, epoch_id=1)
     after = bucket_files()
     _, payload2 = current_commit(spark, view_dir)
     new_gen = payload2["buckets"][str(touched_bucket)]
@@ -273,7 +271,7 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
     } == {touched_bucket}
     # merged result is still the full fold
     merged = read_view(spark, view_dir)
-    assert merged.count() == batch1.count()
+    assert merged.count() == len({e["transactionId"] for e in events})
 
 
 def test_kafka_reader_option_wiring(spark):
@@ -378,8 +376,8 @@ def test_kafka_reader_resume_contract(spark, monkeypatch):
 
 def test_upsert_sink_idempotent_under_batch_replay(spark, tmp_path):
     """foreachBatch delivery is at-least-once: a replayed micro-batch (same
-    rows, new epoch) must leave the view byte-identical — the upsert's
-    anti-join + overwrite-by-bucket is idempotent by construction."""
+    rows, same epoch) must leave the view byte-identical — every event id it
+    carries is already in its key's stored ``_seen``."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
         parquet_upsert_sink,
         read_view,
@@ -388,9 +386,7 @@ def test_upsert_sink_idempotent_under_batch_replay(spark, tmp_path):
     view_dir = str(tmp_path / "view")
     sink = parquet_upsert_sink(view_dir, n_buckets=8)
     events = generate_event_log(seed=9, n_transactions=20)
-    batch = transactions_view_from_log(
-        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-    )
+    batch = _prepared(spark, events)
     sink(batch, epoch_id=0)
     first = {
         r["transactionId"]: r.asDict(recursive=True)
@@ -435,12 +431,7 @@ def test_upsert_sink_commit_protocol_is_rename_free(spark, tmp_path, monkeypatch
     # holds dead rows, so compaction has a generation to rewrite
     for i, txs in enumerate([tx_ids[:6], *([tx] for tx in tx_ids[:2])]):
         sink(
-            transactions_view_from_log(
-                spark.createDataFrame(
-                    [e for e in events if e["transactionId"] in txs],
-                    schema=EVENT_ENVELOPE_TYPE,
-                )
-            ),
+            _prepared(spark, [e for e in events if e["transactionId"] in txs]),
             epoch_id=i,
         )
     assert pipeline.compact_view(spark, view_dir)
@@ -461,12 +452,7 @@ def test_torn_manifest_falls_back_to_previous_commit(spark, tmp_path):
     view_dir = str(tmp_path / "view")
     events = generate_event_log(seed=29, n_transactions=12)
     sink = parquet_upsert_sink(view_dir, n_buckets=4)
-    sink(
-        transactions_view_from_log(
-            spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-        ),
-        epoch_id=0,
-    )
+    sink(_prepared(spark, events), epoch_id=0)
     before = _view_state(spark, view_dir)
 
     torn = os.path.join(view_dir, "_commits", "c-0000000002.json")
@@ -479,12 +465,7 @@ def test_torn_manifest_falls_back_to_previous_commit(spark, tmp_path):
     # the writer proceeds normally on the recovered sequence
     one_tx = events[0]["transactionId"]
     sink(
-        transactions_view_from_log(
-            spark.createDataFrame(
-                [e for e in events if e["transactionId"] == one_tx],
-                schema=EVENT_ENVELOPE_TYPE,
-            )
-        ),
+        _prepared(spark, [e for e in events if e["transactionId"] == one_tx]),
         epoch_id=1,
     )
     after = _view_state(spark, view_dir)
@@ -592,80 +573,12 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     assert by_id["e1"] == 1 and by_id["e2"] == 3
 
 
-def test_view_state_ttl_wiring_executes_end_to_end(spark, tmp_path):
-    """CdcConfig.view_state_ttl_seconds arms ProcessingTimeTimeout on the
-    real applyInPandasWithState query. With a TTL far longer than the run,
-    no key expires, so the maintained view must equal the batch fold —
-    proving the timeout wiring executes without disturbing the fold.
-
-    A TTL-armed query never reports itself drained (the engine keeps
-    scheduling timer-evaluation batches), so this test polls the sink for
-    the expected keys and stops the query explicitly — the documented
-    operating mode for the knob. Expire/re-insert semantics are unit-tested
-    in test_state_fold.py (wall-clock timeout firing is not test-stable).
-
-    Flake history (full-suite load only; green in isolation every time):
-    r6 + r8 poll timeout on a degraded host, r13 a java.util.regex
-    StackOverflowError killing the stream-execution thread late in the
-    suite JVM. Hardened in r14 at the harness level — conftest runs this
-    test FIRST (fresh JVM = the isolated-run condition under which it has
-    never failed) and bumps the driver thread stack (-Xss16m)."""
-    from dataclasses import replace
-
-    from pagopa_ecommerce_cdc_service_spark.config import DEFAULT_CONFIG
-
-    events = generate_event_log(seed=5, n_transactions=20)
-    expected_keys = {e["transactionId"] for e in events}
-    log_dir = str(tmp_path / "log")
-    view_dir = str(tmp_path / "view")
-    ckpt_dir = str(tmp_path / "ckpt")
-    _write_chunks(events, log_dir, n_chunks=2)
-
-    cfg = replace(DEFAULT_CONFIG, view_state_ttl_seconds=3600.0)
-    q = start_view_maintenance(
-        spark, log_dir, view_dir, ckpt_dir, config=cfg, max_files_per_trigger=1
-    )
-    try:
-        # the TTL query interleaves timer-evaluation batches with the two
-        # file batches; under full-suite load 120 s proved flaky in round 6
-        # and 240 s once in round 8 on a host measured 10-30% degraded
-        # (passed in isolation both times) — budget doubled again; the
-        # query is stopped the moment the keys converge, so the budget is
-        # a ceiling, not a wait
-        deadline = time.time() + 480
-        while time.time() < deadline:
-            try:
-                keys = {
-                    r["transactionId"]
-                    for r in read_view(spark, view_dir).select("transactionId").collect()
-                }
-            except Exception:  # view dir not written yet
-                keys = set()
-            if keys == expected_keys:
-                break
-            time.sleep(0.5)
-        assert keys == expected_keys
-    finally:
-        q.stop()
-
-    stream_views = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in read_view(spark, view_dir).collect()
-    }
-    batch_df = spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-    batch_views = {
-        r["transactionId"]: r.asDict(recursive=True)
-        for r in transactions_view_from_log(batch_df).collect()
-    }
-    assert {k: normalize(v) for k, v in stream_views.items()} == {
-        k: normalize(v) for k, v in batch_views.items()
-    }
-
-
 def _view_state(spark, view_dir):
+    """The view's rows by transactionId, the always-null ``_poisoned``
+    aside."""
     return {
         r["transactionId"]: r.asDict(recursive=True)
-        for r in read_view(spark, view_dir).collect()
+        for r in read_view(spark, view_dir).drop("_poisoned").collect()
     }
 
 
@@ -702,23 +615,24 @@ def test_upsert_sink_kill_mid_commit_loses_no_rows(spark, tmp_path, kill_step):
     )
 
     view_dir = str(tmp_path / "view")
-    events = generate_event_log(seed=11, n_transactions=40)
-    batch1 = transactions_view_from_log(
-        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
+    from pagopa_ecommerce_cdc_service_spark.operators.python_fold import (
+        is_processable,
     )
-    parquet_upsert_sink(view_dir, n_buckets=4)(batch1, epoch_id=0)
-    baseline = _view_state(spark, view_dir)
-    assert len(baseline) == batch1.count() > 30
 
-    # batch 2 updates ONE transaction; with 4 buckets its bucket holds ~10
-    # other transactions that must survive the crash
-    one_tx = events[0]["transactionId"]
-    batch2 = transactions_view_from_log(
-        spark.createDataFrame(
-            [e for e in events if e["transactionId"] == one_tx],
-            schema=EVENT_ENVELOPE_TYPE,
-        )
+    events = generate_event_log(seed=11, n_transactions=40)
+    folded = [e for e in events if is_processable(e)]
+    tx_ids = [e["transactionId"] for e in folded]
+    one_tx = next(tx for tx in tx_ids if tx_ids.count(tx) > 1)
+    # batch 1 folds every event but one transaction's last; batch 2 folds
+    # that event, so it updates ONE transaction, whose bucket (of 4) holds
+    # ~10 other transactions that must survive the crash
+    last = max((e for e in folded if e["transactionId"] == one_tx), key=lambda e: e["seq"])
+    parquet_upsert_sink(view_dir, n_buckets=4)(
+        _prepared(spark, [e for e in events if e is not last]), epoch_id=0
     )
+    baseline = _view_state(spark, view_dir)
+    assert len(baseline) == len(set(tx_ids)) > 30
+    batch2 = _prepared(spark, [last])
 
     class Kill(RuntimeError):
         pass
@@ -738,6 +652,7 @@ def test_upsert_sink_kill_mid_commit_loses_no_rows(spark, tmp_path, kill_step):
 
     assert set(recovered) == set(baseline), "rows lost or invented by crash"
     assert recovered == {**baseline, one_tx: recovered[one_tx]}
+    assert_views_equal(recovered, replay_reference(events))
     _assert_no_orphans(spark, view_dir)
 
 
@@ -757,20 +672,10 @@ def test_upsert_sink_and_recovery_honor_path_uris(spark, tmp_path):
     half = [e for e in events if e["transactionId"] in half_ids]
     rest = [e for e in events if e["transactionId"] not in half_ids]
     sink = parquet_upsert_sink(view_dir, n_buckets=4)
-    sink(
-        transactions_view_from_log(
-            spark.createDataFrame(rest, schema=EVENT_ENVELOPE_TYPE)
-        ),
-        epoch_id=0,
-    )
+    sink(_prepared(spark, rest), epoch_id=0)
     n_first = read_view(spark, view_dir).count()
     assert n_first > 0
-    sink(
-        transactions_view_from_log(
-            spark.createDataFrame(half, schema=EVENT_ENVELOPE_TYPE)
-        ),
-        epoch_id=1,
-    )
+    sink(_prepared(spark, half), epoch_id=1)
     # merge, not overwrite: both halves present
     assert read_view(spark, view_dir).count() == len(tx_ids)
 
@@ -788,12 +693,7 @@ def _one_merge_then_remerges(spark, view_dir, seed, n_transactions, n_remerges):
     sink = parquet_upsert_sink(view_dir, n_buckets=4)
     for i, txs in enumerate([tx_ids, *([tx] for tx in tx_ids[:n_remerges])]):
         sink(
-            transactions_view_from_log(
-                spark.createDataFrame(
-                    [e for e in events if e["transactionId"] in txs],
-                    schema=EVENT_ENVELOPE_TYPE,
-                )
-            ),
+            _prepared(spark, [e for e in events if e["transactionId"] in txs]),
             epoch_id=i,
         )
 
@@ -868,11 +768,8 @@ def test_generation_files_follow_write_tasks_not_buckets(spark, tmp_path):
     n_buckets = 16
     view_dir = str(tmp_path / "view")
     events = generate_event_log(seed=41, n_transactions=120)
-    batch = transactions_view_from_log(
-        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-    )
     sink = parquet_upsert_sink(view_dir, n_buckets=n_buckets)
-    sink(batch, epoch_id=0)
+    sink(_prepared(spark, events), epoch_id=0)
     _, payload = current_commit(spark, view_dir)
     assert len(payload["buckets"]) == n_buckets, "fixture misses a bucket"
 
@@ -889,12 +786,7 @@ def test_generation_files_follow_write_tasks_not_buckets(spark, tmp_path):
     bucket = str(
         spark.range(1).select(view_bucket(F.lit(one_tx), n_buckets)).first()[0]
     )
-    one = transactions_view_from_log(
-        spark.createDataFrame(
-            [e for e in events if e["transactionId"] == one_tx],
-            schema=EVENT_ENVELOPE_TYPE,
-        )
-    )
+    one = _prepared(spark, [e for e in events if e["transactionId"] == one_tx])
     counts = [files_under(payload["buckets"][bucket])]
     for epoch in range(1, 5):
         sink(one, epoch_id=epoch)
@@ -917,8 +809,9 @@ def test_merge_pushes_the_touched_buckets_into_the_old_state_scan(
     from pagopa_ecommerce_cdc_service_spark.streaming import pipeline
 
     view_dir = str(tmp_path / "view")
-    sink = pipeline.parquet_upsert_sink(view_dir, n_buckets=16, key_col="k")
-    sink(spark.range(200).selectExpr("id AS k", "id * 2 AS v"), epoch_id=0)
+    events = generate_event_log(seed=47, n_transactions=60)
+    sink = pipeline.parquet_upsert_sink(view_dir, n_buckets=16)
+    sink(_prepared(spark, events), epoch_id=0)
 
     plans = []
     write = pipeline._write_generation
@@ -931,11 +824,60 @@ def test_merge_pushes_the_touched_buckets_into_the_old_state_scan(
         return write(rows, *args)
 
     monkeypatch.setattr(pipeline, "_write_generation", capture)
-    sink(spark.createDataFrame([(7, 0)], "k bigint, v bigint"), epoch_id=1)
-    scan = next(line for line in plans[0].splitlines() if "FileScan parquet" in line)
+    sink(_prepared(spark, events[:1]), epoch_id=1)
+    _assert_pushes_touched_buckets(plans[0])
+    assert pipeline.read_view(spark, view_dir).count() == 60
+
+
+def _assert_pushes_touched_buckets(plan: str) -> None:
+    scan = next(line for line in plan.splitlines() if "FileScan parquet" in line)
     pushed = scan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     assert "(_bucket," in pushed, scan
-    assert pipeline.read_view(spark, view_dir).count() == 200
+
+
+def test_view_maintenance_runs_no_state_operator_and_no_python(
+    spark, tmp_path, monkeypatch
+):
+    """The maintained view is the fold's only state: the query that
+    start_view_maintenance starts reports no state operator, and the plan
+    its sink writes runs no Python per event and still pushes the touched
+    buckets into the stored-row scan."""
+    import contextlib
+    import io
+
+    from pagopa_ecommerce_cdc_service_spark.streaming import pipeline
+
+    events = generate_event_log(seed=53, n_transactions=12)
+    log_dir, view_dir = str(tmp_path / "log"), str(tmp_path / "view")
+    _write_chunks(events, log_dir, n_chunks=2)
+
+    plans = []
+    write = pipeline._write_generation
+
+    def capture(rows, *args):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            rows.explain()
+        plans.append(out.getvalue())
+        return write(rows, *args)
+
+    monkeypatch.setattr(pipeline, "_write_generation", capture)
+    q = pipeline.start_view_maintenance(
+        spark, log_dir, view_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1,
+        n_buckets=2,
+    )
+    try:
+        q.processAllAvailable()
+        progress = q.recentProgress
+    finally:
+        q.stop()
+    batches = [p for p in progress if p.numInputRows]
+    assert len(batches) == 2 and len(plans) == 2
+    assert all(not p.stateOperators for p in progress)
+    for plan in plans:
+        assert "InPandas" not in plan and "EvalPython" not in plan, plan
+    _assert_pushes_touched_buckets(plans[1])
+    assert_views_equal(_view_state(spark, view_dir), replay_reference(events))
 
 
 def test_sink_merges_into_a_version_1_view(spark, tmp_path):
@@ -987,7 +929,11 @@ def test_sink_merges_into_a_version_1_view(spark, tmp_path):
     assert _view_state(spark, view_dir) == state(fold(old_events + [first_tx1]))
 
     parquet_upsert_sink(view_dir, n_buckets=4)(
-        fold([e for e in events if e["transactionId"] in tx_ids[:2]]), epoch_id=1
+        _prepared(
+            spark,
+            [e for e in events if e["transactionId"] in tx_ids[:2] and e is not first_tx1],
+        ),
+        epoch_id=1,
     )
     _, payload = current_commit(spark, view_dir)
     assert payload["version"] == 2
@@ -1021,13 +967,10 @@ def test_manifest_retention_enables_time_travel(spark, tmp_path):
     snapshots = {}
     for i, upto in enumerate((6, 12, 18)):
         keys = set(tx_ids[:upto])
-        batch = transactions_view_from_log(
-            spark.createDataFrame(
-                [e for e in events if e["transactionId"] in keys],
-                schema=EVENT_ENVELOPE_TYPE,
-            )
+        sink(
+            _prepared(spark, [e for e in events if e["transactionId"] in keys]),
+            epoch_id=i,
         )
-        sink(batch, epoch_id=i)
         seq, _ = valid_commits(spark, view_dir)[0]
         snapshots[seq] = upto
 
@@ -1038,12 +981,7 @@ def test_manifest_retention_enables_time_travel(spark, tmp_path):
     # a fourth commit expires the oldest retained one
     oldest = min(snapshots)
     sink(
-        transactions_view_from_log(
-            spark.createDataFrame(
-                [e for e in events if e["transactionId"] == tx_ids[0]],
-                schema=EVENT_ENVELOPE_TYPE,
-            )
-        ),
+        _prepared(spark, [e for e in events if e["transactionId"] == tx_ids[0]]),
         epoch_id=3,
     )
     kept = {s for s, _ in valid_commits(spark, view_dir)}
@@ -1057,17 +995,12 @@ def test_manifest_retention_enables_time_travel(spark, tmp_path):
 def test_upsert_sink_soak_many_batches_with_crashes_and_compaction(
     spark, tmp_path
 ):
-    """Soak the sink: 50 micro-batches of per-key view versions interleaved
-    with compaction and two injected crashes (one before the manifest
-    write, one after), each followed by the checkpoint-replay the engine
-    would perform. The final maintained view must equal the batch fold of
+    """Soak the sink: 50 micro-batches of the log's events interleaved with
+    compaction and two injected crashes (one before the manifest write, one
+    after), each followed by the checkpoint-replay the engine would
+    perform. The final maintained view must equal the reference replay of
     the whole log — the long-haul twin of the single-batch kill tests,
-    hardening the commit + GC + recovery interplay.
-
-    Per-batch updates are the reference replay of each key's events seen so
-    far — exactly the rows the stateful fold emits for that micro-batch —
-    so the soak exercises the sink against the true update stream without
-    50 Spark fold jobs."""
+    hardening the fold + commit + GC + recovery interplay."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
         compact_view,
         parquet_upsert_sink,
@@ -1077,9 +1010,6 @@ def test_upsert_sink_soak_many_batches_with_crashes_and_compaction(
     events = sorted(
         generate_event_log(seed=31, n_transactions=60), key=lambda e: e["seq"]
     )
-    view_schema = transactions_view_from_log(
-        spark.createDataFrame(events[:4], schema=EVENT_ENVELOPE_TYPE)
-    ).schema
 
     n_batches = 50
     chunk = (len(events) + n_batches - 1) // n_batches
@@ -1096,18 +1026,11 @@ def test_upsert_sink_soak_many_batches_with_crashes_and_compaction(
         return failpoint
 
     crash_at = {15: "staged", 35: "committed"}
-    seen = 0
     for i in range(n_batches):
         batch_events = events[i * chunk : (i + 1) * chunk]
         if not batch_events:
             continue
-        seen += len(batch_events)
-        touched = {e["transactionId"] for e in batch_events}
-        state = replay_reference(events[:seen])
-        rows = [state[k] for k in sorted(touched) if k in state]
-        if not rows:
-            continue
-        batch_df = spark.createDataFrame(rows, view_schema)
+        batch_df = _prepared(spark, batch_events)
         if i in crash_at:
             with pytest.raises(Kill):
                 parquet_upsert_sink(
@@ -1198,36 +1121,6 @@ def test_stream_stream_join_state_survives_restart(spark, tmp_path):
     }
 
 
-def test_upsert_sink_generic_key_column(spark, tmp_path):
-    """The sink is a generic keyed-upsert component: maintain a documents
-    table keyed by doc_id, update one doc, compact — merge semantics and
-    bucket pruning identical to the transactionId view."""
-    from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
-        compact_view,
-        parquet_upsert_sink,
-        read_view,
-    )
-
-    view_dir = str(tmp_path / "docs_view")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text", "lang"
-    ).limit(40)
-    sink = parquet_upsert_sink(view_dir, n_buckets=4, key_col="doc_id")
-    sink(docs, epoch_id=0)
-    assert read_view(spark, view_dir).count() == 40
-
-    from pyspark.sql import functions as F
-
-    one = docs.orderBy("doc_id").limit(1).withColumn("lang", F.lit("xx"))
-    sink(one, epoch_id=1)
-    merged = read_view(spark, view_dir)
-    assert merged.count() == 40
-    target = one.collect()[0]["doc_id"]
-    assert merged.filter(F.col("doc_id") == target).collect()[0]["lang"] == "xx"
-    assert compact_view(spark, view_dir)
-    assert read_view(spark, view_dir).count() == 40
-
-
 def test_commit_seq_collision_fails_loudly_not_corrupts(spark, tmp_path):
     """Optimistic concurrency for free: the commit is a create-NEW file, so
     two writers racing the same sequence cannot both win — the loser gets
@@ -1245,12 +1138,7 @@ def test_commit_seq_collision_fails_loudly_not_corrupts(spark, tmp_path):
     view_dir = str(tmp_path / "view")
     events = generate_event_log(seed=61, n_transactions=8)
     sink = parquet_upsert_sink(view_dir, n_buckets=2)
-    sink(
-        transactions_view_from_log(
-            spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-        ),
-        epoch_id=0,
-    )
+    sink(_prepared(spark, events), epoch_id=0)
     seq, payload = current_commit(spark, view_dir)
 
     # a zombie writes the NEXT sequence first; the live writer must fail
@@ -1277,9 +1165,7 @@ def test_empty_micro_batch_is_a_no_op_commit(spark, tmp_path):
 
     view_dir = str(tmp_path / "view")
     events = generate_event_log(seed=67, n_transactions=6)
-    batch = transactions_view_from_log(
-        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
-    )
+    batch = _prepared(spark, events)
     sink = parquet_upsert_sink(view_dir, n_buckets=2)
     sink(batch, epoch_id=0)
     before = valid_commits(spark, view_dir)
@@ -1313,9 +1199,7 @@ def test_manifest_gc_with_concurrent_readers(spark, tmp_path):
     )
 
     view_dir = str(tmp_path / "view")
-    sink = parquet_upsert_sink(
-        view_dir, n_buckets=4, retain_commits=3, key_col="k"
-    )
+    sink = parquet_upsert_sink(view_dir, n_buckets=4, retain_commits=3)
 
     counts_by_seq: dict[int, int] = {}
     lock = threading.Lock()
@@ -1369,13 +1253,24 @@ def test_manifest_gc_with_concurrent_readers(spark, tmp_path):
     try:
         keys = 0
         for i in range(25):
-            batch = spark.createDataFrame(
-                [(k, i) for k in range(max(0, keys - 2), keys + 4)], "k bigint, v bigint"
+            batch = _prepared(
+                spark,
+                [
+                    {
+                        "id": f"ev-{i}-{k}",
+                        "transactionId": f"tx-{k}",
+                        "eventCode": "TRANSACTION_ACTIVATED_EVENT",
+                        "creationDate": f"2025-01-01T00:00:{i:02d}.000Z",
+                        "seq": 100 * i + j,
+                        "operationType": "insert",
+                    }
+                    for j, k in enumerate(range(max(0, keys - 2), keys + 4))
+                ],
             )
             keys += 4
             sink(batch, epoch_id=i)
             seq, _ = current_commit(spark, view_dir)
-            # batch i upserts keys [4i-2, 4i+4) → distinct keys = 4(i+1)
+            # batch i folds onto keys [4i-2, 4i+4) → distinct keys = 4(i+1)
             with lock:
                 counts_by_seq[seq] = keys
             if errors:
@@ -1391,19 +1286,14 @@ def test_manifest_gc_with_concurrent_readers(spark, tmp_path):
 def test_bootstrap_initial_state_guards_stale_stream_events(spark, tmp_path):
     """A guarded event arriving AFTER the bootstrap handoff with an event
     time OLDER than the bootstrapped lastProcessedEventAt must not apply —
-    the seeded state must carry the guard across the batch→stream boundary
-    (an unseeded stream would see empty state and wrongly apply it). The
-    final view must equal the reference replay of the WHOLE log."""
-    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import (
-        fold_transactions_view,
-        prepare_events,
-    )
+    the bootstrap rows must carry the guard across the batch→stream
+    boundary (an empty view would wrongly apply it). The final view must
+    equal the reference replay of the WHOLE log."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        drain,
+        parquet_upsert_sink,
         read_event_stream,
-    )
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        incremental_view,
-        seed_stream,
+        stream_transactions_view,
     )
 
     events = sorted(
@@ -1424,86 +1314,61 @@ def test_bootstrap_initial_state_guards_stale_stream_events(spark, tmp_path):
         for e in stream_events
     ), "no stale cross-boundary event in this log; change the seed"
 
-    bootstrap = fold_transactions_view(
-        prepare_events(
-            spark.createDataFrame(batch_events, schema=EVENT_ENVELOPE_TYPE)
-        )
-    )
-    seed_dir = str(tmp_path / "seed")
-    bootstrap.write.parquet(seed_dir)
+    view_dir = str(tmp_path / "view")
+    sink = parquet_upsert_sink(view_dir, n_buckets=4)
+    sink(_prepared(spark, batch_events), epoch_id="bootstrap")
     log_dir = str(tmp_path / "log")
     _write_chunks(stream_events, log_dir, n_chunks=2)
-
-    stream = prepare_events(
-        read_event_stream(spark, log_dir, max_files_per_trigger=1)
-    ).unionByName(seed_stream(spark, seed_dir), allowMissingColumns=True)
-    q = (
-        incremental_view(stream)
-        .writeStream.format("memory")
-        .queryName("bootstrap_guard")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_transactions_view(
+            read_event_stream(spark, log_dir, max_files_per_trigger=1)
+        )
+        .writeStream.foreachBatch(sink)
+        .outputMode("update"),
+        str(tmp_path / "ckpt"),
+        "bootstrap-guard",
     )
-    assert q.awaitTermination(180)
-
-    # the memory sink appends one row per key per micro-batch: keep the
-    # last. Every seeded key has a seed row, so the stream emits every key.
-    streamed = {}
-    for r in spark.table("bootstrap_guard").collect():
-        streamed[r["transactionId"]] = r.asDict(recursive=True)
-    assert_views_equal(streamed, replay_reference(events))
+    assert_views_equal(_view_state(spark, view_dir), replay_reference(events))
 
 
 def test_seed_only_stream_emits_the_batch_view(spark, tmp_path):
-    """Every column of a batch-folded view survives the seed path (parquet
-    → file stream → JSON → the fold's starting view → output row): a
-    handoff whose stream half is empty emits exactly the batch view."""
-    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import (
-        fold_transactions_view,
-        prepare_events,
-    )
+    """Every column of the view survives the bootstrap commit (prepared
+    events → the sink's fold → parquet → read_view): a handoff whose stream
+    half is empty leaves exactly the batch view, ``_poisoned`` null."""
     from pagopa_ecommerce_cdc_service_spark.streaming.pipeline import (
+        drain,
+        parquet_upsert_sink,
         read_event_stream,
-    )
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        incremental_view,
-        seed_stream,
+        stream_transactions_view,
     )
 
     events = generate_event_log(seed=91, n_transactions=16)
-    seed_dir = str(tmp_path / "seed")
-    fold_transactions_view(
-        prepare_events(spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE))
-    ).write.parquet(seed_dir)
+    view_dir = str(tmp_path / "view")
+    sink = parquet_upsert_sink(view_dir, n_buckets=4)
+    sink(_prepared(spark, events), epoch_id="bootstrap")
     log_dir = tmp_path / "log"
     log_dir.mkdir()
-
-    stream = prepare_events(read_event_stream(spark, str(log_dir))).unionByName(
-        seed_stream(spark, seed_dir), allowMissingColumns=True
+    drain(
+        stream_transactions_view(read_event_stream(spark, str(log_dir)))
+        .writeStream.foreachBatch(sink)
+        .outputMode("update"),
+        str(tmp_path / "ckpt"),
+        "seed-only",
     )
-    q = (
-        incremental_view(stream)
-        .writeStream.format("memory")
-        .queryName("seed_only")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
 
-    rows = spark.table("seed_only").collect()
-    streamed = {r["transactionId"]: r.asDict(recursive=True) for r in rows}
-    assert len(streamed) == len(rows)  # one micro-batch: one row per key
+    rows = read_view(spark, view_dir).collect()
     assert all(r["_poisoned"] is None for r in rows)
-    assert_views_equal(streamed, replay_reference(events))
+    batch = transactions_view_from_log(
+        spark.createDataFrame(events, schema=EVENT_ENVELOPE_TYPE)
+    )
+    assert {r["transactionId"]: r.asDict(recursive=True) for r in batch.collect()} == (
+        _view_state(spark, view_dir)
+    )
 
 
 def test_bootstrap_handoff_matches_oracle_from_foreign_cwd(query_from_foreign_cwd):
-    """The Python workers of the stateful fold must import the package from
-    any working directory."""
+    """The bootstrap handoff, from its batch commit to its stream, runs
+    from any working directory."""
     query_from_foreign_cwd("cdc_bootstrap_handoff")
 
 
@@ -1511,133 +1376,6 @@ def test_staged_stream_twin_matches_oracle_from_foreign_cwd(query_from_foreign_c
     """A twin that starts from plans/helpers.staged_stream writes and reads
     its staged files under an absolute workdir, whatever the cwd."""
     query_from_foreign_cwd("w_stream_tumbling_hourly")
-
-
-def test_packed_events_decode_to_the_pandas_records(spark):
-    """The fold's input wire (one JSON string per event, see
-    state_fold._pack_events) decodes to exactly the dict the pandas-frame
-    input gave: Arrow → pandas in a Python worker, ``to_dict("records")``,
-    then NaN → None and numpy → native. Nested notices keep their long
-    amounts, a null ``data`` and a null ``ttl`` stay ``None``, and a seed
-    row packs to a null event. Past 2**53 JSON is exact where pandas was
-    not: a null sibling turned a nested long into a float64."""
-    from pagopa_ecommerce_cdc_service_spark.operators.cdc_fold import prepare_events
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        EVENT_COL,
-        SEED_COL,
-        _pack_events,
-    )
-
-    def envelope(i, code, data):
-        return {
-            "id": f"ev-{i}",
-            "transactionId": "tx-1",
-            "eventCode": code,
-            "creationDate": f"2025-01-01T00:00:0{i}.000Z",
-            "seq": i,
-            "ttl": None,
-            "operationType": "insert",
-            "data": data,
-        }
-
-    notice = {"paymentToken": "tok", "rptId": "rpt", "description": "d"}
-    auth = {"kind": "NPG", "operationResult": "EXECUTED", "outcome": "OK",
-            "paymentEndToEndId": None, "errorCode": "E001"}
-    events = [
-        envelope(1, "TRANSACTION_ACTIVATED_EVENT", {
-            "email": "a@b", "clientId": "IO",
-            "paymentNotices": [dict(notice, amount=12_345_678_901),
-                               dict(notice, amount=None)],
-        }),
-        envelope(2, "TRANSACTION_AUTHORIZATION_COMPLETED_EVENT",
-                 {"rrn": "r", "gatewayAuthData": auth}),
-        envelope(3, "TRANSACTION_USER_CANCELED_EVENT", None),
-        envelope(4, "TRANSACTION_ACTIVATED_EVENT", {
-            "paymentNotices": [dict(notice, amount=2**53 + 1), dict(notice, amount=None)],
-        }),
-    ]
-    prepared = prepare_events(spark.createDataFrame(events, EVENT_ENVELOPE_TYPE))
-
-    def pandas_records(pdfs):
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        def native(v):
-            if isinstance(v, float) and math.isnan(v):
-                return None
-            if isinstance(v, dict):
-                return {k: native(x) for k, x in v.items()}
-            if isinstance(v, (list, tuple, np.ndarray)):
-                return [native(x) for x in v]
-            return v.item() if isinstance(v, np.generic) else v
-
-        for pdf in pdfs:
-            recs = [{k: native(v) for k, v in r.items()} for r in pdf.to_dict("records")]
-            yield pd.DataFrame(
-                {"id": [r["id"] for r in recs], "rec": [json.dumps(r) for r in recs]}
-            )
-
-    expected = {
-        r["id"]: json.loads(r["rec"])
-        for r in prepared.mapInPandas(pandas_records, "id string, rec string").collect()
-    }
-    seed = spark.createDataFrame(
-        [("tx-2", '{"status": "CLOSED"}')], f"transactionId string, {SEED_COL} string"
-    )
-    packed = _pack_events(prepared.unionByName(seed, allowMissingColumns=True)).collect()
-
-    assert [r[SEED_COL] for r in packed if r[EVENT_COL] is None] == ['{"status": "CLOSED"}']
-    got = {}
-    for r in packed:
-        if r[EVENT_COL] is not None:
-            assert r[SEED_COL] is None
-            e = json.loads(r[EVENT_COL])
-            got[e["id"]] = e
-    assert sorted(got) == sorted(expected) == ["ev-1", "ev-2", "ev-3", "ev-4"]
-    for eid in ("ev-1", "ev-2", "ev-3"):
-        assert got[eid] == expected[eid]
-    assert got["ev-1"]["data"]["paymentNotices"][0]["amount"] == 12_345_678_901
-    assert got["ev-3"]["data"] is None and got["ev-3"]["ttl"] is None
-    (exact, _), (rounded, _) = (
-        [n["amount"] for n in rec["data"]["paymentNotices"]]
-        for rec in (got["ev-4"], expected["ev-4"])
-    )
-    assert exact == 2**53 + 1 and rounded == float(2**53)
-
-
-def test_fold_output_survives_the_json_round_trip(spark):
-    """The folds' output wire (one JSON string per key) parses back into the
-    typed columns: a poisoned event's ``_poisoned`` list, the lineage array
-    and the history array come out as the fold built them."""
-    from pagopa_ecommerce_cdc_service_spark.streaming.state_fold import (
-        OUT_COL,
-        STREAM_HISTORY_TYPE,
-        STREAM_LINEAGE_TYPE,
-        STREAM_VIEW_TYPE,
-        _decode_out,
-        fold_state_func,
-        history_state_func,
-        lineage_state_func,
-    )
-    from test_state_fold import FakeGroupState, _activated, _frame
-
-    poison = _activated(2, ts=None)
-    poison["_ts_millis"] = None
-    poison["creationDate"] = "boom"  # parse_millis → ValueError
-    batch = [_activated(1), poison, _activated(3, ts=2_000)]
-    for func, out_type, col in (
-        (fold_state_func, STREAM_VIEW_TYPE, "_poisoned"),
-        (lineage_state_func, STREAM_LINEAGE_TYPE, "lineage"),
-        (history_state_func, STREAM_HISTORY_TYPE, "history"),
-    ):
-        (wire,) = func(("tx-1",), [_frame(batch)], FakeGroupState())
-        built = json.loads(wire.iloc[0][OUT_COL])
-        assert built[col], col
-        (row,) = _decode_out(spark.createDataFrame(wire), out_type).collect()
-        assert row.asDict(recursive=True) == built
-        assert row.__fields__ == out_type.fieldNames()
 
 
 # ---------------------------------------------------------------------------

@@ -60,7 +60,7 @@ RUNTIME_QUERIES = {
     "t_stream_chunk_dedup",         # stages parquet, runs an incremental chunk-dedup stream
     "t_stream_winnow_pairs",        # stages parquet, runs an incremental winnow-fingerprint stream
     "mm_stream_image_near_dup",     # stages media parquet, runs a two-incarnation band-store stream
-    "cdc_bootstrap_handoff",        # batch bootstrap + seeded-state stream on one view
+    "cdc_bootstrap_handoff",        # sink folds the history as its first commit, then a stream
     "q_schema_evolution_merge",     # stages two parquet generations at build
     "w_stream_anomaly_days",        # stages parquet, runs a streaming count grid
     "w_stream_event_transitions",   # stages parquet, runs a stateful-lag stream
